@@ -226,16 +226,21 @@ def stratified_exact_n(
 
 def _overlap(*thunks):
     """Run independent Spark actions from a small driver thread pool
-    (guide §2.6 "overlap independent jobs" — curation_pipeline._overlap's
-    twin for this module): actions are only sequential because driver
-    code calls them sequentially, so two independent eager
-    materializations can share the cluster instead of each paying full
-    scheduler latency back to back. Each thunk computes a frame
-    byte-identical to its sequential form (independent inputs, no shared
-    mutable state); only the wall-clock interleaving changes. Results in
-    thunk order; the first exception propagates."""
+    (guide §2.6 "overlap independent jobs"): Spark's scheduler happily
+    runs several jobs at once inside one application — actions are only
+    sequential because driver code calls them sequentially — so the
+    next action's tasks back-fill executors freed by the current
+    stage's tail instead of each paying full scheduler latency back to
+    back. Each thunk computes a frame byte-identical to its sequential
+    form (independent inputs, no shared mutable state); only the
+    wall-clock interleaving changes. Results in thunk order; the first
+    exception propagates. A single thunk runs on the calling thread.
+    The package's one driver thread pool: every overlap goes through
+    here."""
     from concurrent.futures import ThreadPoolExecutor
 
+    if len(thunks) == 1:
+        return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]

@@ -93,23 +93,6 @@ SEMDEDUP_BLOCK_ABOVE = 40
 SEMDEDUP_NUM_BLOCKS = 4
 
 
-def _overlap(*thunks):
-    """Run independent Spark actions from a small driver thread pool
-    (guide §2.6 "overlap independent jobs"): Spark's scheduler happily
-    runs several jobs at once inside one application — actions are only
-    sequential because driver code calls them sequentially — so the
-    next signal stage's tasks back-fill executors freed by the current
-    stage's tail. Each thunk computes a frame that is byte-identical to
-    its sequential form (independent inputs, no shared mutable state);
-    only the wall-clock interleaving changes. Results in thunk order;
-    the first exception propagates."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        return [f.result() for f in futures]
-
-
 def _stage_row(
     stage: str, prev: DataFrame, keep: DataFrame, id_col: str
 ) -> DataFrame:
@@ -288,7 +271,7 @@ def pipeline_curate_corpus(
         dec_keep,
         dsir_sig,
         assigned_all,
-    ) = _overlap(
+    ) = ce._overlap(
         _sig_quality,
         _sig_repetition,
         _sig_perplexity,

@@ -20,7 +20,13 @@ from parallel_map_reduce_spark.functions.hashing import (
     universal_hash_sql,
     universal_params,
 )
-from parallel_map_reduce_spark.operators import dedup, multimodal, similarity, textstats
+from parallel_map_reduce_spark.operators import (
+    curation_extras,
+    dedup,
+    multimodal,
+    similarity,
+    textstats,
+)
 from parallel_map_reduce_spark.registry import register
 from parallel_map_reduce_spark.sources.tables import load_table
 
@@ -1957,8 +1963,6 @@ def q_semantic_dedup_keep_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # id space). Labels can't cross the offset boundary (components
     # only connect via edges), so the split results are identical to
     # two separate runs at half the loop cost.
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     emb = load_table(spark, sf_dir, "embeddings")
 
@@ -1985,11 +1989,7 @@ def q_semantic_dedup_keep_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = pool.submit(_exact_edges)
-        f_ann = pool.submit(_ann_edges)
-        exact_edges = f_exact.result()
-        ann_edges = f_ann.result()
+    exact_edges, ann_edges = curation_extras._overlap(_exact_edges, _ann_edges)
     off = F.lit(1 << 40)
     joint = exact_edges.unionByName(
         ann_edges.select(

@@ -10,6 +10,11 @@ Two tiers:
   buckets; only same-bucket candidates get exact scoring. Recall is
   tunable via number of tables/hyperplanes (tested vs brute force).
 
+The IVF / PQ / OPQ / IVFADC / SQ8 / IVF×SQ family shares one store path
+(build, append, query, range, compact) and one scorer per encoder; the
+persisted layouts and their contracts are tabled in README.md, "ANN
+stores".
+
 Similarities are rounded BEFORE ranking so that cross-engine ulp noise
 cannot reorder the top-k; ties break on vec_id.
 """
@@ -17,6 +22,7 @@ cannot reorder the top-k; ties break on vec_id.
 from __future__ import annotations
 
 import glob
+import math
 import os
 import shutil
 
@@ -25,12 +31,79 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from parallel_map_reduce_spark.functions.hashing import hash64
 from parallel_map_reduce_spark.functions.vectors import (
     cosine,
     dot,
     to_double_array,
 )
+from parallel_map_reduce_spark.operators.curation_extras import (
+    _overlap,
+    _recover_store_slices_locked,
+    recover_store_slices,
+    store_lock,
+)
+from parallel_map_reduce_spark.operators.dedup import connected_components
+
+
+def _vectors(
+    embeddings: DataFrame, id_col: str, vec_col: str, *extra
+) -> DataFrame:
+    """(id, vec, *extra) with ``vec`` as array<double>: the frame every
+    operator here scores."""
+    return embeddings.select(
+        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec"), *extra
+    )
+
+
+def _queries(
+    src: DataFrame, query_ids: list[int], id_col: str, *extra
+) -> DataFrame:
+    """(query_id, qvec, *extra): the query rows of ``src``."""
+    return src.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col("vec").alias("qvec"), *extra
+    )
+
+
+def _pairs(
+    cand: DataFrame, queries: DataFrame, id_col: str, probe_cids=None
+) -> DataFrame:
+    """Candidate × query pairs, self-pairs dropped. The query side always
+    broadcasts, so the corpus never shuffles: a cross join for flat
+    search, or, given IVF's ``probe_cids`` UDF, an equality join on each
+    query's probed cells — on a cid-partitioned store that join prunes
+    the scan to the probed ``cid=N`` directories."""
+    if probe_cids is None:
+        joined = cand.crossJoin(F.broadcast(queries))
+    else:
+        probes = queries.withColumn(
+            "cid", F.explode(probe_cids(F.col("qvec")))
+        )
+        joined = cand.join(F.broadcast(probes), "cid")
+    return joined.filter(F.col(id_col) != F.col("query_id"))
+
+
+def _cosine_scored(
+    cand: DataFrame, queries: DataFrame, id_col: str, probe_cids=None
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine_sim): exact cosine over _pairs,
+    computed by the JVM fold and rounded before any ranking."""
+    return _pairs(cand, queries, id_col, probe_cids).select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine_sim"),
+    )
+
+
+def _topk(scored: DataFrame, k: int, sim_col: str = "cosine_sim") -> DataFrame:
+    """Each query's ``k`` best rows by (``sim_col`` DESC, neighbor_id ASC)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(sim_col).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
 
 
 def knn_bruteforce(
@@ -48,30 +121,9 @@ def knn_bruteforce(
     """
     if query_ids is None:
         query_ids = list(range(10))
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    queries = base.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("vec").alias("qvec")
-    )
-    sim = F.round(cosine(F.col("qvec"), F.col("vec")), 6)
-    scored = (
-        base.crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            sim.alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    base = _vectors(embeddings, id_col, vec_col)
+    scored = _cosine_scored(base, _queries(base, query_ids, id_col), id_col)
+    return _topk(scored, k)
 
 
 def knn_bruteforce_filtered(
@@ -92,33 +144,10 @@ def knn_bruteforce_filtered(
     knn_bruteforce: broadcast query side, corpus never shuffled."""
     if query_ids is None:
         query_ids = list(range(10))
-    base = embeddings.select(
-        F.col(id_col),
-        to_double_array(F.col(vec_col)).alias("vec"),
-        where.alias("_match"),
-    )
-    queries = base.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("vec").alias("qvec")
-    )
-    sim = F.round(cosine(F.col("qvec"), F.col("vec")), 6)
-    scored = (
-        base.filter(F.col("_match"))
-        .crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            sim.alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    base = _vectors(embeddings, id_col, vec_col, where.alias("_match"))
+    queries = _queries(base, query_ids, id_col)
+    scored = _cosine_scored(base.filter(F.col("_match")), queries, id_col)
+    return _topk(scored, k)
 
 
 def _hyperplane(dim: int, plane_idx: int) -> list[float]:
@@ -200,16 +229,9 @@ def lsh_bucket_ann(
     """
     if query_ids is None:
         query_ids = list(range(10))
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
+    base = _vectors(embeddings, id_col, vec_col)
     bucketed = _lsh_bucketed(base, id_col, num_planes, num_tables, dim)
-    queries = bucketed.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("tbl"),
-        F.col("bucket"),
-    )
+    queries = _queries(bucketed, query_ids, id_col, F.col("tbl"), F.col("bucket"))
     sim = F.round(cosine(F.col("qvec"), F.col("vec")), 6)
     scored = (
         bucketed.join(F.broadcast(queries), ["tbl", "bucket"])
@@ -222,14 +244,7 @@ def lsh_bucket_ann(
             sim.alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _topk(scored, k)
 
 
 def embedding_near_dup_pairs(
@@ -244,9 +259,7 @@ def embedding_near_dup_pairs(
     ``embedding_near_dup_lsh`` below, which buckets first and runs this
     cosine kernel only within buckets — use THAT at scale.
     """
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
+    base = _vectors(embeddings, id_col, vec_col)
     a = base.select(F.col(id_col).alias("id_a"), F.col("vec").alias("vec_a"))
     b = base.select(F.col(id_col).alias("id_b"), F.col("vec").alias("vec_b"))
     sim = F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6)
@@ -294,9 +307,7 @@ def embedding_near_dup_lsh(
     is the memory unit: n_planes bounds it (more planes → smaller
     buckets), the knob to turn before 100 TB.
     """
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
+    base = _vectors(embeddings, id_col, vec_col)
     bucketed = _lsh_bucketed(base, id_col, num_planes, num_tables, dim)
 
     def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -361,9 +372,9 @@ def embedding_all_pairs_blocked(
     # pmod, not %: Spark's % keeps the dividend's sign, so a negative id
     # would land in a negative residue class that matches no (bi, bj)
     # group and silently vanish from the "exact" output.
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    ).withColumn("blk", F.pmod(F.col(id_col), F.lit(num_blocks)).cast("int"))
+    base = _vectors(embeddings, id_col, vec_col).withColumn(
+        "blk", F.pmod(F.col(id_col), F.lit(num_blocks)).cast("int")
+    )
     pairs = [(i, j) for i in range(num_blocks) for j in range(i, num_blocks)]
     spark = embeddings.sparkSession
     block_pairs = spark.createDataFrame(pairs, "bi int, bj int")
@@ -439,19 +450,25 @@ def _read_store_rows(path: str) -> list[dict]:
     return table.to_pylist()
 
 
-def _write_store_rows(path: str, rows: list[dict], schema) -> None:
+def _write_store_rows(path: str, rows: list[dict]) -> None:
     """Driver-side overwrite of a DRIVER-SIZED store artifact as one
     parquet file — the write twin of _read_store_rows (r13, guide
     §1.2): the k-row centroid table / 1-row model previously went
     driver → JVM → coalesce(1) task → commit protocol, a full Spark
-    write job to persist a few KB that the driver already holds.
-    Store layout and reader-visible schema are unchanged (int32 ids,
-    float64 arrays — the exact types the Spark writer produced), so
-    spark.read.parquet on these dirs still works where tests use it.
-    ``schema`` is a pyarrow schema."""
+    write job to persist a few KB that the driver already holds. The
+    schema follows the first row: int fields are int32, every other
+    field (arrays, or a NULL rotation) list<double> — the exact types
+    the Spark writer produced, so spark.read.parquet on these dirs
+    still works where tests use it."""
     import pyarrow as pa
     import pyarrow.parquet as papq
 
+    schema = pa.schema(
+        [
+            (key, pa.int32() if isinstance(v, int) else pa.list_(pa.float64()))
+            for key, v in rows[0].items()
+        ]
+    )
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
     papq.write_table(
@@ -460,75 +477,51 @@ def _write_store_rows(path: str, rows: list[dict], schema) -> None:
     )
 
 
-def _centroids_pa_schema():
-    import pyarrow as pa
+def _pq_model(
+    m: int, codes: int, cb: np.ndarray, rot: np.ndarray | None = None
+) -> dict:
+    """The PQ/OPQ model row of an (m, codes, sub_dim) codebook and an
+    optional rotation — the row ``<path>/model`` persists."""
+    return {
+        "m": int(m),
+        "codes": int(codes),
+        "sub_dim": int(cb.shape[2]),
+        "codebook": [float(x) for x in cb.ravel()],
+        "rotation": None if rot is None else [float(x) for x in rot.ravel()],
+    }
 
-    return pa.schema(
-        [("cid", pa.int32()), ("center", pa.list_(pa.float64()))]
+
+def _pq_arrays(model: dict) -> tuple[np.ndarray, np.ndarray | None]:
+    """(codebook, rotation-or-None) back from a PQ model row."""
+    m, codes, sub_dim = model["m"], model["codes"], model["sub_dim"]
+    cb = np.array(model["codebook"]).reshape(m, codes, sub_dim)
+    if model["rotation"] is None:
+        return cb, None
+    return cb, np.array(model["rotation"]).reshape(m * sub_dim, m * sub_dim)
+
+
+def _sq_model(vmin: np.ndarray, vmax: np.ndarray) -> dict:
+    """The SQ8 model row (dim, vmin, scale) of a trained (min, max). The
+    zero-scale guard lives here, once: a constant dimension codes to 0
+    and decodes to its single value."""
+    scale = (vmax - vmin) / 255.0
+    scale[scale == 0.0] = 1.0
+    return {
+        "dim": int(len(vmin)),
+        "vmin": [float(v) for v in vmin],
+        "scale": [float(s) for s in scale],
+    }
+
+
+def _sq_literals(model: dict):
+    """(mins, scales) literal-array columns of an SQ8 model row: the
+    model rides into the plan as 2·dim literals, never a join. Built
+    from the exact doubles the row stores, so a stored read scores
+    bit-identically to the in-memory form."""
+    return (
+        F.array(*[F.lit(v) for v in model["vmin"]]),
+        F.array(*[F.lit(s) for s in model["scale"]]),
     )
-
-
-def _write_centroids(path: str, centers: list[list[float]]) -> None:
-    _write_store_rows(
-        f"{path}/centroids",
-        [{"cid": i, "center": c} for i, c in enumerate(centers)],
-        _centroids_pa_schema(),
-    )
-
-
-def _read_centroid_matrix(path: str) -> np.ndarray:
-    """The (k, dim) centroid matrix from a stored index, cid-ordered —
-    the shape every reader/appender rebuilt from its sorted collect."""
-    crows = sorted(_read_store_rows(f"{path}/centroids"), key=lambda r: r["cid"])
-    return np.array([r["center"] for r in crows])
-
-
-def _pq_model_pa_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("m", pa.int32()),
-            ("codes", pa.int32()),
-            ("sub_dim", pa.int32()),
-            ("codebook", pa.list_(pa.float64())),
-            ("rotation", pa.list_(pa.float64())),
-        ]
-    )
-
-
-def _write_pq_model(
-    path: str, m: int, codes: int, cb: np.ndarray, rot: np.ndarray | None
-) -> None:
-    _write_store_rows(
-        f"{path}/model",
-        [
-            {
-                "m": int(m),
-                "codes": int(codes),
-                "sub_dim": int(cb.shape[2]),
-                "codebook": [float(x) for x in cb.ravel()],
-                "rotation": (
-                    [float(x) for x in rot.ravel()] if rot is not None else None
-                ),
-            }
-        ],
-        _pq_model_pa_schema(),
-    )
-
-
-def _read_pq_model(path: str) -> tuple[np.ndarray, np.ndarray | None]:
-    """(codebook, rotation-or-None) from a stored PQ/OPQ/IVFADC model
-    row — the reshape every reader/appender performed on its collect."""
-    mrow = _read_store_rows(f"{path}/model")[0]
-    m, codes, sub_dim = mrow["m"], mrow["codes"], mrow["sub_dim"]
-    cb = np.array(mrow["codebook"]).reshape(m, codes, sub_dim)
-    rot = (
-        np.array(mrow["rotation"]).reshape(m * sub_dim, m * sub_dim)
-        if mrow["rotation"] is not None
-        else None
-    )
-    return cb, rot
 
 
 def _cap_train_set(
@@ -587,32 +580,11 @@ def ivf_ann(
     cid once (write-time clustering) makes every probe partition-local,
     the on-disk layout FAISS calls the inverted file.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     if query_ids is None:
         query_ids = list(range(10))
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    train = _cap_train_set(base, F.col("vec"), train_cap).select(
-        array_to_vector(F.col("vec")).alias("features")
-    )
-    model = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-
-    cmat = np.array(centers)  # k x dim
-    nearest_cid, probe_cids = _ivf_udfs(cmat, nprobe)
-    assigned = base.withColumn("cid", nearest_cid(F.col("vec")))
-    probes = (
-        assigned.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.explode(probe_cids(F.col("vec"))).alias("cid"),
-        )
-    )
-    return _ivf_score_probes(assigned, probes, k, id_col)
+    base = _vectors(embeddings, id_col, vec_col)
+    cmat = _fit_coarse(base, num_centroids, max_iter, train_cap)
+    return _ann(embeddings, None, query_ids, k, None, id_col, vec_col, cmat, nprobe)
 
 
 def range_search_exact(
@@ -628,21 +600,9 @@ def range_search_exact(
     The query side broadcasts; the corpus streams through the JVM
     cosine fold and the radius filter — never shuffles, no window, no
     sort: strictly cheaper than top-k at the same selectivity."""
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    q = base.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("vec").alias("qvec")
-    )
-    sim = F.round(cosine(F.col("qvec"), F.col("vec")), 6)
-    return (
-        base.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("cosine_sim")
-        )
-        .filter(F.col("cosine_sim") >= radius)
-    )
+    base = _vectors(embeddings, id_col, vec_col)
+    scored = _cosine_scored(base, _queries(base, query_ids, id_col), id_col)
+    return scored.filter(F.col("cosine_sim") >= radius)
 
 
 def ivf_range_search(
@@ -670,32 +630,11 @@ def ivf_range_search(
     quantizer training (train_cap), one narrow cell-assignment
     projection, broadcast probe join on cid, no corpus shuffle, and no
     top-k window at all (the radius filter replaces it map-side)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    train = _cap_train_set(base, F.col("vec"), train_cap).select(
-        array_to_vector(F.col("vec")).alias("features")
-    )
-    model = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
-    cmat = np.array([list(map(float, c)) for c in model.clusterCenters()])
-    nearest_cid, probe_cids = _ivf_udfs(cmat, nprobe)
-    assigned = base.withColumn("cid", nearest_cid(F.col("vec")))
-    probes = assigned.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.explode(probe_cids(F.col("vec"))).alias("cid"),
-    )
-    sim = F.round(cosine(F.col("qvec"), F.col("vec")), 6)
-    return (
-        assigned.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("cosine_sim")
-        )
-        .filter(F.col("cosine_sim") >= radius)
+    base = _vectors(embeddings, id_col, vec_col)
+    cmat = _fit_coarse(base, num_centroids, max_iter, train_cap)
+    return _ann(
+        embeddings, None, query_ids, None, None, id_col, vec_col, cmat, nprobe,
+        radius=radius,
     )
 
 
@@ -727,28 +666,405 @@ def _ivf_udfs(cmat: np.ndarray, nprobe: int):
     return nearest_cid, probe_cids
 
 
-def _ivf_score_probes(
-    assigned: DataFrame, probes: DataFrame, k: int, id_col: str
+def _fit_coarse(
+    base: DataFrame,
+    num_centroids: int,
+    max_iter: int,
+    train_cap: int | None,
+    n: int | None = None,
+) -> np.ndarray:
+    """The IVF coarse quantizer: KMeans with a fixed seed (deterministic
+    on the same data) over the bounded training sample (``train_cap``,
+    see _cap_train_set; ``n`` skips its count). Returns the
+    (num_centroids, dim) centroid matrix — a few KB that ships inside
+    the assignment and probe UDFs' closures."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    train = _cap_train_set(base, F.col("vec"), train_cap, n=n).select(
+        array_to_vector(F.col("vec")).alias("features")
+    )
+    model = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
+    return np.array([list(map(float, c)) for c in model.clusterCenters()])
+
+
+# ---------------------------------------------------------------------------
+# Persisted ANN stores — one path for every layout (README.md, "ANN
+# stores"): the coarse quantizer is none or IVF, the encoder is flat (raw
+# vectors), PQ (optionally OPQ-rotated) or SQ8, and a reader infers the
+# layout from disk: a ``centroids`` dir means IVF, and the ``model`` row
+# holds ``codebook`` for PQ or ``vmin`` for SQ8.
+# ---------------------------------------------------------------------------
+
+
+def _table(path: str, coarse: bool) -> str:
+    """A store's row table: ``invfile`` (partitioned by cid) under a
+    coarse quantizer, ``codes`` otherwise."""
+    return f"{path}/invfile" if coarse else f"{path}/codes"
+
+
+def _load_store(path: str) -> tuple[np.ndarray | None, dict | None]:
+    """Entry of every stored reader and appender: heal a crashed
+    compaction, then read the sidecars driver-side — the cid-ordered
+    centroid matrix and the model row, each None when absent."""
+    recover_store_slices(path)
+    cmat = model = None
+    if os.path.isdir(f"{path}/centroids"):
+        rows = sorted(_read_store_rows(f"{path}/centroids"), key=lambda r: r["cid"])
+        cmat = np.array([r["center"] for r in rows])
+    if os.path.isdir(f"{path}/model"):
+        model = _read_store_rows(f"{path}/model")[0]
+    return cmat, model
+
+
+def _encoded(
+    base: DataFrame, cmat, model, id_col: str, meta_cols=()
 ) -> DataFrame:
-    """Shared back half of both IVF forms: equality-join the (tiny,
-    broadcast) exploded probe list against the cell-assigned corpus,
-    score with the JVM cosine fold, keep the per-query top-k."""
-    sim = F.round(cosine(F.col("qvec"), F.col("vec")), 6)
-    scored = (
-        assigned.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
+    """The store-row projection of an (id, vec, *meta_cols) frame: the
+    raw vector and metadata without a model, else the true norm and the
+    PQ or SQ8 code; plus the nearest cell's ``cid`` under a coarse
+    quantizer. The corpus crosses Python at most once (Arrow-batched
+    cell assignment and PQ encode); SQ8 codes are JVM zip_with folds."""
+    if model is None:
+        cols = [F.col("vec"), *meta_cols]
+    elif "codebook" in model:
+        encode, _ = _pq_udfs(*_pq_arrays(model))
+        cols = [_vec_norm().alias("norm"), encode(F.col("vec")).alias("code")]
+    else:
+        code = _sq_encode_expr(F.col("vec"), *_sq_literals(model))
+        cols = [_vec_norm().alias("norm"), code.alias("code")]
+    if cmat is not None:
+        nearest_cid, _ = _ivf_udfs(cmat, 1)
+        cols.append(nearest_cid(F.col("vec")).alias("cid"))
+    return base.select(id_col, *cols)
+
+
+def _write_store(
+    base: DataFrame, path: str, mode: str, cmat, model, id_col: str, meta_cols=()
+) -> None:
+    """Encode and write rows — the one writer for build and append."""
+    writer = _encoded(base, cmat, model, id_col, meta_cols).write.mode(mode)
+    if cmat is not None:
+        writer = writer.partitionBy("cid")
+    writer.parquet(_table(path, cmat is not None))
+
+
+def _fit_pq(
+    embeddings: DataFrame,
+    vec_col: str,
+    m: int,
+    codes: int,
+    shared: bool,
+    rotation: bool,
+    n_iter: int,
+    train_cap: int | None,
+    n: int | None = None,
+    dim: int | None = None,
+) -> dict:
+    """A trained PQ model row: OPQ's rotation and per-subspace codebooks
+    with ``rotation``, else pq_train_codebooks'."""
+    if rotation:
+        rot, cb = opq_train(
+            embeddings,
+            m=m,
+            codes=codes,
+            n_iter=n_iter,
+            vec_col=vec_col,
+            train_cap=train_cap,
+            n=n,
+        )
+    else:
+        rot, cb = None, pq_train_codebooks(
+            embeddings,
+            m=m,
+            codes=codes,
+            shared=shared,
+            vec_col=vec_col,
+            train_cap=train_cap,
+            n=n,
+            dim=dim,
+        )
+    return _pq_model(m, codes, cb, rot)
+
+
+def _build_store(
+    embeddings: DataFrame,
+    path: str,
+    id_col: str,
+    vec_col: str,
+    coarse: tuple | None = None,
+    pq: dict | None = None,
+    sq: bool = False,
+    meta_cols: tuple[str, ...] = (),
+) -> None:
+    """Train, persist the sidecars, write the rows. ``coarse`` is
+    (num_centroids, max_iter, train_cap) for an IVF store, ``pq`` holds
+    _fit_pq's keyword arguments, ``sq`` trains SQ8.
+
+    The coarse and encoder fits are independent given the sample, so
+    they run concurrently from driver threads (r13, guide §2.6): one
+    fit's jobs back-fill the other's executor tail. Each fit sees the
+    frame it would see alone, so the models are bit-identical to the
+    sequential form's."""
+    base = _vectors(embeddings, id_col, vec_col, *meta_cols)
+    n = dim = None
+    if coarse and pq:
+        # Both fits need the row count and PQ the dim: one probe job
+        # replaces the count each cap filter would pay (r13).
+        probe = base.agg(
+            F.count(F.lit(1)).alias("n"), F.first(F.size("vec")).alias("d")
+        ).first()
+        n, dim = probe["n"], probe["d"]
+    fits = []
+    if coarse:
+        fits.append(lambda: _fit_coarse(base, *coarse, n=n))
+    if pq:
+        fits.append(lambda: _fit_pq(embeddings, vec_col, n=n, dim=dim, **pq))
+    if sq:
+        fits.append(lambda: _sq_model(*sq_train(embeddings, vec_col=vec_col)))
+    trained = _overlap(*fits)
+    cmat = trained.pop(0) if coarse else None
+    model = trained[0] if trained else None
+    sidecars = {
+        "centroids": None if cmat is None else [
+            {"cid": i, "center": [float(x) for x in c]} for i, c in enumerate(cmat)
+        ],
+        "model": None if model is None else [model],
+    }
+    # Sidecars are driver-sized: written driver-side, no Spark job.
+    # Readers infer the layout from which sidecars exist, so a rebuild
+    # over another layout must not leave a stale one behind.
+    for name, rows in sidecars.items():
+        if rows is None:
+            shutil.rmtree(f"{path}/{name}", ignore_errors=True)
+        else:
+            _write_store_rows(f"{path}/{name}", rows)
+    _write_store(base, path, "overwrite", cmat, model, id_col, meta_cols)
+
+
+def _append_store(
+    embeddings: DataFrame,
+    path: str,
+    id_col: str,
+    vec_col: str,
+    meta_cols: tuple[str, ...] = (),
+) -> None:
+    """Add-after-train: encode a batch under the STORED quantizers and
+    append it; no existing file is read or rewritten."""
+    cmat, model = _load_store(path)
+    base = _vectors(embeddings, id_col, vec_col, *meta_cols)
+    _write_store(base, path, "append", cmat, model, id_col, meta_cols)
+
+
+def _search(
+    table: DataFrame,
+    base: DataFrame | None,
+    model: dict | None,
+    query_ids: list[int],
+    k: int | None,
+    rerank_factor: int | None,
+    id_col: str,
+    probe_cids=None,
+    where: Column | None = None,
+    radius: float | None = None,
+) -> DataFrame:
+    """Top-k — or, given ``radius``, range — answers over store rows
+    ``table`` (_encoded's projection, persisted or not): the one scorer
+    per encoder that the in-memory and stored forms share. IVF's probe
+    join applies when ``probe_cids`` is given (see _pairs).
+
+    - flat: exact cosine against the stored vectors; queries come from
+      ``table`` itself, and ``where`` filters the candidates only.
+    - PQ: asymmetric distance — the broadcast (query, sub, code, partial)
+      table joins the exploded codes and sums map-side to one approximate
+      cosine per (query, vector) over the vector's TRUE stored norm.
+    - SQ8: the exact query dotted with the affine-decoded bytes, JVM-only.
+
+    The approximate encoders keep a k·rerank_factor shortlist and
+    re-rank it exactly on true vectors from the primary table ``base``.
+    SQ8 range search is a filter-verify (ivfsq_range_query_stored)."""
+    if model is None:
+        cand = table if where is None else table.filter(where)
+        queries = _queries(table, query_ids, id_col)
+        scored = _cosine_scored(cand, queries, id_col, probe_cids)
+        if radius is None:
+            return _topk(scored, k)
+        return scored.filter(F.col("cosine_sim") >= radius)
+    if "codebook" in model:
+        _, adc_partials = _pq_udfs(*_pq_arrays(model))
+        lead = []
+        if probe_cids is not None:
+            probes = _queries(base, query_ids, id_col).select(
+                "query_id", F.explode(probe_cids(F.col("qvec"))).alias("cid")
+            )
+            table = table.join(F.broadcast(probes), "cid")
+            lead = ["query_id"]
+        exploded = table.select(
+            *lead, id_col, "norm", F.posexplode("code").alias("sub", "code")
+        )
+        adc = _pq_adc_table(base, query_ids, adc_partials, id_col)
+        scored = (
+            exploded.join(F.broadcast(adc), [*lead, "sub", "code"])
+            .filter(F.col(id_col) != F.col("query_id"))
+            .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
+            .agg(
+                F.round(
+                    F.sum("part") / (F.first("norm") * F.first("qnorm")), 6
+                ).alias("approx_sim")
+            )
+        )
+    else:
+        mins, scales = _sq_literals(model)
+        enc = table.select(
+            id_col,
+            "norm",
+            _sq_decode_expr(F.col("code"), mins, scales).alias("deq"),
+            *([] if probe_cids is None else ["cid"]),
+        )
+        queries = _queries(base, query_ids, id_col, _vec_norm().alias("qnorm"))
+        pairs = _pairs(enc, queries, id_col, probe_cids)
+        approx = dot(F.col("qvec"), F.col("deq")) / (
+            F.col("qnorm") * F.col("norm")
+        )
+        if radius is not None:
+            # Prefilter below the radius by the provable error bound
+            # (ivfsq_range_query_stored), then verify on true vectors.
+            c_bound = float(np.sqrt(((np.array(model["scale"]) / 2.0) ** 2).sum()))
+            cand = pairs.filter(
+                approx >= radius - F.lit(c_bound) / F.col("norm") - F.lit(1e-6)
+            ).select("query_id", "qvec", F.col(id_col).alias("neighbor_id"))
+            verified = cand.join(
+                base.select(F.col(id_col).alias("neighbor_id"), F.col("vec")),
+                "neighbor_id",
+            ).select(
+                "query_id",
+                "neighbor_id",
+                F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine_sim"),
+            )
+            return verified.filter(F.col("cosine_sim") >= radius)
+        scored = pairs.select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            F.round(approx, 6).alias("approx_sim"),
+        )
+    shortlist = _topk(scored, k * rerank_factor, "approx_sim").select(
+        "query_id", "neighbor_id"
+    )
+    return _exact_refine_topk(base, shortlist, query_ids, k, id_col)
+
+
+def _exact_refine_topk(
+    base: DataFrame,
+    shortlist: DataFrame,
+    query_ids: list[int],
+    k: int,
+    id_col: str,
+) -> DataFrame:
+    """FAISS-refine: fetch true vectors for the shortlist only (both
+    join sides broadcast — |Q| and |Q|·k·rerank_factor rows), re-score
+    with the JVM cosine fold, rank on the exact similarity."""
+    refined = (
+        base.join(
+            F.broadcast(shortlist),
+            base[id_col] == shortlist["neighbor_id"],
+        )
+        .join(F.broadcast(_queries(base, query_ids, id_col)), "query_id")
         .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("cosine_sim")
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
+    return _topk(refined, k)
+
+
+def _ann(
+    embeddings: DataFrame,
+    model: dict | None,
+    query_ids: list[int],
+    k: int | None,
+    rerank_factor: int | None,
+    id_col: str,
+    vec_col: str,
+    cmat: np.ndarray | None = None,
+    nprobe: int | None = None,
+    radius: float | None = None,
+) -> DataFrame:
+    """The in-memory twin of a stored query: encode the corpus exactly as
+    the store's writer would (_encoded), then score it with the same
+    _search — persisting changes the I/O shape, never an answer."""
+    base = _vectors(embeddings, id_col, vec_col)
+    table = _encoded(base, cmat, model, id_col)
+    probe_cids = None if cmat is None else _ivf_udfs(cmat, nprobe)[1]
+    return _search(
+        table, base, model, query_ids, k, rerank_factor, id_col, probe_cids,
+        radius=radius,
     )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+
+
+def _query_store(
+    spark,
+    path: str,
+    embeddings: DataFrame | None,
+    query_ids: list[int],
+    k: int | None = None,
+    nprobe: int = 4,
+    rerank_factor: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    where: Column | None = None,
+    radius: float | None = None,
+) -> DataFrame:
+    """Answer from a persisted store: one load (recovery + sidecars),
+    then _search over the stored rows. ``embeddings`` is the primary
+    table the approximate encoders refine against (None for the flat
+    IVF store, which holds its own vectors)."""
+    cmat, model = _load_store(path)
+    table = spark.read.parquet(_table(path, cmat is not None))
+    base = None if embeddings is None else _vectors(embeddings, id_col, vec_col)
+    probe_cids = None if cmat is None else _ivf_udfs(cmat, nprobe)[1]
+    return _search(
+        table, base, model, query_ids, k, rerank_factor, id_col, probe_cids,
+        where, radius,
     )
+
+
+def _compact_store(
+    spark, path: str, lock_timeout: float, target_bytes: int = 128 << 20
+) -> tuple[int, int]:
+    """Fold the files appends accumulate, returning (files_before,
+    files_after): an inverted file to one file per non-empty cell, a
+    flat ``codes`` table to ceil(total_bytes / target_bytes) files. Rows
+    are copied unchanged — no retrain, no re-encode — so answers are
+    identical before and after.
+
+    Crash safety is the store-compaction state machine of
+    curation_extras.recover_store_slices: the rewrite lands in
+    ``_compact``, the live table is renamed to ``_old_<name>``,
+    ``_compact`` is promoted, and only then is the old generation
+    deleted. The whole section holds store_lock, so a reader or appender
+    entering mid-fold waits at its recovery (``lock_timeout`` bounds
+    that wait on a wedged holder)."""
+    with store_lock(path, timeout=lock_timeout):
+        _recover_store_slices_locked(path)
+        coarse = os.path.isdir(f"{path}/centroids")
+        live = _table(path, coarse)
+        tmp, old = f"{path}/_compact", f"{path}/_old_{os.path.basename(live)}"
+        files = f"{live}/cid=*/*.parquet" if coarse else f"{live}/*.parquet"
+        before = glob.glob(files)
+        rows = spark.read.parquet(live)
+        if coarse:
+            # repartition BY cid: each cell's rows land in one task, so
+            # the partitionBy write emits one file per non-empty cell.
+            rows.repartition("cid").write.partitionBy("cid").parquet(tmp)
+        else:
+            total = sum(os.path.getsize(f) for f in before)
+            nparts = max(1, math.ceil(total / target_bytes))
+            rows.repartition(nparts).write.parquet(tmp)
+        os.replace(live, old)
+        os.replace(tmp, live)
+        shutil.rmtree(old, ignore_errors=True)
+        return len(before), len(glob.glob(files))
 
 
 def ivf_build_index(
@@ -762,11 +1078,11 @@ def ivf_build_index(
     meta_cols: tuple[str, ...] = (),
 ) -> None:
     """Phase 1 of the two-phase IVF: train the coarse quantizer and
-    PERSIST the index — ``<path>/centroids`` holds the k (cid, center)
-    rows, ``<path>/invfile`` the corpus partitioned BY cid (Hive-style
-    ``cid=N`` directories): the on-disk layout FAISS calls the inverted
-    file. This is the nightly index job of a production ANN service;
-    query jobs (ivf_query_stored) read the store and never retrain.
+    persist the IVF store (layout: README.md, "ANN stores") — the
+    corpus partitioned BY cid, the on-disk layout FAISS calls the
+    inverted file. This is the nightly index job of a production ANN
+    service; query jobs (ivf_query_stored) read the store and never
+    retrain.
 
     ``meta_cols`` names metadata columns of the input to persist
     ALONGSIDE each vector in the inverted file (e.g. ``("label",)``) —
@@ -778,31 +1094,18 @@ def ivf_build_index(
 
     Scale posture: the quantizer trains on a bounded deterministic
     sample (``train_cap``, see _cap_train_set); assignment is one
-    narrow projection; the
-    partitionBy(cid) write clusters each cell's vectors contiguously so
-    a probe of p cells reads exactly p partition directories —
-    partition PRUNING, not a filter scan.
+    narrow projection; the partitionBy(cid) write clusters each cell's
+    vectors contiguously so a probe of p cells reads exactly p
+    partition directories — partition PRUNING, not a filter scan.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = embeddings.select(
-        F.col(id_col),
-        to_double_array(F.col(vec_col)).alias("vec"),
-        *meta_cols,
+    _build_store(
+        embeddings,
+        path,
+        id_col,
+        vec_col,
+        coarse=(num_centroids, max_iter, train_cap),
+        meta_cols=meta_cols,
     )
-    train = _cap_train_set(base, F.col("vec"), train_cap).select(
-        array_to_vector(F.col("vec")).alias("features")
-    )
-    model = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-    # r13: the k-row centroid table is driver-sized — persist it
-    # driver-side instead of paying a Spark write job (guide §1.2).
-    _write_centroids(path, centers)
-    nearest_cid, _ = _ivf_udfs(np.array(centers), 1)
-    base.withColumn("cid", nearest_cid(F.col("vec"))).write.mode(
-        "overwrite"
-    ).partitionBy("cid").parquet(f"{path}/invfile")
 
 
 def ivf_query_stored(
@@ -815,19 +1118,14 @@ def ivf_query_stored(
     where: Column | None = None,
 ) -> DataFrame:
     """Phase 2 of the two-phase IVF: answer top-k from the PERSISTED
-    index — centroids load as a k-row table (driver-side, a few KB),
-    probe selection runs the same Arrow-batched distance UDF as the
-    self-contained form, and the corpus side reads ONLY the probed
-    ``cid=N`` partitions of the inverted file (the cid equality join's
-    filter prunes at the parquet-partition level). Output is identical
-    to ivf_ann at the same parameters on the same index — what changes
-    is the I/O and compute shape: no KMeans retrain, no full-corpus
-    assignment pass, a p/k fraction of the corpus read per query
-    batch.
-
-    Query vectors are looked up from the inverted file by id here
-    (vec_id predicate pushdown); a production service with external
-    query vectors skips that scan entirely.
+    index — centroids load driver-side, probe selection runs the same
+    Arrow-batched distance UDF as the self-contained form, and the
+    corpus side reads ONLY the probed ``cid=N`` partitions of the
+    inverted file. Output is identical to ivf_ann at the same
+    parameters on the same index — what changes is the I/O and compute
+    shape: no KMeans retrain, no full-corpus assignment pass, a p/k
+    fraction of the corpus read per query batch. Query vectors are
+    looked up from the inverted file by id.
 
     ``where`` is the predicate-filtered query mode (FAISS IDSelector /
     every production vector store's metadata WHERE clause): top-k among
@@ -835,103 +1133,39 @@ def ivf_query_stored(
     CANDIDATE side only (queries themselves need not match), BEFORE
     scoring, as a plain column filter on the inverted-file scan, so it
     reaches the parquet reader (PushedFilters over the persisted
-    ``meta_cols``) and composes with cell pruning: only matching
-    rowgroups of only the probed ``cid=N`` partitions are scored. The
-    predicate can only SHRINK a cell's candidate set, so with
-    nprobe = every cell the answer is exactly brute-force-over-slice
-    (pytest-pinned vs knn_bruteforce_filtered).
+    ``meta_cols``) and composes with cell pruning. The predicate can
+    only SHRINK a cell's candidate set, so with nprobe = every cell the
+    answer is exactly brute-force-over-slice (pytest-pinned vs
+    knn_bruteforce_filtered).
 
-    Entry runs compaction crash recovery; stored queries must not run
-    concurrently with a compaction (quiesced-store contract — see
-    recover_store_slices).
+    Recovers at entry; quiesced-store contract (README.md, "ANN
+    stores").
     """
     if query_ids is None:
         query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
+    return _query_store(
+        spark, path, None, query_ids, k=k, nprobe=nprobe, id_col=id_col, where=where
     )
-
-    # A crashed invfile compaction may have renamed the live inverted
-    # file away; recovery (one cheap listing) restores it before open.
-    recover_store_slices(path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    inv = spark.read.parquet(f"{path}/invfile")
-    probes = (
-        inv.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-        )
-        .withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
-    )
-    cand = inv if where is None else inv.filter(where)
-    return _ivf_score_probes(cand, probes, k, id_col)
 
 
 def compact_ivf_index(
     spark, path: str, lock_timeout: float = 600.0
 ) -> tuple[int, int]:
-    """Inverted-file maintenance for the two-phase IVF: fold the data
-    files that nightly ``ivf_append_to_index`` batches accumulate
-    inside each ``cid=N`` partition back to ONE file per cell,
-    returning (files_before, files_after). Row content is preserved
-    exactly — the fold is a read + clustered rewrite, no quantizer
-    retrain and no reassignment, so query answers are bit-identical
-    before and after (pytest-pinned). Works unchanged on an IVFADC
-    index (ivfpq_build_index writes the same cid-partitioned
-    ``invfile`` layout, just with code columns instead of vectors —
-    pytest-pinned there too). What it buys at 100 TB is the
-    same thing store compaction buys the dedup pipeline: an N-append
-    index holds N files per touched cell, and listing/footer cost for
-    every probe grows linearly until a compaction restores O(1) opens
-    per cell. FAISS's on-disk IndexIVF has no analogous fragmentation
-    only because its add() rewrites a single memory-mapped file; the
-    parquet inverted file trades that for cheap appends plus THIS
-    periodic fold. Run quiesced (between query jobs), like
-    compact_store_slices; the whole critical section holds
-    curation_extras.store_lock, so a stored reader or appender
-    ENTERING mid-fold waits at its recovery instead of racing the
-    staging dir; ``lock_timeout`` bounds that wait on a wedged holder,
-    the same tunable recover_store_slices exposes (ADVICE r11).
-
-    Crash safety reuses the store-compaction state machine
-    (curation_extras.recover_store_slices, same `_compact`/`_old_`
-    naming): the clustered rewrite lands in ``<path>/_compact``, the
-    live ``invfile`` is renamed to ``_old_invfile``, ``_compact``
-    promotes to ``invfile``, and only then is the old generation
-    deleted — entry recovery rolls a pre-promote crash back (the
-    ``_old_`` rename holds the only copy) and clears a post-promote
-    crash's dead rename. The stored-query readers run the same
-    recovery before opening the index.
-    """
-    import glob as _glob
-    import os
-    import shutil
-
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        _recover_store_slices_locked,
-        store_lock,
-    )
-
-    with store_lock(path, timeout=lock_timeout):
-        _recover_store_slices_locked(path)
-        inv = f"{path}/invfile"
-        tmp = f"{path}/_compact"
-
-        def _nfiles() -> int:
-            return len(_glob.glob(f"{inv}/cid=*/*.parquet"))
-
-        files_before = _nfiles()
-        # repartition BY cid: every cell's rows land in one task, so
-        # the partitionBy write emits exactly one file per non-empty
-        # cell.
-        spark.read.parquet(inv).repartition("cid").write.partitionBy(
-            "cid"
-        ).parquet(tmp)
-        os.replace(inv, f"{path}/_old_invfile")
-        os.replace(tmp, inv)
-        shutil.rmtree(f"{path}/_old_invfile", ignore_errors=True)
-        return files_before, _nfiles()
+    """Inverted-file maintenance: fold the data files that appends
+    accumulate inside each ``cid=N`` partition back to ONE file per
+    cell, returning (files_before, files_after). Works on every
+    cid-partitioned store (IVF, IVFADC, IVF×SQ). Row content is
+    preserved exactly, so query answers are bit-identical before and
+    after (pytest-pinned). What it buys at 100 TB is the same thing
+    store compaction buys the dedup pipeline: an N-append index holds N
+    files per touched cell, and listing/footer cost for every probe
+    grows linearly until a compaction restores O(1) opens per cell.
+    FAISS's on-disk IndexIVF has no analogous fragmentation only
+    because its add() rewrites a single memory-mapped file; the parquet
+    inverted file trades that for cheap appends plus THIS periodic
+    fold. Crash safety and the quiesced-store contract: _compact_store
+    and README.md, "ANN stores"."""
+    return _compact_store(spark, path, lock_timeout)
 
 
 def incremental_semantic_dedup(
@@ -975,22 +1209,16 @@ def incremental_semantic_dedup(
     nightly index build, per-ingest pruned dedup, append, periodic
     compaction.
     """
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-    from parallel_map_reduce_spark.operators.dedup import (
-        connected_components,
-    )
-
-    recover_store_slices(index_path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(index_path), nprobe)
+    cmat, _ = _load_store(index_path)
+    _, probe_cids = _ivf_udfs(cmat, nprobe)
     # eager=False (r13, guide §1.2): the connected_components
-    # construction below consumes b and cross_dup in full (survivors →
-    # intra → sym's eager checkpoint), so both lazily-marked checkpoints
-    # materialize inside that one job instead of paying two dedicated
-    # jobs first. Materialization still happens DURING this call — the
-    # returned statuses read only cached blocks, never the invfile, so
-    # callers may still delete the store before consuming them.
+    # construction in _admission_statuses consumes b and cross_dup in
+    # full (survivors → intra → sym's eager checkpoint), so both
+    # lazily-marked checkpoints materialize inside that one job instead
+    # of paying two dedicated jobs first. Materialization still happens
+    # DURING this call — the returned statuses read only cached blocks,
+    # never the invfile, so callers may still delete the store before
+    # consuming them.
     b = batch.select(
         F.col(id_col), to_double_array(F.col(vec_col)).alias("qvec")
     ).localCheckpoint(eager=False)
@@ -1005,10 +1233,21 @@ def incremental_semantic_dedup(
         .agg(F.min(F.col(id_col)).alias("dup_of"))
         .localCheckpoint(eager=False)
     )
+    return _admission_statuses(b, cross_dup, threshold, num_blocks, id_col)
 
-    # Within-batch components over the cross-surviving rows only (every
-    # edge incident to a cross_dup would be dropped anyway — same
-    # result as the lexical tier's filter-after, one kernel cheaper).
+
+def _admission_statuses(
+    b: DataFrame,
+    cross_dup: DataFrame,
+    threshold: float,
+    num_blocks: int,
+    id_col: str,
+) -> DataFrame:
+    """(id, status, dup_of) of an admitted batch ``b`` (id, qvec) given
+    its cross matches ``cross_dup`` (id_n, dup_of). Within-batch
+    components run over the cross-surviving rows only (every edge
+    incident to a cross_dup would be dropped anyway — same result as the
+    lexical tier's filter-after, one kernel cheaper)."""
     survivors = b.join(
         cross_dup.withColumnRenamed("id_n", id_col), id_col, "left_anti"
     )
@@ -1090,20 +1329,11 @@ def incremental_semantic_dedup_with_audit(
     pass plus two cheap aggregates over the checkpointed match list.
     ``pruned_cross_ids`` stays answerable after the store is deleted
     (it derives from the checkpointed matches, not the invfile)."""
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-    from parallel_map_reduce_spark.operators.dedup import (
-        connected_components,
-    )
-
-    recover_store_slices(index_path)
-    cmat = _read_centroid_matrix(index_path)
-    ncells = cmat.shape[0]
-    _, probe_all = _ivf_udfs(cmat, ncells)
+    cmat, _ = _load_store(index_path)
+    _, probe_all = _ivf_udfs(cmat, cmat.shape[0])
     # eager=False (r13): same fusion as incremental_semantic_dedup — the
-    # component construction below consumes b and matches in full, so
-    # both checkpoints materialize inside its first job; statuses and
+    # component construction consumes b and matches in full, so both
+    # checkpoints materialize inside its first job; statuses and
     # pruned_cross then read only cached blocks (store-deletion contract
     # in the docstring holds unchanged).
     b = batch.select(
@@ -1127,46 +1357,7 @@ def incremental_semantic_dedup_with_audit(
         .select(F.col("id_n").alias(id_col))
         .distinct()
     )
-
-    survivors = b.join(
-        cross_dup.withColumnRenamed("id_n", id_col), id_col, "left_anti"
-    )
-    intra = embedding_all_pairs_blocked(
-        survivors,
-        threshold=threshold,
-        num_blocks=num_blocks,
-        id_col=id_col,
-        vec_col="qvec",
-    )
-    comps = connected_components(intra.select("id_a", "id_b"))
-
-    statuses = (
-        b.select(id_col)
-        .join(cross_dup.withColumnRenamed("id_n", id_col), id_col, "left")
-        .join(
-            comps.select(
-                F.col("u").cast("long").alias(id_col),
-                F.col("label").alias("_comp"),
-            ),
-            id_col,
-            "left",
-        )
-        .select(
-            id_col,
-            F.when(F.col("dup_of").isNotNull(), F.lit("cross_dup"))
-            .when(
-                F.col("_comp").isNotNull() & (F.col("_comp") != F.col(id_col)),
-                F.lit("batch_dup"),
-            )
-            .otherwise(F.lit("kept"))
-            .alias("status"),
-            F.coalesce(
-                F.col("dup_of"),
-                F.when(F.col("_comp") != F.col(id_col), F.col("_comp")),
-                F.lit(-1).cast("long"),
-            ).alias("dup_of"),
-        )
-    )
+    statuses = _admission_statuses(b, cross_dup, threshold, num_blocks, id_col)
     return statuses, pruned_cross
 
 
@@ -1176,50 +1367,17 @@ def compact_pq_index(
     target_bytes: int = 128 << 20,
     lock_timeout: float = 600.0,
 ) -> tuple[int, int]:
-    """Code-table maintenance for the two-phase PQ (and OPQ): fold the
-    files that ``pq_append_to_index`` batches accumulate in the FLAT
-    ``<path>/codes`` table into ceil(total_bytes / target_bytes) files
-    (the ~16 B/vec code table is tiny relative to its corpus, but an
-    N-append deployment still pays N file opens per query until the
-    fold). Returns (files_before, files_after); row content is exact —
-    no model retrain, no re-encode — so stored answers are identical
-    before/after (pytest-pinned). Same crash-safe swap as
-    compact_ivf_index via the shared recover_store_slices state machine
-    (``_compact`` staging → ``_old_codes`` rename → promote → delete).
-    Run quiesced (never concurrently with a stored query or another
-    compaction); the PQ/IVFADC stored readers and appenders run the
-    same recovery at entry, so a crashed compaction heals at the next
-    open — matching the IVF readers' contract. The critical section
-    holds curation_extras.store_lock, so such an entry during the
-    fold waits instead of raising; ``lock_timeout`` bounds that wait,
-    matching recover_store_slices (ADVICE r11).
+    """Code-table maintenance for the flat PQ, OPQ and SQ8 stores: fold
+    the files that appends accumulate in ``<path>/codes`` into
+    ceil(total_bytes / target_bytes) files (the ~16 B/vec code table is
+    tiny relative to its corpus, but an N-append deployment still pays
+    N file opens per query until the fold). Returns (files_before,
+    files_after); row content is exact — no model retrain, no
+    re-encode — so stored answers are identical before/after
+    (pytest-pinned). Crash safety and the quiesced-store contract:
+    _compact_store and README.md, "ANN stores".
     """
-    import glob as _glob
-    import math
-    import os
-    import shutil
-
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        _recover_store_slices_locked,
-        store_lock,
-    )
-
-    with store_lock(path, timeout=lock_timeout):
-        _recover_store_slices_locked(path)
-        codes = f"{path}/codes"
-        tmp = f"{path}/_compact"
-
-        def _files() -> list[str]:
-            return _glob.glob(f"{codes}/*.parquet")
-
-        before = _files()
-        total = sum(os.path.getsize(f) for f in before)
-        nparts = max(1, math.ceil(total / target_bytes))
-        spark.read.parquet(codes).repartition(nparts).write.parquet(tmp)
-        os.replace(codes, f"{path}/_old_codes")
-        os.replace(tmp, codes)
-        shutil.rmtree(f"{path}/_old_codes", ignore_errors=True)
-        return len(before), len(_files())
+    return _compact_store(spark, path, lock_timeout, target_bytes)
 
 
 def ivf_range_query_stored(
@@ -1231,39 +1389,15 @@ def ivf_range_query_stored(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """RANGE search answered from the PERSISTED IVF index — the same
-    stored artifact (centroids + cid-partitioned inverted file)
-    ivf_query_stored serves top-k from, because FAISS serves both query
-    modes off one IndexIVF: centroids load as a k-row table, probe
-    selection runs the shared Arrow distance UDF, the corpus side reads
-    ONLY the probed ``cid=N`` partitions, and the radius filter keeps
-    every in-range neighbor found there — no top-k window anywhere.
-    Output is identical to the self-contained ivf_range_search at the
-    same parameters on the same index (pytest-pinned). Entry runs
-    compaction crash recovery; stored queries must not run
-    concurrently with a compaction (quiesced-store contract)."""
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)  # see ivf_query_stored
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    inv = spark.read.parquet(f"{path}/invfile")
-    probes = (
-        inv.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-        )
-        .withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
-    )
-    sim = F.round(cosine(F.col("qvec"), F.col("vec")), 6)
-    return (
-        inv.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("cosine_sim")
-        )
-        .filter(F.col("cosine_sim") >= radius)
+    store ivf_query_stored serves top-k from, because FAISS serves both
+    query modes off one IndexIVF: the corpus side reads ONLY the probed
+    ``cid=N`` partitions, and the radius filter keeps every in-range
+    neighbor found there — no top-k window anywhere. Output is
+    identical to the self-contained ivf_range_search at the same
+    parameters on the same index (pytest-pinned). Recovers at entry;
+    quiesced-store contract (README.md, "ANN stores")."""
+    return _query_store(
+        spark, path, None, query_ids, nprobe=nprobe, id_col=id_col, radius=radius
     )
 
 
@@ -1424,9 +1558,7 @@ def kmeans_train_converged(
     rounding.
     """
     spark = embeddings.sparkSession
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
+    base = _vectors(embeddings, id_col, vec_col)
     # r13 optimization, two plan changes with bit-identical per-round
     # values (oracle-gated at all three sfs):
     #  * the VECTOR rides in the checkpointed loop state, so each round
@@ -1534,37 +1666,15 @@ def ivf_append_to_index(
     them to the inverted file — the nightly delta job between full
     rebuilds. ``meta_cols`` mirrors ivf_build_index's: a store built
     with persisted metadata must append the same columns or later
-    filtered queries would read NULLs for the appended rows. The quantizer is deliberately not retrained (FAISS's
-    add-after-train contract): cell boundaries stay fixed so earlier
-    vectors never need reassignment, at the cost of drift if the new
-    data's distribution shifts — rebuild cadence is the production
-    knob for that.
+    filtered queries would read NULLs for the appended rows.
 
-    Scale shape: one centroid read (k rows), one narrow
-    assignment projection over the batch, one partitionBy(cid) append
-    — no existing index partition is read or rewritten.
-
-    Entry runs the compaction crash recovery (like the stored
-    readers): appending into a store whose live ``invfile`` a crashed
-    compact_ivf_index renamed to ``_old_invfile`` would otherwise
-    create a fresh invfile beside the only copy of the rows — an
-    unrecoverable both-exist state. Appends must not run concurrently
-    with a compaction (quiesced-store contract).
+    Scale shape: one centroid read (k rows), one narrow assignment
+    projection over the batch, one partitionBy(cid) append — no
+    existing index partition is read or rewritten. Add-after-train,
+    recovery at entry and the quiesced-store contract: README.md, "ANN
+    stores".
     """
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    nearest_cid, _ = _ivf_udfs(_read_centroid_matrix(path), 1)
-    base = embeddings.select(
-        F.col(id_col),
-        to_double_array(F.col(vec_col)).alias("vec"),
-        *meta_cols,
-    )
-    base.withColumn("cid", nearest_cid(F.col("vec"))).write.mode(
-        "append"
-    ).partitionBy("cid").parquet(f"{path}/invfile")
+    _append_store(embeddings, path, id_col, vec_col, meta_cols)
 
 
 def ivfpq_append_to_index(
@@ -1573,47 +1683,17 @@ def ivfpq_append_to_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Incremental index maintenance for the two-phase IVFADC — the
-    add-after-train contract applied to the composed index, completing
-    the lifecycle matrix (IVF and PQ each already have an appender):
-    a NEW batch is encoded against the STORED PQ model (codebooks +
-    optional rotation, read back from ``<path>/model``), assigned to
-    the EXISTING stored centroids, and its (vec_id, norm, code, cid)
-    rows appended to the cid-partitioned inverted file. NEITHER
-    quantizer retrains — cell boundaries and code words stay fixed so
-    no existing partition is read, reassigned, or re-encoded (FAISS
-    IndexIVFPQ.add after train); distribution drift vs. the training
-    sample is the rebuild-cadence tradeoff, as for the other two
-    appenders.
-
-    Scale shape: one centroid read (k rows) + one model-row read
-    (driver-sized), one Arrow encode/assign pass over the batch, one
-    partitionBy(cid) parquet append. Each nightly append adds one data
-    file per touched cell — compact_ivf_index is the periodic fold
-    that restores one file per cell (answers pytest-pinned identical
-    across append and compaction).
-
-    Entry runs the compaction crash recovery (see ivf_append_to_index
-    — same both-exist hazard); appends must not run concurrently with
-    a compaction (quiesced-store contract).
+    """Incremental index maintenance for the two-phase IVFADC: a NEW
+    batch is encoded against the STORED PQ model (codebooks + optional
+    rotation), assigned to the EXISTING stored centroids, and its
+    (vec_id, norm, code, cid) rows appended to the cid-partitioned
+    inverted file (FAISS IndexIVFPQ.add after train). Each append adds
+    one data file per touched cell; compact_ivf_index is the periodic
+    fold (answers pytest-pinned identical across append and
+    compaction). Add-after-train, recovery at entry and the
+    quiesced-store contract: README.md, "ANN stores".
     """
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    nearest_cid, _ = _ivf_udfs(_read_centroid_matrix(path), 1)
-    cb, rot = _read_pq_model(path)
-    encode, _ = _pq_udfs(cb, rotation=rot)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        nearest_cid(F.col("vec")).alias("cid"),
-        encode(F.col("vec")).alias("code"),
-    ).write.mode("append").partitionBy("cid").parquet(f"{path}/invfile")
+    _append_store(embeddings, path, id_col, vec_col)
 
 
 def pq_train_codebooks(
@@ -1751,72 +1831,10 @@ def pq_ann(
         vec_col=vec_col,
         train_cap=train_cap,
     )
-    encode, adc_partials = _pq_udfs(cb)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
+    return _ann(
+        embeddings, _pq_model(m, codes, cb), query_ids, k, rerank_factor,
+        id_col, vec_col,
     )
-    return _pq_score_refine(
-        base, query_ids, k, rerank_factor, encode, adc_partials, id_col
-    )
-
-
-def _pq_score_refine(
-    base: DataFrame,
-    query_ids: list[int],
-    k: int,
-    rerank_factor: int,
-    encode,
-    adc_partials,
-    id_col: str,
-) -> DataFrame:
-    """Shared back half of the flat PQ forms (pq_ann and opq_ann):
-    encode the corpus, broadcast-join the ADC partial table on
-    (sub, code), map-side combine to one approx cosine per
-    (query, vector) using TRUE stored norms, keep the
-    k·rerank_factor shortlist, exact-refine on true vectors."""
-    enc = base.select(
-        id_col, _vec_norm().alias("norm"), encode(F.col("vec")).alias("code")
-    )
-    return _pq_score_refine_enc(
-        base, enc, query_ids, k, rerank_factor, adc_partials, id_col
-    )
-
-
-def _pq_score_refine_enc(
-    base: DataFrame,
-    enc: DataFrame,
-    query_ids: list[int],
-    k: int,
-    rerank_factor: int,
-    adc_partials,
-    id_col: str,
-) -> DataFrame:
-    """ADC scoring + exact refine over an ALREADY-ENCODED
-    (id, norm, code) frame — the entry point the stored-index form
-    uses, where ``enc`` comes off parquet instead of an encode pass."""
-    exploded = enc.select(
-        id_col, "norm", F.posexplode("code").alias("sub", "code")
-    )
-    adc = _pq_adc_table(base, query_ids, adc_partials, id_col)
-    scored = (
-        exploded.join(F.broadcast(adc), ["sub", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(
-            F.round(
-                F.sum("part") / (F.first("norm") * F.first("qnorm")), 6
-            ).alias("approx_sim")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine_topk(base, shortlist, query_ids, k, id_col)
 
 
 def _pq_udfs(cb: np.ndarray, rotation: np.ndarray | None = None):
@@ -1890,41 +1908,6 @@ def _pq_adc_table(
     )
 
 
-def _exact_refine_topk(
-    base: DataFrame,
-    shortlist: DataFrame,
-    query_ids: list[int],
-    k: int,
-    id_col: str,
-) -> DataFrame:
-    """FAISS-refine: fetch true vectors for the shortlist only (both
-    join sides broadcast — |Q| and |Q|·k·rerank_factor rows), re-score
-    with the JVM cosine fold, rank on the exact similarity."""
-    qvecs = base.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("vec").alias("qvec")
-    )
-    refined = (
-        base.join(
-            F.broadcast(shortlist),
-            base[id_col] == shortlist["neighbor_id"],
-        )
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        refined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
 def ivfpq_ann(
     embeddings: DataFrame,
     query_ids: list[int] | None = None,
@@ -1958,19 +1941,9 @@ def ivfpq_ann(
     """
     if query_ids is None:
         query_ids = list(range(10))
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
+    cmat = _fit_coarse(
+        _vectors(embeddings, id_col, vec_col), num_centroids, max_iter, train_cap
     )
-    train = _cap_train_set(base, F.col("vec"), train_cap).select(
-        array_to_vector(F.col("vec")).alias("features")
-    )
-    model = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
-    cmat = np.array([list(map(float, c)) for c in model.clusterCenters()])
-    nearest_cid, probe_cids = _ivf_udfs(cmat, nprobe)
-
     cb = pq_train_codebooks(
         embeddings,
         m=m,
@@ -1979,65 +1952,10 @@ def ivfpq_ann(
         vec_col=vec_col,
         train_cap=train_cap,
     )
-    encode, adc_partials = _pq_udfs(cb)
-
-    enc = base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        nearest_cid(F.col("vec")).alias("cid"),
-        encode(F.col("vec")).alias("code"),
+    return _ann(
+        embeddings, _pq_model(m, codes, cb), query_ids, k, rerank_factor,
+        id_col, vec_col, cmat, nprobe,
     )
-    probes = (
-        base.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_cids(F.col("vec"))).alias("cid"),
-        )
-    )
-    adc = _pq_adc_table(base, query_ids, adc_partials, id_col)
-    return _ivfpq_score_refine(
-        base, enc, probes, adc, query_ids, k, rerank_factor, id_col
-    )
-
-
-def _ivfpq_score_refine(
-    base: DataFrame,
-    enc: DataFrame,
-    probes: DataFrame,
-    adc: DataFrame,
-    query_ids: list[int],
-    k: int,
-    rerank_factor: int,
-    id_col: str,
-) -> DataFrame:
-    """Shared back half of the IVFADC forms (self-contained and
-    stored): broadcast the probe list into the cell-assigned code
-    stream (cid equality join — partition pruning on the stored form),
-    broadcast-join the per-query ADC table, map-side combine to one
-    approx cosine per (query, vector), shortlist, exact-refine."""
-    cell_cands = enc.join(F.broadcast(probes), "cid")
-    exploded = cell_cands.select(
-        "query_id", id_col, "norm", F.posexplode("code").alias("sub", "code")
-    )
-    scored = (
-        exploded.join(F.broadcast(adc), ["query_id", "sub", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(
-            F.round(
-                F.sum("part") / (F.first("norm") * F.first("qnorm")), 6
-            ).alias("approx_sim")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine_topk(base, shortlist, query_ids, k, id_col)
 
 
 def _resolve_shared_codebook(
@@ -2078,108 +1996,41 @@ def ivfpq_build_index(
     """Phase 1 of the two-phase IVFADC — the on-disk layout FAISS's
     canonical billion-scale index (``IVF16,PQ8``) persists, and the
     artifact an actual 100 TB ANN deployment ships: both quantizers
-    trained once on the bounded deterministic sample, then
-
-      ``<path>/centroids``  the coarse quantizer's k (cid, center) rows;
-      ``<path>/model``      the PQ model row (same layout as
-                            pq_build_index; rotation NULL unless
-                            built with ``rotation=True``);
-      ``<path>/invfile``    the corpus as (vec_id, norm, code) rows
-                            partitioned BY cid — cell-clustered
-                            ~16 B/vec codes, NO float vectors anywhere
-                            in the index.
-
-    Query jobs (ivfpq_query_stored) read centroids + model driver-side
-    (a few KB), then touch only the probed ``cid=N`` partitions of the
-    code table — the two pruning axes (which cells, how many bytes)
-    are both baked into the layout.
+    trained once, concurrently, on the bounded deterministic sample,
+    then the corpus persisted as cell-clustered ~16 B/vec codes with NO
+    float vectors anywhere in the index (layout: README.md, "ANN
+    stores"). Query jobs (ivfpq_query_stored) read centroids + model
+    driver-side, then touch only the probed ``cid=N`` partitions — the
+    two pruning axes (which cells, how many bytes) are both baked into
+    the layout.
 
     With ``rotation=True`` the PQ half trains behind the learned OPQ
     rotation and the model row persists it — FAISS's full canonical
     recipe ``OPQ8,IVF16,PQ8``. The rotation is orthogonal, so the
     coarse quantizer's geometry is unchanged whether cells are
-    assigned in the original or rotated space (dots and norms are
-    preserved); cells here assign on the original vectors and only the
-    byte coding rotates, which keeps the centroids table comparable
-    across the rotation flag. The stored reader and the appender
-    already honor a non-NULL persisted rotation (same branch as
-    pq_query_stored / pq_append_to_index — pytest-pinned).
+    assigned in the original or rotated space; cells here assign on
+    the original vectors and only the byte coding rotates, which keeps
+    the centroids table comparable across the rotation flag.
 
     ``shared_codebook=None`` (the default) resolves per tier: shared
-    for plain PQ (the train-time-cheap default this builder has always
-    shipped), per-subspace for ``rotation=True`` (OPQ's alternation
-    fits each subspace against its rotated slice — a shared book has
-    no analogue in Ge et al.'s minimization, so asking for one is a
-    contract error, raised loudly instead of silently ignored).
+    for plain PQ, per-subspace for ``rotation=True`` (see
+    _resolve_shared_codebook; shared + rotation raises).
     """
-    shared_codebook = _resolve_shared_codebook(shared_codebook, rotation)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    # r13 (guide §1.2 + §2.6): one probe job replaces the two
-    # independent count() passes the coarse and PQ cap filters each
-    # paid, and the two quantizer fits — independent given the train
-    # sample — run CONCURRENTLY from driver threads so the second
-    # fit's jobs back-fill the executor tail of the first (the
-    # thread-pool overlap recipe; Spark's scheduler interleaves the
-    # two fits' jobs). Each fit sees exactly the frame it saw before
-    # (same derivation, same partitioning), so both trained models are
-    # bit-identical to the sequential form's.
-    probe = base.agg(
-        F.count(F.lit(1)).alias("n"), F.first(F.size("vec")).alias("d")
-    ).first()
-
-    def _fit_coarse():
-        train = _cap_train_set(
-            base, F.col("vec"), train_cap, n=probe["n"]
-        ).select(array_to_vector(F.col("vec")).alias("features"))
-        model = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
-        return [list(map(float, c)) for c in model.clusterCenters()]
-
-    def _fit_codes():
-        if rotation:
-            return opq_train(
-                embeddings,
-                m=m,
-                codes=codes,
-                n_iter=n_iter,
-                vec_col=vec_col,
-                train_cap=train_cap,
-                n=probe["n"],
-            )
-        return None, pq_train_codebooks(
-            embeddings,
+    _build_store(
+        embeddings,
+        path,
+        id_col,
+        vec_col,
+        coarse=(num_centroids, max_iter, train_cap),
+        pq=dict(
             m=m,
             codes=codes,
-            shared=shared_codebook,
-            vec_col=vec_col,
+            shared=_resolve_shared_codebook(shared_codebook, rotation),
+            rotation=rotation,
+            n_iter=n_iter,
             train_cap=train_cap,
-            n=probe["n"],
-            dim=probe["d"],
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_coarse = pool.submit(_fit_coarse)
-        f_codes = pool.submit(_fit_codes)
-        centers = f_coarse.result()
-        rot, cb = f_codes.result()
-    # Driver-sized artifacts persist driver-side — no Spark write jobs.
-    _write_centroids(path, centers)
-    _write_pq_model(path, m, codes, cb, rot)
-
-    nearest_cid, _ = _ivf_udfs(np.array(centers), 1)
-    encode, _ = _pq_udfs(cb, rotation=rot)
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        nearest_cid(F.col("vec")).alias("cid"),
-        encode(F.col("vec")).alias("code"),
-    ).write.mode("overwrite").partitionBy("cid").parquet(f"{path}/invfile")
+        ),
+    )
 
 
 def ivfpq_query_stored(
@@ -2194,47 +2045,27 @@ def ivfpq_query_stored(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Phase 2 of the two-phase IVFADC: answer top-k from the PERSISTED
-    index — centroids and PQ model load driver-side, probe selection
-    and query-side ADC partials are the only Arrow crossings, and the
-    corpus side reads ONLY the probed ``cid=N`` partitions of the
-    ~16 B/vec code table (the broadcast cid join prunes at the
-    parquet-partition level, as in ivf_query_stored). Exact-refine
+    index — centroids and PQ model (rotation honored when persisted)
+    load driver-side, probe selection and query-side ADC partials are
+    the only Arrow crossings, and the corpus side reads ONLY the probed
+    ``cid=N`` partitions of the ~16 B/vec code table. Exact-refine
     candidates come from the primary table — the index holds no float
     vectors. Output identical to the self-contained ivfpq_ann at the
     same parameters on the same trained quantizers (pytest-pinned).
-
-    Like every stored reader, entry runs crash recovery for an
-    interrupted compact_ivf_index (a pre-promote crash leaves the live
-    invfile renamed to ``_old_invfile``); stored queries must not run
-    concurrently with a compaction — the recover/compact state machine
-    assumes a quiesced store (see recover_store_slices)."""
+    Recovers at entry; quiesced-store contract (README.md, "ANN
+    stores")."""
     if query_ids is None:
         query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    # Honor a rotation if the persisted model carries one (the shared
-    # model schema reserves the column — scoring MUST match whatever
-    # the codes were encoded with, same branch as pq_query_stored).
-    cb, rot = _read_pq_model(path)
-    _, adc_partials = _pq_udfs(cb, rotation=rot)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    enc = spark.read.parquet(f"{path}/invfile")
-    probes = (
-        base.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_cids(F.col("vec"))).alias("cid"),
-        )
-    )
-    adc = _pq_adc_table(base, query_ids, adc_partials, id_col)
-    return _ivfpq_score_refine(
-        base, enc, probes, adc, query_ids, k, rerank_factor, id_col
+    return _query_store(
+        spark,
+        path,
+        embeddings,
+        query_ids,
+        k=k,
+        nprobe=nprobe,
+        rerank_factor=rerank_factor,
+        id_col=id_col,
+        vec_col=vec_col,
     )
 
 
@@ -2378,12 +2209,9 @@ def opq_ann(
         vec_col=vec_col,
         train_cap=train_cap,
     )
-    encode, adc_partials = _pq_udfs(cb, rotation=rot)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    return _pq_score_refine(
-        base, query_ids, k, rerank_factor, encode, adc_partials, id_col
+    return _ann(
+        embeddings, _pq_model(m, codes, cb, rot), query_ids, k, rerank_factor,
+        id_col, vec_col,
     )
 
 
@@ -2401,15 +2229,9 @@ def pq_build_index(
 ) -> None:
     """Phase 1 of the two-phase PQ/OPQ: train the codebooks (plus, with
     ``rotation=True``, the OPQ rotation), encode the corpus ONCE, and
-    persist the compressed index —
-
-      ``<path>/model``  one row: (m, codes, sub_dim, flattened
-                        codebook, flattened rotation or NULL) — the
-                        driver-sized artifact every query job loads;
-      ``<path>/codes``  (vec_id, norm, code array) — m sub-codes and
-                        one true norm per vector, the ~16 B/vec payload
-                        that replaces the float corpus in the scoring
-                        hot path.
+    persist the compressed store (layout: README.md, "ANN stores") —
+    the driver-sized model row every query job loads and the ~16 B/vec
+    code table that replaces the float corpus in the scoring hot path.
 
     This is the nightly encode job of a production compressed-ANN
     service (FAISS: train + add, then write_index); query jobs
@@ -2427,36 +2249,20 @@ def pq_build_index(
     for ``rotation=True``; shared+rotation raises (see
     _resolve_shared_codebook).
     """
-    shared_codebook = _resolve_shared_codebook(shared_codebook, rotation)
-    if rotation:
-        rot, cb = opq_train(
-            embeddings,
+    _build_store(
+        embeddings,
+        path,
+        id_col,
+        vec_col,
+        pq=dict(
             m=m,
             codes=codes,
+            shared=_resolve_shared_codebook(shared_codebook, rotation),
+            rotation=rotation,
             n_iter=n_iter,
-            vec_col=vec_col,
             train_cap=train_cap,
-        )
-    else:
-        rot = None
-        cb = pq_train_codebooks(
-            embeddings,
-            m=m,
-            codes=codes,
-            shared=shared_codebook,
-            vec_col=vec_col,
-            train_cap=train_cap,
-        )
-    encode, _ = _pq_udfs(cb, rotation=rot)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
+        ),
     )
-    # r13: the 1-row model is driver-sized — persist it driver-side
-    # instead of paying a Spark write job (guide §1.2).
-    _write_pq_model(path, m, codes, cb, rot)
-    base.select(
-        id_col, _vec_norm().alias("norm"), encode(F.col("vec")).alias("code")
-    ).write.mode("overwrite").parquet(f"{path}/codes")
 
 
 def pq_append_to_index(
@@ -2467,36 +2273,13 @@ def pq_append_to_index(
 ) -> None:
     """Incremental index maintenance for the two-phase PQ: encode a NEW
     batch of vectors against the STORED model (codebooks + optional OPQ
-    rotation, read back from ``<path>/model``) and append their
-    (vec_id, norm, code) rows to the code table — FAISS's
-    add-after-train contract applied to the compression tier. The model
-    is deliberately not retrained: code words stay fixed so earlier
-    codes never need re-encoding, at the cost of quantization drift if
-    the new data's distribution shifts — rebuild cadence is the
-    production knob, exactly as for ivf_append_to_index.
-
-    Scale shape: one driver-sized model read, one Arrow encode pass
-    over the batch, one parquet append — no existing code file is read
-    or rewritten.
-
-    Entry runs the compaction crash recovery (see ivf_append_to_index
-    — appending beside a crashed compact_pq_index's ``_old_codes``
-    rename would create an unrecoverable both-exist state); appends
-    must not run concurrently with a compaction.
+    rotation) and append their (vec_id, norm, code) rows to the code
+    table. Scale shape: one driver-sized model read, one Arrow encode
+    pass over the batch, one parquet append — no existing code file is
+    read or rewritten. Add-after-train, recovery at entry and the
+    quiesced-store contract: README.md, "ANN stores".
     """
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    cb, rot = _read_pq_model(path)
-    encode, _ = _pq_udfs(cb, rotation=rot)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    base.select(
-        id_col, _vec_norm().alias("norm"), encode(F.col("vec")).alias("code")
-    ).write.mode("append").parquet(f"{path}/codes")
+    _append_store(embeddings, path, id_col, vec_col)
 
 
 def pq_query_stored(
@@ -2519,28 +2302,20 @@ def pq_query_stored(
     itself holds no float vectors. Output is identical to
     pq_ann/opq_ann at the same parameters on the same trained model
     (pytest-pinned): persisting changes the I/O shape, not the answer.
-
-    Like every stored reader, entry runs crash recovery for an
-    interrupted compact_pq_index (a pre-promote crash leaves the live
-    code table renamed to ``_old_codes``); stored queries must not run
-    concurrently with a compaction — the recover/compact state machine
-    assumes a quiesced store (see recover_store_slices).
+    Recovers at entry; quiesced-store contract (README.md, "ANN
+    stores").
     """
     if query_ids is None:
         query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    cb, rot = _read_pq_model(path)
-    _, adc_partials = _pq_udfs(cb, rotation=rot)
-    enc = spark.read.parquet(f"{path}/codes")
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    return _pq_score_refine_enc(
-        base, enc, query_ids, k, rerank_factor, adc_partials, id_col
+    return _query_store(
+        spark,
+        path,
+        embeddings,
+        query_ids,
+        k=k,
+        rerank_factor=rerank_factor,
+        id_col=id_col,
+        vec_col=vec_col,
     )
 
 
@@ -2605,32 +2380,13 @@ def sq_ann(
     """
     if query_ids is None:
         query_ids = list(range(10))
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    vmin, vmax = sq_train(embeddings, vec_col=vec_col)
-    mins, scales = _sq_model_arrays(vmin, vmax)
     # encode → decode fused in one plan: the round-trip through the
     # 8-bit code is exact (codes are exact integers in double), so this
     # scores IDENTICALLY to reading the code back from a persisted
-    # store (sq_query_stored) — structurally, because both sides build
-    # the same _sq_encode_expr/_sq_decode_expr pair.
-    deq = _sq_decode_expr(_sq_encode_expr(F.col("vec"), mins, scales), mins, scales)
-    enc = base.select(
-        id_col, _vec_norm().alias("norm"), deq.alias("deq")
-    )
-    return _sq_score_refine(base, enc, query_ids, k, rerank_factor, id_col)
-
-
-def _sq_model_arrays(vmin: np.ndarray, vmax: np.ndarray):
-    """(mins, scales) literal-array columns from a trained SQ model —
-    the zero-scale guard (constant dim: code 0, decode == vmin) applied
-    in ONE place so the self-contained and stored paths cannot drift."""
-    scale = (vmax - vmin) / 255.0
-    scale[scale == 0.0] = 1.0
-    mins = F.array(*[F.lit(float(v)) for v in vmin])
-    scales = F.array(*[F.lit(float(s)) for s in scale])
-    return mins, scales
+    # store (sq_query_stored) — structurally, because both run the
+    # same _encoded projection and _search decode.
+    model = _sq_model(*sq_train(embeddings, vec_col=vec_col))
+    return _ann(embeddings, model, query_ids, k, rerank_factor, id_col, vec_col)
 
 
 def _sq_encode_expr(vec, mins, scales):
@@ -2661,48 +2417,6 @@ def _sq_decode_expr(code, mins, scales):
     )
 
 
-def _sq_score_refine(
-    base: DataFrame,
-    enc: DataFrame,
-    query_ids: list[int],
-    k: int,
-    rerank_factor: int,
-    id_col: str,
-) -> DataFrame:
-    """The shared SQ scoring tail (self-contained sq_ann AND
-    sq_query_stored): asymmetric dot of the exact broadcast query
-    against the dequantized corpus with true stored norms, a
-    |Q|-keyed k·rerank_factor shortlist, then exact refine from the
-    primary table. ``enc`` is (id_col, norm, deq)."""
-    queries = base.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        _vec_norm().alias("qnorm"),
-    )
-    scored = (
-        enc.crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                dot(F.col("qvec"), F.col("deq"))
-                / (F.col("qnorm") * F.col("norm")),
-                6,
-            ).alias("approx_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine_topk(base, shortlist, query_ids, k, id_col)
-
-
 def sq_build_index(
     embeddings: DataFrame,
     path: str,
@@ -2712,74 +2426,16 @@ def sq_build_index(
     """Phase 1 of the two-phase SQ8: train the per-dimension (min, max)
     quantizer and persist the BYTE-coded corpus — the persisted form of
     FAISS IndexScalarQuantizer QT_8bit (write_index after train+add):
-
-      ``<path>/model``  one row: (dim, vmin array, scale array) — the
-                        guarded scales sq encode/decode actually used,
-                        2·dim doubles, the smallest model in the family;
-      ``<path>/codes``  (vec_id, norm, code array<tinyint>) — ONE byte
-                        per dimension plus one true norm per vector.
-
-    Same store layout as pq_build_index (model + flat codes), so
-    compact_pq_index and the recover_store_slices crash state machine
-    apply UNCHANGED. Unlike the PQ stores, both the encode here and the
-    stored read path are entirely JVM-side — no Python worker at build
-    or query time (plan-asserted).
+    one byte per dimension plus one true norm per vector, and the
+    smallest model in the family (layout: README.md, "ANN stores").
+    Both the encode here and the stored read path are entirely
+    JVM-side — no Python worker at build or query time
+    (plan-asserted).
 
     Scale posture: training is one narrow posexplode agg (2 scalars per
     dimension); encode is a projection; the write is shuffle-free.
     """
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    vmin, vmax = sq_train(embeddings, vec_col=vec_col)
-    scale = (vmax - vmin) / 255.0
-    scale[scale == 0.0] = 1.0
-    # r13: the 1-row model is driver-sized — persist it driver-side
-    # instead of paying a Spark write job (guide §1.2).
-    _write_sq_model(path, vmin, scale)
-    # literal arrays built from the EXACT doubles the model row stores
-    # (not re-derived arithmetic — bit-stability is what pins
-    # sq_query_stored == sq_ann)
-    mins = F.array(*[F.lit(float(v)) for v in vmin])
-    scales = F.array(*[F.lit(float(s)) for s in scale])
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        _sq_encode_expr(F.col("vec"), mins, scales).alias("code"),
-    ).write.mode("overwrite").parquet(f"{path}/codes")
-
-
-def _write_sq_model(path: str, vmin: np.ndarray, scale: np.ndarray) -> None:
-    import pyarrow as pa
-
-    _write_store_rows(
-        f"{path}/model",
-        [
-            {
-                "dim": int(len(vmin)),
-                "vmin": [float(v) for v in vmin],
-                "scale": [float(s) for s in scale],
-            }
-        ],
-        pa.schema(
-            [
-                ("dim", pa.int32()),
-                ("vmin", pa.list_(pa.float64())),
-                ("scale", pa.list_(pa.float64())),
-            ]
-        ),
-    )
-
-
-def _sq_stored_model_arrays(spark, path: str):
-    """(mins, scales) literal-array columns rebuilt from the persisted
-    model row — scales are stored ALREADY guarded, so they ride back
-    into the plan verbatim. (``spark`` kept for signature stability;
-    the driver-sized row reads driver-side since r13.)"""
-    mrow = _read_store_rows(f"{path}/model")[0]
-    mins = F.array(*[F.lit(float(v)) for v in mrow["vmin"]])
-    scales = F.array(*[F.lit(float(s)) for s in mrow["scale"]])
-    return mins, scales
+    _build_store(embeddings, path, id_col, vec_col, sq=True)
 
 
 def sq_append_to_index(
@@ -2790,28 +2446,10 @@ def sq_append_to_index(
 ) -> None:
     """Incremental maintenance for the SQ8 store: encode a NEW batch
     against the STORED (min, scale) model and append (vec_id, norm,
-    code) rows — add-after-train; the quantizer is deliberately not
-    retrained (dims that drift outside the trained range clip, exactly
-    as FAISS's trained ScalarQuantizer does), so earlier codes never
-    re-encode. Entry runs compaction crash recovery (appending beside a
-    pre-promote ``_old_codes`` rename would create the unrecoverable
-    both-exist state); appends must not run concurrently with a
-    compaction (quiesced-store contract, see recover_store_slices)."""
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    spark = embeddings.sparkSession
-    mins, scales = _sq_stored_model_arrays(spark, path)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        _sq_encode_expr(F.col("vec"), mins, scales).alias("code"),
-    ).write.mode("append").parquet(f"{path}/codes")
+    code) rows. Dims that drift outside the trained range clip, exactly
+    as FAISS's trained ScalarQuantizer does. Add-after-train, recovery
+    at entry and the quiesced-store contract: README.md, "ANN stores"."""
+    _append_store(embeddings, path, id_col, vec_col)
 
 
 def sq_query_stored(
@@ -2833,29 +2471,20 @@ def sq_query_stored(
     anywhere in the read path (plan-asserted): decode, asymmetric dot,
     shortlist, and refine are all JVM zip_with/aggregate folds. Output
     is identical to sq_ann at the same parameters on the same trained
-    model (pytest-pinned): the code round-trip is exact, so persisting
-    changes the I/O shape, not a single similarity.
-
-    Like every stored reader, entry runs crash recovery for an
-    interrupted compact_pq_index; stored queries must not run
-    concurrently with a compaction (quiesced-store contract)."""
+    model (pytest-pinned). Recovers at entry; quiesced-store contract
+    (README.md, "ANN stores")."""
     if query_ids is None:
         query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
+    return _query_store(
+        spark,
+        path,
+        embeddings,
+        query_ids,
+        k=k,
+        rerank_factor=rerank_factor,
+        id_col=id_col,
+        vec_col=vec_col,
     )
-
-    recover_store_slices(path)
-    mins, scales = _sq_stored_model_arrays(spark, path)
-    enc = spark.read.parquet(f"{path}/codes").select(
-        id_col,
-        "norm",
-        _sq_decode_expr(F.col("code"), mins, scales).alias("deq"),
-    )
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    return _sq_score_refine(base, enc, query_ids, k, rerank_factor, id_col)
 
 
 def ivfsq_build_index(
@@ -2867,72 +2496,28 @@ def ivfsq_build_index(
     vec_col: str = "embedding",
     train_cap: int | None = DEFAULT_TRAIN_CAP,
 ) -> None:
-    """Phase 1 of the two-phase IVF-SQ — the composition the SQ8
-    docstring promises ("SQ shrinks WHAT is stored, IVF shrinks WHICH
-    vectors are scored; compose with IVF for both"), FAISS's
-    IndexIVFScalarQuantizer(QT_8bit): train the coarse quantizer AND
-    the per-dimension scalar quantizer, then persist
-
-      ``<path>/centroids``  the k (cid, center) rows;
-      ``<path>/model``      the SQ model row (dim, vmin, guarded
-                            scale) — same schema as the flat SQ store;
-      ``<path>/invfile``    (vec_id, norm, code array<tinyint>)
-                            partitioned BY cid — ONE byte per
-                            dimension, clustered per cell so a probe
-                            of p cells reads exactly p partition
-                            directories.
-
-    The ``invfile`` name is deliberate: compact_ivf_index and
-    ivf-style crash recovery apply UNCHANGED (third cid-partitioned
-    flavor after raw-vector IVF and IVFADC). Both quantizers train on
-    the same bounded deterministic sample discipline as every other
-    trainer; neither retrains at append or query time.
+    """Phase 1 of the two-phase IVF-SQ — FAISS's
+    IndexIVFScalarQuantizer(QT_8bit): SQ shrinks WHAT is stored, IVF
+    shrinks WHICH vectors are scored. Trains the coarse quantizer and
+    the per-dimension scalar quantizer concurrently, then persists the
+    byte codes clustered per cell so a probe of p cells reads exactly
+    p partition directories (layout: README.md, "ANN stores";
+    compact_ivf_index applies unchanged). Neither quantizer retrains at
+    append or query time.
 
     Scale posture: k-means on the capped sample; SQ train is one
     narrow posexplode agg; encode+assign is a single projection (one
     Arrow crossing for the cid, JVM zip_with for the bytes); the
     partitionBy(cid) write is the only data movement.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-
-    # r13 (guide §2.6): the coarse k-means and the SQ (min, max) train
-    # are independent — run them concurrently from driver threads so
-    # the SQ agg's tasks back-fill the fit's executor tail. Each sees
-    # exactly the frame it saw sequentially, so both models are
-    # bit-identical; the KB-sized artifacts persist driver-side.
-    def _fit_coarse():
-        train = _cap_train_set(base, F.col("vec"), train_cap).select(
-            array_to_vector(F.col("vec")).alias("features")
-        )
-        kmodel = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
-        return [list(map(float, c)) for c in kmodel.clusterCenters()]
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_coarse = pool.submit(_fit_coarse)
-        f_sq = pool.submit(sq_train, embeddings, vec_col=vec_col)
-        centers = f_coarse.result()
-        vmin, vmax = f_sq.result()
-    scale = (vmax - vmin) / 255.0
-    scale[scale == 0.0] = 1.0
-    _write_centroids(path, centers)
-    _write_sq_model(path, vmin, scale)
-
-    mins = F.array(*[F.lit(float(v)) for v in vmin])
-    scales = F.array(*[F.lit(float(s)) for s in scale])
-    nearest_cid, _ = _ivf_udfs(np.array(centers), 1)
-    base.select(
+    _build_store(
+        embeddings,
+        path,
         id_col,
-        _vec_norm().alias("norm"),
-        _sq_encode_expr(F.col("vec"), mins, scales).alias("code"),
-        nearest_cid(F.col("vec")).alias("cid"),
-    ).write.mode("overwrite").partitionBy("cid").parquet(f"{path}/invfile")
+        vec_col,
+        coarse=(num_centroids, max_iter, train_cap),
+        sq=True,
+    )
 
 
 def ivfsq_append_to_index(
@@ -2943,28 +2528,10 @@ def ivfsq_append_to_index(
 ) -> None:
     """Incremental maintenance for the IVF-SQ store: assign a NEW batch
     to the EXISTING centroids and byte-encode it against the STORED SQ
-    model, then append into the cid-partitioned inverted file —
-    add-after-train on BOTH quantizers (cell boundaries stay fixed,
-    out-of-range dims clip; rebuild cadence is the drift knob). Entry
-    runs compaction crash recovery; appends must not run concurrently
-    with a compaction (quiesced-store contract)."""
-    spark = embeddings.sparkSession
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    nearest_cid, _ = _ivf_udfs(_read_centroid_matrix(path), 1)
-    mins, scales = _sq_stored_model_arrays(spark, path)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        _sq_encode_expr(F.col("vec"), mins, scales).alias("code"),
-        nearest_cid(F.col("vec")).alias("cid"),
-    ).write.mode("append").partitionBy("cid").parquet(f"{path}/invfile")
+    model, then append into the cid-partitioned inverted file.
+    Add-after-train on BOTH quantizers, recovery at entry and the
+    quiesced-store contract: README.md, "ANN stores"."""
+    _append_store(embeddings, path, id_col, vec_col)
 
 
 def ivfsq_query_stored(
@@ -2980,72 +2547,34 @@ def ivfsq_query_stored(
 ) -> DataFrame:
     """Phase 2 of the two-phase IVF-SQ: answer top-k from the persisted
     index with BOTH pruning axes live — which cells (the broadcast
-    probe join's dynamic partition pruning reads only probed ``cid=N``
-    directories) and how many bytes (1 byte/dim + one norm per scored
-    vector). Probe selection is the shared Arrow centroid-distance UDF
-    over the |Q| query rows ONLY; everything corpus-side is JVM — the
-    affine byte decode (model as 2·dim plan literals), the asymmetric
-    dot against the exact broadcast query, and the k·rerank_factor
-    shortlist. Exact-refine candidates and query vectors come from the
-    PRIMARY table; the index holds no float vectors.
+    probe join reads only probed ``cid=N`` directories) and how many
+    bytes (1 byte/dim + one norm per scored vector). Probe selection is
+    the shared Arrow centroid-distance UDF over the |Q| query rows ONLY;
+    everything corpus-side is JVM — the affine byte decode, the
+    asymmetric dot against the exact broadcast query, and the
+    k·rerank_factor shortlist. Exact-refine candidates and query vectors
+    come from the PRIMARY table; the index holds no float vectors.
 
     With nprobe >= num_centroids this degrades gracefully to exactly
     the flat SQ store's answers (pytest-pinned: the cells partition
     the corpus, and the SQ model is the same global min/max), so cell
     pruning is the ONLY approximation added on top of SQ8 — the same
     recall ladder FAISS documents for IndexIVFScalarQuantizer.
-
-    Entry runs compaction crash recovery; stored queries must not run
-    concurrently with a compaction (quiesced-store contract)."""
+    Recovers at entry; quiesced-store contract (README.md, "ANN
+    stores")."""
     if query_ids is None:
         query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
+    return _query_store(
+        spark,
+        path,
+        embeddings,
+        query_ids,
+        k=k,
+        nprobe=nprobe,
+        rerank_factor=rerank_factor,
+        id_col=id_col,
+        vec_col=vec_col,
     )
-
-    recover_store_slices(path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    mins, scales = _sq_stored_model_arrays(spark, path)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    probes = (
-        base.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-            _vec_norm().alias("qnorm"),
-        )
-        .withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
-    )
-    inv = spark.read.parquet(f"{path}/invfile").select(
-        id_col,
-        "norm",
-        _sq_decode_expr(F.col("code"), mins, scales).alias("deq"),
-        "cid",
-    )
-    scored = (
-        inv.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                dot(F.col("qvec"), F.col("deq"))
-                / (F.col("qnorm") * F.col("norm")),
-                6,
-            ).alias("approx_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine_topk(base, shortlist, query_ids, k, id_col)
 
 
 def semantic_decontaminate(
@@ -3087,9 +2616,7 @@ def semantic_decontaminate(
     recall risk: a contaminated-set miss is a training-data leak, so
     approximation budgets belong on dedup, not here.
     """
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
+    base = _vectors(embeddings, id_col, vec_col)
     # LEFT join on TRUE, not a cross join: with a non-empty eval side
     # the two are identical, but an EMPTY eval suite must yield every
     # training row with zero hits (nothing to decontaminate against),
@@ -3168,60 +2695,13 @@ def ivfsq_range_query_stored(
     runs entirely JVM-side on 1 byte/dim; the exact-verify join moves
     only the prefiltered survivors. Entry runs compaction crash
     recovery (quiesced-store contract)."""
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
+    return _query_store(
+        spark,
+        path,
+        embeddings,
+        query_ids,
+        nprobe=nprobe,
+        id_col=id_col,
+        vec_col=vec_col,
+        radius=radius,
     )
-
-    recover_store_slices(path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    mrow = _read_store_rows(f"{path}/model")[0]
-    mins = F.array(*[F.lit(float(v)) for v in mrow["vmin"]])
-    scales = F.array(*[F.lit(float(s)) for s in mrow["scale"]])
-    c_bound = float(
-        np.sqrt(((np.array(mrow["scale"]) / 2.0) ** 2).sum())
-    )
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    probes = (
-        base.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-            _vec_norm().alias("qnorm"),
-        )
-        .withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
-    )
-    inv = spark.read.parquet(f"{path}/invfile").select(
-        id_col,
-        "norm",
-        _sq_decode_expr(F.col("code"), mins, scales).alias("deq"),
-        "cid",
-    )
-    approx = dot(F.col("qvec"), F.col("deq")) / (
-        F.col("qnorm") * F.col("norm")
-    )
-    cand = (
-        inv.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .filter(
-            approx
-            >= radius - F.lit(c_bound) / F.col("norm") - F.lit(1e-6)
-        )
-        .select(
-            "query_id",
-            "qvec",
-            F.col(id_col).alias("neighbor_id"),
-        )
-    )
-    verified = cand.join(
-        base.select(
-            F.col(id_col).alias("neighbor_id"), F.col("vec")
-        ),
-        "neighbor_id",
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine_sim"),
-    )
-    return verified.filter(F.col("cosine_sim") >= radius)

@@ -125,14 +125,3 @@ def format_word_count_lines(counts: DataFrame) -> DataFrame:
             "value"
         )
     )
-
-
-def write_partitioned_counts(counts: DataFrame, out_dir: str, partitions: int = 16) -> None:
-    """Partitioned text sink — one part file per hash partition of words,
-    the Spark-native form of the reference's 16 per-reducer output files
-    (src/omp_count_words.cpp:134-142)."""
-    (
-        format_word_count_lines(counts.repartition(partitions, "word"))
-        .write.mode("overwrite")
-        .text(out_dir)
-    )

@@ -1199,58 +1199,6 @@ def test_sq_store_append_then_compact_answers_unchanged(
     assert pre == post
 
 
-def test_sq_store_recovers_at_reader_and_appender_entry(
-    spark, embeddings, tmp_path
-):
-    """The SQ store joins the uniform reader/appender recovery
-    contract: a compaction crashed at EITHER crash point heals at the
-    next sq_query_stored or sq_append_to_index open — same
-    recover_store_slices state machine as the PQ/IVF stores."""
-    import os
-
-    from pyspark.sql import Row
-
-    idx = str(tmp_path / "sq_crash")
-    similarity.sq_build_index(embeddings, idx)
-    topk = sorted(
-        map(
-            tuple,
-            similarity.sq_query_stored(
-                spark, idx, embeddings, query_ids=list(range(10)), k=5
-            ).collect(),
-        )
-    )
-
-    # pre-promote crash (complete staging, live dir renamed away) →
-    # reader heals and answers identically
-    spark.read.parquet(f"{idx}/codes").write.parquet(f"{idx}/_compact")
-    os.replace(f"{idx}/codes", f"{idx}/_old_codes")
-    assert (
-        sorted(
-            map(
-                tuple,
-                similarity.sq_query_stored(
-                    spark, idx, embeddings, query_ids=list(range(10)), k=5
-                ).collect(),
-            )
-        )
-        == topk
-    )
-    assert os.path.isdir(f"{idx}/codes")
-    assert not os.path.exists(f"{idx}/_compact")
-    assert not os.path.exists(f"{idx}/_old_codes")
-
-    # post-promote crash (dead _old_codes) → appender heals, appends
-    n_before = spark.read.parquet(f"{idx}/codes").count()
-    os.makedirs(f"{idx}/_old_codes")
-    similarity.sq_append_to_index(
-        spark.createDataFrame([Row(vec_id=10**6, embedding=[1.0] * 64)]),
-        idx,
-    )
-    assert not os.path.exists(f"{idx}/_old_codes")
-    assert spark.read.parquet(f"{idx}/codes").count() == n_before + 1
-
-
 def test_ivfsq_exactness_recovery_and_recall(spark, embeddings, tmp_path):
     """The IVF×SQ composition: (a) with nprobe >= num_centroids (every
     cell probed) the stored answers EQUAL the flat SQ store's — the
@@ -1805,18 +1753,11 @@ def test_compact_ivf_index_preserves_answers_and_folds_files(
     compact_ivf_index must (a) fold to exactly one file per non-empty
     cell, (b) preserve row content exactly, and (c) leave stored top-k
     AND range answers bit-identical — maintenance never changes
-    semantics. Crash states recover via the shared state machine: a
-    pre-promote crash (complete _compact, invfile renamed away) rolls
-    back at the next reader/compaction entry; a post-promote crash's
-    dead rename is cleared."""
+    semantics. Crash recovery: test_store_recovers_at_entry."""
     import glob
-    import os
 
     from pyspark.sql import functions as F
 
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
     from parallel_map_reduce_spark.operators.queries_llm import (
         KNN_QUERY_IDS,
         RANGE_RADIUS,
@@ -1864,28 +1805,6 @@ def test_compact_ivf_index_preserves_answers_and_folds_files(
         ).collect())
     ) == range_before
 
-    # pre-promote crash: staging written, live invfile renamed away —
-    # the stored reader's entry recovery must roll it back and answer.
-    spark.read.parquet(f"{idx}/invfile").repartition("cid").write.partitionBy(
-        "cid"
-    ).parquet(f"{idx}/_compact")
-    os.replace(f"{idx}/invfile", f"{idx}/_old_invfile")
-    assert sorted(
-        map(tuple, similarity.ivf_query_stored(
-            spark, idx, query_ids=KNN_QUERY_IDS, k=5
-        ).collect())
-    ) == topk_before
-    assert os.path.isdir(f"{idx}/invfile")
-    assert not os.path.exists(f"{idx}/_compact")
-
-    # post-promote crash: dead _old_invfile next to the promoted file —
-    # recovery clears it, content unchanged.
-    os.makedirs(f"{idx}/_old_invfile")
-    assert recover_store_slices(idx) == "cleared_dead"
-    assert sorted(
-        (r["vec_id"], r["cid"])
-        for r in spark.read.parquet(f"{idx}/invfile").collect()
-    ) == rows_before
 
 
 def _ism_reference(batch_rows, kept_rows, threshold):
@@ -2288,126 +2207,6 @@ def test_ivfpq_append_matches_stored_model_encoding(spark, embeddings, tmp_path)
     ) == topk_before
 
 
-def test_pq_and_ivfadc_stores_recover_at_reader_and_appender_entry(
-    spark, embeddings, tmp_path
-):
-    """r10 closes the r9 deferral: the PQ and IVFADC stored readers —
-    and all appenders — run recover_store_slices at entry, so a
-    compaction that crashed at EITHER crash point heals at the next
-    open instead of failing with a missing-path read (the ADVICE r9
-    availability gap) or creating an unrecoverable both-exist state
-    (an append beside a pre-promote _old_ rename)."""
-    import os
-    from pyspark.sql import functions as F
-
-    from pyspark.sql import Row
-
-    # --- PQ flat-codes store ------------------------------------------
-    pq_idx = str(tmp_path / "pq_idx_crash")
-    similarity.pq_build_index(
-        embeddings.filter(F.col("vec_id") % 2 == 0), pq_idx
-    )
-    similarity.pq_append_to_index(
-        embeddings.filter(F.col("vec_id") % 2 == 1), pq_idx
-    )
-    topk = sorted(
-        map(tuple, similarity.pq_query_stored(
-            spark, pq_idx, embeddings, query_ids=list(range(10)), k=5
-        ).collect())
-    )
-    codes_rows = sorted(
-        (r["vec_id"], r["norm"], tuple(r["code"]))
-        for r in spark.read.parquet(f"{pq_idx}/codes").collect()
-    )
-
-    def _crash_pre_promote(path, name):
-        # complete staging + live dir renamed away: the instant before
-        # the promote in compact_*_index
-        spark.read.parquet(f"{path}/{name}").write.parquet(
-            f"{path}/_compact"
-        )
-        os.replace(f"{path}/{name}", f"{path}/_old_{name}")
-
-    # pre-promote crash → reader heals and answers identically
-    _crash_pre_promote(pq_idx, "codes")
-    assert sorted(
-        map(tuple, similarity.pq_query_stored(
-            spark, pq_idx, embeddings, query_ids=list(range(10)), k=5
-        ).collect())
-    ) == topk
-    assert os.path.isdir(f"{pq_idx}/codes")
-    assert not os.path.exists(f"{pq_idx}/_compact")
-    assert not os.path.exists(f"{pq_idx}/_old_codes")
-
-    # post-promote crash (dead _old_codes) → appender heals, then
-    # appends; store holds old rows + the new batch, nothing doubled
-    os.makedirs(f"{pq_idx}/_old_codes")
-    extra = spark.createDataFrame(
-        [Row(vec_id=10**6, embedding=[1.0] * 64)]
-    )
-    similarity.pq_append_to_index(extra, pq_idx)
-    after_rows = sorted(
-        (r["vec_id"], r["norm"], tuple(r["code"]))
-        for r in spark.read.parquet(f"{pq_idx}/codes").collect()
-    )
-    assert not os.path.exists(f"{pq_idx}/_old_codes")
-    assert len(after_rows) == len(codes_rows) + 1
-    assert [t for t in after_rows if t[0] != 10**6] == codes_rows
-
-    # pre-promote crash → appender must ROLL BACK first, not write a
-    # fresh codes dir beside the only copy
-    _crash_pre_promote(pq_idx, "codes")
-    similarity.pq_append_to_index(
-        spark.createDataFrame([Row(vec_id=10**6 + 1, embedding=[2.0] * 64)]),
-        pq_idx,
-    )
-    final_ids = sorted(
-        r["vec_id"]
-        for r in spark.read.parquet(f"{pq_idx}/codes").collect()
-    )
-    assert final_ids == sorted(
-        [t[0] for t in after_rows] + [10**6 + 1]
-    )
-
-    # --- IVFADC cid-partitioned store ---------------------------------
-    adc_idx = str(tmp_path / "adc_idx_crash")
-    similarity.ivfpq_build_index(
-        embeddings.filter(F.col("vec_id") % 2 == 0), adc_idx
-    )
-    adc_topk = sorted(
-        map(tuple, similarity.ivfpq_query_stored(
-            spark, adc_idx, embeddings, query_ids=list(range(10)), k=5
-        ).collect())
-    )
-    spark.read.parquet(f"{adc_idx}/invfile").repartition(
-        "cid"
-    ).write.partitionBy("cid").parquet(f"{adc_idx}/_compact")
-    os.replace(f"{adc_idx}/invfile", f"{adc_idx}/_old_invfile")
-    # the IVFADC stored reader (which r9 left without recovery) heals
-    assert sorted(
-        map(tuple, similarity.ivfpq_query_stored(
-            spark, adc_idx, embeddings, query_ids=list(range(10)), k=5
-        ).collect())
-    ) == adc_topk
-    assert os.path.isdir(f"{adc_idx}/invfile")
-    assert not os.path.exists(f"{adc_idx}/_old_invfile")
-
-    # pre-promote crash then APPEND: rollback first, rows all present
-    n_rows = spark.read.parquet(f"{adc_idx}/invfile").count()
-    spark.read.parquet(f"{adc_idx}/invfile").repartition(
-        "cid"
-    ).write.partitionBy("cid").parquet(f"{adc_idx}/_compact")
-    os.replace(f"{adc_idx}/invfile", f"{adc_idx}/_old_invfile")
-    similarity.ivfpq_append_to_index(
-        embeddings.filter(F.col("vec_id") % 2 == 1), adc_idx
-    )
-    n_odd = embeddings.filter(F.col("vec_id") % 2 == 1).count()
-    assert (
-        spark.read.parquet(f"{adc_idx}/invfile").count() == n_rows + n_odd
-    )
-    assert not os.path.exists(f"{adc_idx}/_old_invfile")
-
-
 def test_ism_chain_matches_duckdb_oracle(spark, sf_dir):
     """Driver-compare mirror for the r10 chain composite: run
     incremental_semantic_dedup_chain and its unrolled DuckDB oracle
@@ -2754,44 +2553,6 @@ def test_quality_classifier_is_partitioning_invariant(spark, docs):
     assert a == b == c
 
 
-def test_ivfsq_store_recovers_at_range_reader_entry(
-    spark, embeddings, tmp_path
-):
-    """The byte store's RANGE reader joins the uniform recovery
-    contract too: a compaction crashed pre-promote (complete staging,
-    live invfile renamed away) heals at the next
-    ivfsq_range_query_stored open and answers identically."""
-    import os
-
-    idx = str(tmp_path / "ivfsq_range_crash")
-    similarity.ivfsq_build_index(embeddings, idx)
-    qids = list(range(10))
-    want = sorted(
-        map(
-            tuple,
-            similarity.ivfsq_range_query_stored(
-                spark, idx, embeddings, qids, 0.25
-            ).collect(),
-        )
-    )
-    spark.read.parquet(f"{idx}/invfile").repartition("cid").write.partitionBy(
-        "cid"
-    ).parquet(f"{idx}/_compact")
-    os.replace(f"{idx}/invfile", f"{idx}/_old_invfile")
-    got = sorted(
-        map(
-            tuple,
-            similarity.ivfsq_range_query_stored(
-                spark, idx, embeddings, qids, 0.25
-            ).collect(),
-        )
-    )
-    assert got == want
-    assert os.path.isdir(f"{idx}/invfile")
-    assert not os.path.exists(f"{idx}/_old_invfile")
-    assert not os.path.exists(f"{idx}/_compact")
-
-
 def test_quality_classifier_matches_duckdb_oracle(spark, sf_dir):
     """Driver-compare mirror for the GD trainer AND its inference
     pass: run both registered queries and their unrolled-descent
@@ -2990,3 +2751,237 @@ def test_ivf_append_with_meta_cols_serves_filtered_queries(spark, embeddings, tm
     s = sorted(map(tuple, stored.select("query_id", "neighbor_id", "cosine_sim").collect()))
     b = sorted(map(tuple, brute.select("query_id", "neighbor_id", "cosine_sim").collect()))
     assert s == b
+
+
+# --- stored-index lifecycle on a tiny input ------------------------------
+
+
+def _tiny_vectors(spark):
+    """96 seeded 16-dim vectors in one partition: ids 0-63 build a
+    store, ids 64-95 are the appended batch."""
+    import numpy as np
+
+    vecs = np.random.default_rng(7).normal(size=(96, 16))
+    rows = [
+        Row(vec_id=i, embedding=[float(x) for x in v]) for i, v in enumerate(vecs)
+    ]
+    frame = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    return frame, frame.filter(F.col("vec_id") < 64), frame.filter(
+        F.col("vec_id") >= 64
+    )
+
+
+_TINY_QIDS = [0, 1, 2]
+
+# layout -> (build, append, row table, {entry: stored reader})
+_STORE_LAYOUTS = {
+    "ivf": (
+        lambda base, p: similarity.ivf_build_index(
+            base, p, num_centroids=4, max_iter=2
+        ),
+        similarity.ivf_append_to_index,
+        "invfile",
+        {
+            "query": lambda s, p, f: similarity.ivf_query_stored(
+                s, p, _TINY_QIDS, k=3, nprobe=2
+            ),
+            "range": lambda s, p, f: similarity.ivf_range_query_stored(
+                s, p, _TINY_QIDS, 0.3, nprobe=2
+            ),
+        },
+    ),
+    "pq": (
+        lambda base, p: similarity.pq_build_index(base, p, m=4, codes=8),
+        similarity.pq_append_to_index,
+        "codes",
+        {
+            "query": lambda s, p, f: similarity.pq_query_stored(
+                s, p, f, _TINY_QIDS, k=3
+            ),
+        },
+    ),
+    "ivfpq": (
+        lambda base, p: similarity.ivfpq_build_index(
+            base, p, num_centroids=4, m=4, codes=8, max_iter=2
+        ),
+        similarity.ivfpq_append_to_index,
+        "invfile",
+        {
+            "query": lambda s, p, f: similarity.ivfpq_query_stored(
+                s, p, f, _TINY_QIDS, k=3, nprobe=2
+            ),
+        },
+    ),
+    "sq": (
+        similarity.sq_build_index,
+        similarity.sq_append_to_index,
+        "codes",
+        {
+            "query": lambda s, p, f: similarity.sq_query_stored(
+                s, p, f, _TINY_QIDS, k=3
+            ),
+        },
+    ),
+    "ivfsq": (
+        lambda base, p: similarity.ivfsq_build_index(
+            base, p, num_centroids=4, max_iter=2
+        ),
+        similarity.ivfsq_append_to_index,
+        "invfile",
+        {
+            "query": lambda s, p, f: similarity.ivfsq_query_stored(
+                s, p, f, _TINY_QIDS, k=3, nprobe=2
+            ),
+            "range": lambda s, p, f: similarity.ivfsq_range_query_stored(
+                s, p, f, _TINY_QIDS, 0.3, nprobe=2
+            ),
+        },
+    ),
+}
+
+
+def _table_rows(spark, path):
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in spark.read.parquet(path).collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def tiny_stores(spark, tmp_path_factory):
+    """One freshly built store per layout, with its rows and every
+    reader's answers, for the crash cases to copy and compare against.
+    The five layouts are built concurrently to keep the fixture short."""
+    from functools import partial
+
+    from parallel_map_reduce_spark.operators.curation_extras import _overlap
+
+    frame, base, _ = _tiny_vectors(spark)
+    root = tmp_path_factory.mktemp("tiny_stores")
+
+    def store(layout):
+        build, _, table, readers = _STORE_LAYOUTS[layout]
+        path = str(root / layout)
+        build(base, path)
+        answers = {
+            entry: sorted(map(tuple, read(spark, path, frame).collect()))
+            for entry, read in readers.items()
+        }
+        return path, _table_rows(spark, f"{path}/{table}"), answers
+
+    return dict(
+        zip(_STORE_LAYOUTS, _overlap(*(partial(store, l) for l in _STORE_LAYOUTS)))
+    )
+
+
+_RECOVERY_CASES = [
+    (layout, entry, crash)
+    for layout, (_, _, _, readers) in _STORE_LAYOUTS.items()
+    for entry in (*readers, "append")
+    for crash in ("pre_promote", "post_promote")
+]
+
+
+@pytest.mark.parametrize(
+    "layout,entry,crash",
+    _RECOVERY_CASES,
+    ids=["-".join(case) for case in _RECOVERY_CASES],
+)
+def test_store_recovers_at_entry(spark, tiny_stores, tmp_path, layout, entry, crash):
+    """Every stored reader and appender runs the compaction crash
+    recovery at entry. A pre-promote crash (complete ``_compact``
+    staging, live table renamed to ``_old_<table>``) rolls back; a
+    post-promote crash's dead ``_old_<table>`` is cleared. Readers then
+    answer exactly as before the crash; appenders add the batch beside
+    the unchanged old rows instead of writing a fresh table next to the
+    only copy. No ``_compact`` or ``_old_*`` dir is left."""
+    import os
+    import shutil
+
+    _, append, table, readers = _STORE_LAYOUTS[layout]
+    template, rows, answers = tiny_stores[layout]
+    path = str(tmp_path / layout)
+    shutil.copytree(template, path)
+    live, old = f"{path}/{table}", f"{path}/_old_{table}"
+    if crash == "pre_promote":
+        shutil.copytree(live, f"{path}/_compact")
+        os.replace(live, old)
+    else:
+        os.makedirs(old)
+
+    frame, _, batch = _tiny_vectors(spark)
+    if entry == "append":
+        append(batch, path)
+        after = _table_rows(spark, live)
+        assert [r for r in after if r[0] < 64] == rows
+        assert sorted(r[0] for r in after if r[0] >= 64) == list(range(64, 96))
+    else:
+        got = sorted(map(tuple, readers[entry](spark, path, frame).collect()))
+        assert got == answers[entry]
+    assert os.path.isdir(live)
+    assert not os.path.exists(f"{path}/_compact")
+    assert not any(name.startswith("_old_") for name in os.listdir(path))
+
+
+def test_rebuild_over_another_layout_drops_its_sidecar(spark, tiny_stores, tmp_path):
+    """Stored readers infer the layout from which sidecars exist, so an
+    IVF build over an SQ8 store's directory must remove the SQ8 model;
+    the IVF reader then answers as on a fresh directory."""
+    import os
+
+    frame, base, _ = _tiny_vectors(spark)
+    build, _, _, readers = _STORE_LAYOUTS["ivf"]
+    path = str(tmp_path / "reused")
+    similarity.sq_build_index(base, path)
+    build(base, path)
+    assert not os.path.exists(f"{path}/model")
+    got = sorted(map(tuple, readers["query"](spark, path, frame).collect()))
+    assert got == tiny_stores["ivf"][2]["query"]
+
+
+def _jobs_started(spark, fn):
+    """Number of Spark jobs ``fn()`` starts, taken by diffing the status
+    store's job list around the call. A job group would miss the jobs
+    concurrent quantizer fits submit from pool threads."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs():
+        jsc.listenerBus().waitUntilEmpty()
+        found = jsc.statusStore().jobsList(sc._jvm.java.util.ArrayList())
+        return [found.apply(i).jobId() for i in range(found.size())]
+
+    mark = max(jobs(), default=-1)
+    fn()
+    return sum(1 for j in jobs() if j > mark)
+
+
+# Sidecars (centroids and models) are read and written on the driver,
+# so none of them may add a Spark job.
+_LIFECYCLE_JOBS = {
+    "ivf": {"build": 13, "append": 1, "query": 4, "compact": 3},
+    "pq": {"build": 16, "append": 1, "query": 7, "compact": 3},
+    "sq": {"build": 2, "append": 1, "query": 6, "compact": 3},
+}
+
+
+@pytest.mark.parametrize("layout", sorted(_LIFECYCLE_JOBS))
+def test_stored_index_lifecycle_job_counts(spark, tmp_path, layout):
+    """Pins how many Spark jobs build, append, a top-k query and compact
+    each cost on a tiny single-partition input."""
+    frame, base, batch = _tiny_vectors(spark)
+    path = str(tmp_path / layout)
+    build, append, _, readers = _STORE_LAYOUTS[layout]
+    compact = (
+        similarity.compact_ivf_index if layout == "ivf" else similarity.compact_pq_index
+    )
+    steps = {
+        "build": lambda: build(base, path),
+        "append": lambda: append(batch, path),
+        "query": lambda: readers["query"](spark, path, frame).collect(),
+        "compact": lambda: compact(spark, path),
+    }
+    got = {name: _jobs_started(spark, step) for name, step in steps.items()}
+    assert got == _LIFECYCLE_JOBS[layout]
