@@ -27,6 +27,7 @@ from parallel_map_reduce_spark.functions.hashing import (
     universal_hash,
     universal_params,
 )
+from parallel_map_reduce_spark.operators._scratch import in_scratch
 
 
 # ---------------------------------------------------------------------------
@@ -2650,15 +2651,13 @@ def streaming_incremental_dedup(
         raise ValueError(f"n_batches must be >= 1, got {n_batches}")
     import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     from parallel_map_reduce_spark.operators.dedup import minhash_signatures
     from parallel_map_reduce_spark.streaming.windowed import stream_docs_dir
 
     mod = 2 * n_batches
-    run_dir = tempfile.mkdtemp(prefix="pmr_spark_stream_incdedup_")
-    try:
+
+    def run(run_dir: str) -> DataFrame:
         stage = os.path.join(run_dir, "feed")
         store = os.path.join(run_dir, "kept_store")
         sig_store = os.path.join(run_dir, "kept_sigs")
@@ -2737,9 +2736,9 @@ def streaming_incremental_dedup(
             .start()
         )
         q.awaitTermination()
-        return _read_all(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+        return _read_all(out)
+
+    return in_scratch("stream_incdedup", run)
 
 
 def incremental_lsh_dedup_chain_oracle_sql(
@@ -3290,14 +3289,12 @@ def incremental_lsh_dedup_compacted(
             f"compact_after must be in [1, {n_batches}], got {compact_after}"
         )
     import os
-    import shutil
-    import tempfile
 
     from parallel_map_reduce_spark.operators.dedup import minhash_signatures
 
     mod = 2 * n_batches
-    run_dir = tempfile.mkdtemp(prefix="pmr_spark_compact_incdedup_")
-    try:
+
+    def run(run_dir: str) -> DataFrame:
         store = os.path.join(run_dir, "kept_store")
         sig_store = os.path.join(run_dir, "kept_sigs")
         out = os.path.join(run_dir, "statuses")
@@ -3355,6 +3352,6 @@ def incremental_lsh_dedup_compacted(
                             f"compaction folded {folded} slices at {p}, "
                             f"expected {expected}"
                         )
-        return _read_all(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+        return _read_all(out)
+
+    return in_scratch("compact_incdedup", run)

@@ -19,6 +19,9 @@ every deterministic step is DuckDB-oracle-checkable.
 
 from __future__ import annotations
 
+import math
+from fractions import Fraction
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -340,23 +343,39 @@ def _jaccard_pairs_from_index(
     )
 
 
-def ranked_shingle_index(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, shingle) index ranked for prefix filtering: each document's
-    shingles ordered by (corpus document frequency asc, shingle asc) — one
-    deterministic global total order — with per-doc rank ``_rn`` and size
-    ``n_sh``. The prefix tier joins only rows with
-    ``_rn <= n_sh - ceil(t*n_sh) + 1``; exposed so tests can assert the
-    exclusion property (hot shingles rank last, outside every prefix)."""
-    from pyspark.sql import Window
+def _threshold_ratio(threshold: float) -> tuple[int, int]:
+    """``threshold`` as p/q in lowest terms, read from its decimal form:
+    exact for any threshold written with at most 9 decimals (0.2 → 1/5);
+    otherwise the largest 9-decimal ratio below it, which only lengthens
+    prefixes and lowers alpha — the lossless direction. With q <= 10^9,
+    every product in _ppjoin_bounds stays inside a long for set sizes
+    up to 10^9 shingles."""
+    r = Fraction(str(threshold))
+    if r.denominator > 10**9:
+        r = Fraction(math.floor(r * 10**9), 10**9)
+    return r.numerator, r.denominator
 
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy(id_col).orderBy(F.col("_df").asc(), F.col("shingle").asc())
-    wn = Window.partitionBy(id_col)
-    return sh.join(dfreq, "shingle").select(
-        F.col(id_col),
-        F.col("shingle"),
-        F.row_number().over(w).alias("_rn"),
-        F.count(F.lit(1)).over(wn).alias("n_sh"),
+
+def _ppjoin_bounds(threshold: float) -> tuple[Column, Column, Column, Column]:
+    """PPJoin's bounds for jaccard >= t = p/q, in exact long arithmetic
+    (ceil(x·a/b) = (x·a + b - 1) div b) — a double ``ceil(n·frac)`` is
+    off by one once n·frac's rounding error passes its epsilon guard,
+    which at t=0.2 happens by n_sh = 999,999,999:
+
+    - probe prefix length  n_sh - ceil(t·n_sh) + 1;
+    - index prefix length  n_sh - ceil(2t/(1+t)·n_sh) + 1;
+    - size-ratio prune     t·n_l <= n_s;
+    - required overlap     alpha = ceil(t/(1+t)·(n_s + n_l))."""
+    p, q = _threshold_ratio(threshold)
+
+    def ceil_ratio(x: str, num: int, den: int) -> Column:
+        return F.expr(f"(({x}) * {num} + {den - 1}) div {den}")
+
+    return (
+        F.col("n_sh") - ceil_ratio("n_sh", p, q) + 1,
+        F.col("n_sh") - ceil_ratio("n_sh", 2 * p, p + q) + 1,
+        F.col("n_l") * p <= F.col("n_s") * q,
+        ceil_ratio("n_s + n_l", p, p + q),
     )
 
 
@@ -411,6 +430,7 @@ def _jaccard_pairs_prefix_filtered(
     )
     from pyspark.sql import Window
 
+    probe_len, index_len, size_ok, alpha = _ppjoin_bounds(threshold)
     # Rank tiebreak by _sid, not the shingle string: the prefix-filter
     # theorem needs only SOME global total order shared by all documents
     # ((_df, _sid) is total since _sid is unique), and longs sort/ship
@@ -424,10 +444,7 @@ def _jaccard_pairs_prefix_filtered(
             F.row_number().over(w).alias("_rn"),
             F.count(F.lit(1)).over(wn).alias("n_sh"),
         )
-        .filter(
-            F.col("_rn")
-            <= F.col("n_sh") - F.ceil(F.col("n_sh") * F.lit(threshold)) + 1
-        )
+        .filter(F.col("_rn") <= probe_len)
         .select(id_col, "_sid", "n_sh", "_rn")
         .localCheckpoint(eager=True)
     )
@@ -450,18 +467,8 @@ def _jaccard_pairs_prefix_filtered(
     #    distinct. Lossless: the first common shingle's row always
     #    certifies >= O >= alpha.
     #
-    # Epsilon guard: t/(1+t) and 2t/(1+t) are not exactly representable
-    # in binary; ceil(x·frac - 1e-9) can only err toward the EXACT ceil
-    # from above (longer prefix, smaller alpha) — the lossless direction;
-    # extra candidates cost only verify work, which is exact.
-    t = F.lit(threshold)
-    idx_frac = F.lit(2.0 * threshold / (1.0 + threshold))
-    alpha_frac = F.lit(threshold / (1.0 + threshold))
-    eps = F.lit(1e-9)
-    s_side = prefix.filter(
-        F.col("_rn")
-        <= F.col("n_sh") - F.ceil(F.col("n_sh") * idx_frac - eps) + 1
-    ).select(
+    # All four bounds are exact integer arithmetic (_ppjoin_bounds).
+    s_side = prefix.filter(F.col("_rn") <= index_len).select(
         F.col(id_col).alias("id_s"),
         "_sid",
         F.col("n_sh").alias("n_s"),
@@ -473,7 +480,6 @@ def _jaccard_pairs_prefix_filtered(
         F.col("n_sh").alias("n_l"),
         F.col("_rn").alias("_rl"),
     )
-    alpha = F.ceil((F.col("n_s") + F.col("n_l")) * alpha_frac - eps)
     candidates = (
         s_side.join(l_side, "_sid")
         .filter(
@@ -485,7 +491,7 @@ def _jaccard_pairs_prefix_filtered(
                 )
             )
             # size-ratio prune: only n_l·t <= n_s binds (n_s <= n_l)
-            & (F.col("n_l") * t <= F.col("n_s"))
+            & size_ok
             & (
                 F.lit(1)
                 + F.least(

@@ -14,31 +14,13 @@ each entry binds one parameterization to its pre-proven oracle SQL.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
-
-def _scratch_dir(kind: str, sf_dir: str) -> str:
-    """A per-invocation scratch path for queries that materialize an
-    intermediate store (signature store, published shards). Unique per
-    call: the returned DataFrames read the store lazily, so a shared
-    fixed path would race overwrite-vs-read between concurrent runs
-    (pytest + bench on one host, or two sf dirs sharing a basename).
-    Callers localCheckpoint their result and rmtree the dir before
-    returning (the _run_to_fresh_upsert discipline), so unique paths
-    don't accumulate parquet litter across bench/driver sweeps."""
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"pmr_spark_{kind}",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}-{uuid.uuid4().hex[:8]}",
-    )
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_map_reduce_spark.operators import curation_extras as ce
+from parallel_map_reduce_spark.operators._scratch import in_scratch
 from parallel_map_reduce_spark.registry import register
 from parallel_map_reduce_spark.sinks import publish_dataset
 from parallel_map_reduce_spark.sources.tables import load_table
@@ -617,18 +599,24 @@ def ism_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     kept = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter(F.col("vec_id") % 2 == 1)
-    idx = _scratch_dir("ism_index", sf_dir)
-    _similarity.ivf_build_index(kept, idx, num_centroids=_ISM_CELLS)
-    # r13 optimization (guide §1.2): ONE scored pass serves both tiers —
-    # the exact admission plus the pruned tier's cross ids derived from
-    # the same match list by probe position. Output bit-identical to the
-    # former two-run form (pytest-pinned); the pruned run's dead work
-    # (its within-batch Gram + components, never consumed here) is gone.
-    exact, p_cross = _similarity.incremental_semantic_dedup_with_audit(
-        spark, batch, idx, threshold=EMBED_DUP_THRESHOLD, nprobe=_ISM_NPROBE
-    )
-    exact = exact.localCheckpoint(eager=True)
-    shutil.rmtree(idx, ignore_errors=True)
+    p_cross = None
+
+    def admit(idx: str) -> DataFrame:
+        nonlocal p_cross
+        _similarity.ivf_build_index(kept, idx, num_centroids=_ISM_CELLS)
+        # r13 optimization (guide §1.2): ONE scored pass serves both
+        # tiers — the exact admission plus the pruned tier's cross ids
+        # derived from the same match list by probe position (p_cross
+        # reads the checkpointed matches, not the store, so it outlives
+        # the scratch dir). Output bit-identical to the former two-run
+        # form (pytest-pinned); the pruned run's dead work (its
+        # within-batch Gram + components, never consumed here) is gone.
+        exact, p_cross = _similarity.incremental_semantic_dedup_with_audit(
+            spark, batch, idx, threshold=EMBED_DUP_THRESHOLD, nprobe=_ISM_NPROBE
+        )
+        return exact
+
+    exact = in_scratch("ism_index", admit)
     e_cross = exact.filter(F.col("status") == "cross_dup").select("vec_id")
     audits = (
         p_cross.join(e_cross, "vec_id", "left_anti")
@@ -800,79 +788,84 @@ def q_incremental_semantic_dedup_chain(
 
     emb = load_table(spark, sf_dir, "embeddings")
     mod = 2 * _ISM_CHAIN_BATCHES
-    idx = _scratch_dir("ism_chain", sf_dir)
-    _similarity.ivf_build_index(
-        emb.filter(F.col("vec_id") % 2 == 0), idx, num_centroids=_ISM_CELLS
-    )
     per_batch: list[DataFrame] = []
     p_crosses: list[DataFrame] = []
     e_crosses: list[DataFrame] = []
-    for k in range(1, _ISM_CHAIN_BATCHES + 1):
-        batch = emb.filter(F.col("vec_id") % mod == 2 * k - 1)
-        # r13 optimization (guide §1.2): ONE scored pass per batch serves
-        # both tiers — the exact admission plus the pruned tier's cross
-        # ids derived from the same match list by probe position
-        # (similarity.incremental_semantic_dedup_with_audit). Output
-        # bit-identical to the former two-run form (pytest-pinned); the
-        # pruned run's dead work (its within-batch Gram + component
-        # fixpoint, never consumed by this row) is gone, as is its
-        # nprobe/16 share of the cross scoring and two eager
-        # checkpoints per batch.
-        exact, p_cross = _similarity.incremental_semantic_dedup_with_audit(
-            spark, batch, idx,
-            threshold=EMBED_DUP_THRESHOLD, nprobe=_ISM_NPROBE,
+
+    def admit_chain(idx: str) -> None:
+        _similarity.ivf_build_index(
+            emb.filter(F.col("vec_id") % 2 == 0), idx, num_centroids=_ISM_CELLS
         )
-        # eager=False fuses the checkpoint materialization into this
-        # batch's store-append job below (r13, guide §1.2): the append
-        # consumes surv_ids — every partition of exact — caching the
-        # lazily-marked blocks before the store mutates (append only
-        # adds cell files) and long before the post-loop rmtree, so the
-        # later aggregates read cache, never the deleted store.
-        exact = exact.localCheckpoint(eager=False)
-        e_cross = exact.filter(F.col("status") == "cross_dup").select(
-            "vec_id"
-        )
-        p_crosses.append(p_cross)
-        e_crosses.append(e_cross)
-        agg = exact.agg(
-            F.count(F.lit(1)).alias("n_batch"),
-            F.sum((F.col("status") == "cross_dup").cast("long")).alias(
-                "n_cross"
-            ),
-            F.sum((F.col("status") == "batch_dup").cast("long")).alias(
-                "n_batch_dup"
-            ),
-            F.sum((F.col("status") == "kept").cast("long")).alias("n_kept"),
-            F.sum(
-                F.when(
-                    F.col("status") == "cross_dup", F.col("dup_of")
-                ).otherwise(0)
-            ).alias("sum_cross_dup_of"),
-            F.sum(
-                F.when(
-                    F.col("status") == "batch_dup", F.col("dup_of")
-                ).otherwise(0)
-            ).alias("sum_batch_dup_of"),
-            F.sum(
-                F.when(F.col("status") == "kept", F.col("vec_id")).otherwise(
-                    0
-                )
-            ).alias("sum_kept_ids"),
-        ).withColumn("batch", F.lit(k).cast("long"))
-        subset = p_cross.join(e_cross, "vec_id", "left_anti").agg(
-            F.count(F.lit(1)).alias("n_false")
-        )
-        per_batch.append(agg.crossJoin(subset))
-        # The chain advances: the exact side's kept survivors join the
-        # persisted store (their full vectors, assigned against the
-        # FIXED centroids) before the next batch admits.
-        surv_ids = exact.filter(F.col("status") == "kept").select("vec_id")
-        _similarity.ivf_append_to_index(emb.join(surv_ids, "vec_id"), idx)
-        if k == 2:
-            # Mid-chain maintenance: batch 3 admits against the FOLDED
-            # store — compaction provably invisible to admission.
-            _similarity.compact_ivf_index(spark, idx)
-    shutil.rmtree(idx, ignore_errors=True)
+        for k in range(1, _ISM_CHAIN_BATCHES + 1):
+            batch = emb.filter(F.col("vec_id") % mod == 2 * k - 1)
+            # r13 optimization (guide §1.2): ONE scored pass per batch serves
+            # both tiers — the exact admission plus the pruned tier's cross
+            # ids derived from the same match list by probe position
+            # (similarity.incremental_semantic_dedup_with_audit). Output
+            # bit-identical to the former two-run form (pytest-pinned); the
+            # pruned run's dead work (its within-batch Gram + component
+            # fixpoint, never consumed by this row) is gone, as is its
+            # nprobe/16 share of the cross scoring and two eager
+            # checkpoints per batch.
+            exact, p_cross = _similarity.incremental_semantic_dedup_with_audit(
+                spark, batch, idx,
+                threshold=EMBED_DUP_THRESHOLD, nprobe=_ISM_NPROBE,
+            )
+            # eager=False fuses the checkpoint materialization into this
+            # batch's store-append job below (r13, guide §1.2): the append
+            # consumes surv_ids — every partition of exact — caching the
+            # lazily-marked blocks before the store mutates (append only
+            # adds cell files) and long before the scratch store is deleted,
+            # so the later aggregates read cache, never the deleted store.
+            exact = exact.localCheckpoint(eager=False)
+            e_cross = exact.filter(F.col("status") == "cross_dup").select(
+                "vec_id"
+            )
+            p_crosses.append(p_cross)
+            e_crosses.append(e_cross)
+            agg = exact.agg(
+                F.count(F.lit(1)).alias("n_batch"),
+                F.sum((F.col("status") == "cross_dup").cast("long")).alias(
+                    "n_cross"
+                ),
+                F.sum((F.col("status") == "batch_dup").cast("long")).alias(
+                    "n_batch_dup"
+                ),
+                F.sum((F.col("status") == "kept").cast("long")).alias("n_kept"),
+                F.sum(
+                    F.when(
+                        F.col("status") == "cross_dup", F.col("dup_of")
+                    ).otherwise(0)
+                ).alias("sum_cross_dup_of"),
+                F.sum(
+                    F.when(
+                        F.col("status") == "batch_dup", F.col("dup_of")
+                    ).otherwise(0)
+                ).alias("sum_batch_dup_of"),
+                F.sum(
+                    F.when(F.col("status") == "kept", F.col("vec_id")).otherwise(
+                        0
+                    )
+                ).alias("sum_kept_ids"),
+            ).withColumn("batch", F.lit(k).cast("long"))
+            subset = p_cross.join(e_cross, "vec_id", "left_anti").agg(
+                F.count(F.lit(1)).alias("n_false")
+            )
+            per_batch.append(agg.crossJoin(subset))
+            # The chain advances: the exact side's kept survivors join the
+            # persisted store (their full vectors, assigned against the
+            # FIXED centroids) before the next batch admits.
+            surv_ids = exact.filter(F.col("status") == "kept").select("vec_id")
+            _similarity.ivf_append_to_index(emb.join(surv_ids, "vec_id"), idx)
+            if k == 2:
+                # Mid-chain maintenance: batch 3 admits against the FOLDED
+                # store — compaction provably invisible to admission.
+                _similarity.compact_ivf_index(spark, idx)
+        # Nothing to return: every frame read below was materialized by
+        # the append job that followed its checkpoint, before the store
+        # is deleted.
+
+    in_scratch("ism_chain", admit_chain)
     all_p = reduce(DataFrame.unionAll, p_crosses)
     all_e = reduce(DataFrame.unionAll, e_crosses)
     rec = (
@@ -1002,15 +995,16 @@ def q_incremental_lsh_dedup_stored(spark: SparkSession, sf_dir: str) -> DataFram
 
     docs = load_table(spark, sf_dir, "documents")
     kept = docs.filter(F.col("doc_id") % 2 == 0)
-    store = _scratch_dir("sigstore", sf_dir)
-    minhash_signatures(kept).write.mode("overwrite").parquet(store)
-    res = ce.incremental_lsh_dedup(
-        docs.filter(F.col("doc_id") % 2 == 1),
-        kept,
-        kept_signatures=spark.read.parquet(store),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(store, ignore_errors=True)
-    return res
+
+    def admit(store: str) -> DataFrame:
+        minhash_signatures(kept).write.mode("overwrite").parquet(store)
+        return ce.incremental_lsh_dedup(
+            docs.filter(F.col("doc_id") % 2 == 1),
+            kept,
+            kept_signatures=spark.read.parquet(store),
+        )
+
+    return in_scratch("sigstore", admit)
 
 
 @register("ccnet_perplexity_buckets", ce.ccnet_perplexity_buckets_oracle_sql())
@@ -1140,41 +1134,45 @@ def q_publish_dataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     row cap) and ``manifest_total_ok`` (manifest row total equals the
     read-back count)."""
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch_dir("publish", sf_dir)
-    manifest = publish_dataset(
-        spark,
-        docs,
-        path,
-        rows_per_shard=_PUBLISH_ROWS_PER_SHARD,
-        n_writers=_PUBLISH_WRITERS,
-    )
-    readback = spark.read.parquet(path)
-    audits = (
-        readback.agg(F.count(F.lit(1)).alias("_n_total"))
-        .crossJoin(
-            F.broadcast(
-                manifest.agg(
-                    F.max("rows").alias("_max_rows"),
-                    F.sum("rows").alias("_m_total"),
+
+    def publish(path: str) -> DataFrame:
+        manifest = publish_dataset(
+            spark,
+            docs,
+            path,
+            rows_per_shard=_PUBLISH_ROWS_PER_SHARD,
+            n_writers=_PUBLISH_WRITERS,
+        )
+        readback = spark.read.parquet(path)
+        audits = (
+            readback.agg(F.count(F.lit(1)).alias("_n_total"))
+            .crossJoin(
+                F.broadcast(
+                    manifest.agg(
+                        F.max("rows").alias("_max_rows"),
+                        F.sum("rows").alias("_m_total"),
+                    )
                 )
             )
+            .select(
+                (F.col("_max_rows") <= _PUBLISH_ROWS_PER_SHARD).alias(
+                    "shards_capped"
+                ),
+                (F.col("_m_total") == F.col("_n_total")).alias(
+                    "manifest_total_ok"
+                ),
+            )
         )
-        .select(
-            (F.col("_max_rows") <= _PUBLISH_ROWS_PER_SHARD).alias("shards_capped"),
-            (F.col("_m_total") == F.col("_n_total")).alias("manifest_total_ok"),
+        return (
+            readback.groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_chars").alias("sum_chars"),
+            )
+            .crossJoin(F.broadcast(audits))
         )
-    )
-    res = (
-        readback.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars"),
-        )
-        .crossJoin(F.broadcast(audits))
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    return res
+
+    return in_scratch("publish", publish)
 
 
 # ---------------------------------------------------------------------------
@@ -1323,45 +1321,17 @@ def q_pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from parallel_map_reduce_spark.operators.queries_llm import (
     _KNN_AUDIT_SELECT,
-    _KNN_EXACT_CTE,
     _KNN_EXACT_SAMPLED_CTE,
     _RANGE_AUDIT_SELECT,
     _RANGE_EXACT_CTE,
-    _range_audit_frame,
-    knn_audit_sample,
+    _ann_audit,
+    _knn_audit_select,
     KNN_AUDIT_SAMPLE_CAP,
     KNN_AUDIT_SAMPLE_SEED,
     KNN_K,
     KNN_QUERY_IDS,
     RANGE_RADIUS,
 )
-
-
-def _knn_audit_frame(exact: DataFrame, approx: DataFrame) -> DataFrame:
-    """The shared ANN audit tail (one definition for every two-phase /
-    quantized ANN row, so the audit rule cannot drift between them):
-    value-hash the brute-force twin's deterministic aggregates and
-    certify mean recall@k >= 0.5 over the approximate hits in-query —
-    the contract _KNN_AUDIT_SELECT's oracle expects. Since r13 every
-    caller feeds BOTH sides from the deterministic residue sample
-    (queries_llm.knn_audit_sample, oracle twin _KNN_EXACT_SAMPLED_CTE
-    — VERDICT r12 #2): the exact twin costs O(|Q| * cap) at any
-    corpus size, a no-op at driver sfs <= cap, so the registered rows
-    are themselves 100 TB-safe plans; full-corpus serving stays
-    covered by the auditless _ship twins."""
-    hit = approx.distinct().withColumn("hit", F.lit(1))
-    flagged = exact.join(hit, ["query_id", "neighbor_id"], "left")
-    return flagged.agg(
-        F.countDistinct("query_id").alias("n_queries"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.sum("neighbor_id").alias("sum_exact_neighbor_ids"),
-        F.sum(F.round(F.col("cosine_sim") * 1000000, 0).cast("long")).alias(
-            "sum_exact_sim_e6"
-        ),
-        (
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))) * 2 >= F.count(F.lit(1))
-        ).alias("recall_ok"),
-    )
 
 
 @register("knn_ivf_ann_stored", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_SELECT)
@@ -1377,26 +1347,14 @@ def q_knn_ivf_ann_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, recall_ok certifies mean recall@k >= 0.5 in-query.
     Output of the stored phase-2 operator is pytest-pinned identical
     to the self-contained ivf_ann on the same index parameters."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("ivf_index", sf_dir)
-    _similarity.ivf_build_index(emb, idx)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    approx = (
-        _similarity.ivf_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.ivf_query_stored(
             spark, idx, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
+        ),
+        build=_similarity.ivf_build_index,
     )
-    shutil.rmtree(idx, ignore_errors=True)
-    return _knn_audit_frame(exact, approx)
 
 
 @register("knn_range_ivf_stored", _RANGE_EXACT_CTE + _RANGE_AUDIT_SELECT)
@@ -1411,20 +1369,15 @@ def q_knn_range_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     provable TRUE, recall_ok ≥ 0.5. Stored output pytest-pinned
     identical to the self-contained ivf_range_search on the same index
     parameters."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("ivf_range_index", sf_dir)
-    _similarity.ivf_build_index(emb, idx)
-    exact = _similarity.range_search_exact(
-        emb, KNN_QUERY_IDS, RANGE_RADIUS
-    ).localCheckpoint(eager=True)
-    approx = (
-        _similarity.ivf_range_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.ivf_range_query_stored(
             spark, idx, KNN_QUERY_IDS, RANGE_RADIUS
-        )
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
+        ),
+        build=_similarity.ivf_build_index,
+        radius=RANGE_RADIUS,
     )
-    shutil.rmtree(idx, ignore_errors=True)
-    return _range_audit_frame(exact, approx)
 
 
 @register("knn_range_ivfsq_stored", _RANGE_EXACT_CTE + _RANGE_AUDIT_SELECT)
@@ -1443,20 +1396,15 @@ def q_knn_range_ivfsq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the bound (a wrong C would drop in-range rows). Same audit
     contract: exact-twin aggregates value-hashed, subset_ok provable
     TRUE, recall_ok ≥ 0.5."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = _scratch_dir("ivfsq_range_index", sf_dir)
-    _similarity.ivfsq_build_index(emb, idx)
-    exact = _similarity.range_search_exact(
-        emb, KNN_QUERY_IDS, RANGE_RADIUS
-    ).localCheckpoint(eager=True)
-    approx = (
-        _similarity.ivfsq_range_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.ivfsq_range_query_stored(
             spark, idx, emb, KNN_QUERY_IDS, RANGE_RADIUS, nprobe=6
-        )
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
+        ),
+        build=_similarity.ivfsq_build_index,
+        radius=RANGE_RADIUS,
     )
-    shutil.rmtree(idx, ignore_errors=True)
-    return _range_audit_frame(exact, approx)
 
 
 @register("retract_and_readmit", ce.retract_and_readmit_oracle_sql())
@@ -1508,27 +1456,15 @@ def q_knn_ivf_ann_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic aggregates, and recall_ok certifies the
     half-trained quantizer still clears mean recall@k >= 0.5 — the
     drift-vs-rebuild tradeoff made driver-visible."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("ivf_index_app", sf_dir)
-    _similarity.ivf_build_index(emb.filter(F.col("vec_id") % 2 == 0), idx)
-    _similarity.ivf_append_to_index(emb.filter(F.col("vec_id") % 2 == 1), idx)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    approx = (
-        _similarity.ivf_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.ivf_query_stored(
             spark, idx, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
+        ),
+        build=_similarity.ivf_build_index,
+        append=_similarity.ivf_append_to_index,
     )
-    shutil.rmtree(idx, ignore_errors=True)
-    return _knn_audit_frame(exact, approx)
 
 
 @register("knn_pq_ann", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_SELECT)
@@ -1546,22 +1482,7 @@ def q_knn_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the brute-force twin's deterministic aggregates and recall_ok
     certifies mean recall@k >= 0.5 in-query (measured 0.84-0.96
     across sf0.001-0.1)."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    # r13: the self-contained approximate tier is lazy too — no scratch
-    # store to outlive, single consumer (the build/train actions inside
-    # pq_ann still run eagerly before the frame returns).
-    approx = _similarity.pq_ann(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    ).select("query_id", "neighbor_id")
-    return _knn_audit_frame(exact, approx)
+    return _ann_audit(spark, sf_dir, _similarity.pq_ann)
 
 
 @register("knn_ivfpq_ann", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_SELECT)
@@ -1577,20 +1498,7 @@ def q_knn_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.64-0.74 on these near-uniform embeddings — the IVF cell-miss
     floor, same as knn_ivf_ann's; clustered real embeddings prune far
     better)."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    # r13: lazy approximate tier (no scratch store, single consumer).
-    approx = _similarity.ivfpq_ann(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    ).select("query_id", "neighbor_id")
-    return _knn_audit_frame(exact, approx)
+    return _ann_audit(spark, sf_dir, _similarity.ivfpq_ann)
 
 
 @register("knn_pq_ann_stored", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_SELECT)
@@ -1607,26 +1515,14 @@ def q_knn_pq_ann_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit contract as the other ANN rows; the stored phase-2 output is
     pytest-pinned identical to the self-contained pq_ann (and, built
     with rotation=True, to opq_ann) on the same trained model."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("pq_index", sf_dir)
-    _similarity.pq_build_index(emb, idx)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    approx = (
-        _similarity.pq_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.pq_query_stored(
             spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
+        ),
+        build=_similarity.pq_build_index,
     )
-    shutil.rmtree(idx, ignore_errors=True)
-    return _knn_audit_frame(exact, approx)
 
 
 @register("knn_ivfpq_ann_stored", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_SELECT)
@@ -1644,40 +1540,19 @@ def q_knn_ivfpq_ann_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     the other ANN rows; the stored phase-2 output is pytest-pinned
     identical to the self-contained ivfpq_ann on the same trained
     quantizers."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("ivfpq_index", sf_dir)
-    _similarity.ivfpq_build_index(emb, idx)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    approx = (
-        _similarity.ivfpq_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.ivfpq_query_stored(
             spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
+        ),
+        build=_similarity.ivfpq_build_index,
     )
-    shutil.rmtree(idx, ignore_errors=True)
-    return _knn_audit_frame(exact, approx)
 
 
 # _KNN_AUDIT_SELECT plus the compaction invariant the lifecycle row
 # certifies: the fold changed the file layout only, never an answer.
-_KNN_AUDIT_COMPACTED_SELECT = """
-SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-       COUNT(*) AS n_exact,
-       CAST(SUM(neighbor_id) AS BIGINT) AS sum_exact_neighbor_ids,
-       CAST(SUM(CAST(ROUND(cosine_sim * 1000000, 0) AS BIGINT)) AS BIGINT)
-         AS sum_exact_sim_e6,
-       TRUE AS recall_ok,
-       TRUE AS compaction_unchanged_ok
-FROM topk
-"""
+_KNN_AUDIT_COMPACTED_SELECT = _knn_audit_select("compaction_unchanged_ok")
 
 
 @register("knn_ivfadc_compacted", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_COMPACTED_SELECT)
@@ -1706,63 +1581,15 @@ def q_knn_ivfadc_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions of the code table are read (tests/test_plans.py pins
     the stored-reader plan), the fold itself is one clustered rewrite
     (repartition BY cid, one task per cell)."""
-    import glob as _glob
-
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("ivfadc_lifecycle", sf_dir)
-    _similarity.ivfpq_build_index(emb.filter(F.col("vec_id") % 2 == 0), idx)
-    for mres in (1, 3):
-        _similarity.ivfpq_append_to_index(
-            emb.filter(F.col("vec_id") % 4 == mres), idx
-        )
-    pre = (
-        _similarity.ivfpq_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.ivfpq_query_stored(
             spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    files_before, files_after = _similarity.compact_ivf_index(spark, idx)
-    n_cells = len(_glob.glob(f"{idx}/invfile/cid=*"))
-    # Loud in-query invariants (driver-side scalars, not data rows):
-    # the two appends fragmented at least one cell, and the fold
-    # restored exactly one file per non-empty cell.
-    assert files_before > n_cells, (files_before, n_cells)
-    assert files_after == n_cells, (files_after, n_cells)
-    post = (
-        _similarity.ivfpq_query_stored(
-            spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
-    )
-    shutil.rmtree(idx, ignore_errors=True)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    diff = (
-        pre.exceptAll(post)
-        .agg(F.count(F.lit(1)).alias("n_d1"))
-        .crossJoin(post.exceptAll(pre).agg(F.count(F.lit(1)).alias("n_d2")))
-    )
-    return (
-        _knn_audit_frame(exact, post)
-        .crossJoin(diff)
-        .select(
-            "n_queries",
-            "n_exact",
-            "sum_exact_neighbor_ids",
-            "sum_exact_sim_e6",
-            "recall_ok",
-            ((F.col("n_d1") + F.col("n_d2")) == 0).alias(
-                "compaction_unchanged_ok"
-            ),
-        )
+        ),
+        build=_similarity.ivfpq_build_index,
+        append=_similarity.ivfpq_append_to_index,
+        compact=_similarity.compact_ivf_index,
     )
 
 
@@ -1781,26 +1608,14 @@ def q_knn_opq_ann_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same audit contract as the other ANN rows: brute-force twin
     aggregates value-hashed, recall_ok >= 0.5 in-query (OPQ measures
     ~0.98 at sf0.01 — above plain PQ's 0.94)."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("opq_index", sf_dir)
-    _similarity.pq_build_index(emb, idx, rotation=True)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    approx = (
-        _similarity.pq_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.pq_query_stored(
             spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
+        ),
+        build=partial(_similarity.pq_build_index, rotation=True),
     )
-    shutil.rmtree(idx, ignore_errors=True)
-    return _knn_audit_frame(exact, approx)
 
 
 @register("knn_opq_ivfadc_stored", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_SELECT)
@@ -1822,26 +1637,14 @@ def q_knn_opq_ivfadc_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.5 in-query. Plan shape is knn_ivfpq_ann_stored's: only probed
     cid=N partitions of the byte-code table are read; the rotation
     rides into the encode/ADC pandas UDFs as one batch matmul."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("opq_ivfadc_index", sf_dir)
-    _similarity.ivfpq_build_index(emb, idx, rotation=True)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    approx = (
-        _similarity.ivfpq_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.ivfpq_query_stored(
             spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
+        ),
+        build=partial(_similarity.ivfpq_build_index, rotation=True),
     )
-    shutil.rmtree(idx, ignore_errors=True)
-    return _knn_audit_frame(exact, approx)
 
 
 @register(
@@ -1865,64 +1668,15 @@ def q_knn_pq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-count contract. Same audit contract as the other ANN rows on
     the post-compaction answers: exact-twin aggregates value-hashed,
     recall_ok >= 0.5 under half-trained codebook drift."""
-    import glob as _glob
-
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("pq_lifecycle", sf_dir)
-    _similarity.pq_build_index(emb.filter(F.col("vec_id") % 2 == 0), idx)
-    for mres in (1, 3):
-        _similarity.pq_append_to_index(
-            emb.filter(F.col("vec_id") % 4 == mres), idx
-        )
-    pre = (
-        _similarity.pq_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.pq_query_stored(
             spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    files_before, files_after = _similarity.compact_pq_index(spark, idx)
-    # Loud in-query invariants: the appends really fragmented the flat
-    # table (>= 3 files: build + 2 appends) and the fold hit the
-    # byte-targeted count (1 file at every test sf).
-    assert files_before >= 3, files_before
-    assert files_after < files_before, (files_before, files_after)
-    n_files = len(_glob.glob(f"{idx}/codes/*.parquet"))
-    assert files_after == n_files, (files_after, n_files)
-    post = (
-        _similarity.pq_query_stored(
-            spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
-    )
-    shutil.rmtree(idx, ignore_errors=True)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    diff = (
-        pre.exceptAll(post)
-        .agg(F.count(F.lit(1)).alias("n_d1"))
-        .crossJoin(post.exceptAll(pre).agg(F.count(F.lit(1)).alias("n_d2")))
-    )
-    return (
-        _knn_audit_frame(exact, post)
-        .crossJoin(diff)
-        .select(
-            "n_queries",
-            "n_exact",
-            "sum_exact_neighbor_ids",
-            "sum_exact_sim_e6",
-            "recall_ok",
-            ((F.col("n_d1") + F.col("n_d2")) == 0).alias(
-                "compaction_unchanged_ok"
-            ),
-        )
+        ),
+        build=_similarity.pq_build_index,
+        append=_similarity.pq_append_to_index,
+        compact=_similarity.compact_pq_index,
     )
 
 
@@ -1954,62 +1708,15 @@ def q_knn_ivfsq_ann_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     answers are pytest-pinned EQUAL to the flat SQ store's, so cell
     pruning is the only approximation the composition adds. Same audit
     contract as the other ANN rows on the post-compaction answers."""
-    import glob as _glob
-
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("ivfsq_lifecycle", sf_dir)
-    _similarity.ivfsq_build_index(emb.filter(F.col("vec_id") % 2 == 0), idx)
-    for mres in (1, 3):
-        _similarity.ivfsq_append_to_index(
-            emb.filter(F.col("vec_id") % 4 == mres), idx
-        )
-    pre = (
-        _similarity.ivfsq_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.ivfsq_query_stored(
             spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K, nprobe=6
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    files_before, files_after = _similarity.compact_ivf_index(spark, idx)
-    n_cells = len(_glob.glob(f"{idx}/invfile/cid=*"))
-    # Loud in-query invariants: the two appends fragmented at least one
-    # cell, and the fold restored exactly one file per non-empty cell.
-    assert files_before > n_cells, (files_before, n_cells)
-    assert files_after == n_cells, (files_after, n_cells)
-    post = (
-        _similarity.ivfsq_query_stored(
-            spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K, nprobe=6
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
-    )
-    shutil.rmtree(idx, ignore_errors=True)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    diff = (
-        pre.exceptAll(post)
-        .agg(F.count(F.lit(1)).alias("n_d1"))
-        .crossJoin(post.exceptAll(pre).agg(F.count(F.lit(1)).alias("n_d2")))
-    )
-    return (
-        _knn_audit_frame(exact, post)
-        .crossJoin(diff)
-        .select(
-            "n_queries",
-            "n_exact",
-            "sum_exact_neighbor_ids",
-            "sum_exact_sim_e6",
-            "recall_ok",
-            ((F.col("n_d1") + F.col("n_d2")) == 0).alias(
-                "compaction_unchanged_ok"
-            ),
-        )
+        ),
+        build=_similarity.ivfsq_build_index,
+        append=_similarity.ivfsq_append_to_index,
+        compact=_similarity.compact_ivf_index,
     )
 
 
@@ -2039,64 +1746,15 @@ def q_knn_sq_ann_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force-twin aggregates value-hashed, recall_ok >= 0.5 under
     half-trained quantizer clipping (8-bit error is far below neighbor
     gaps — measured 1.0 recall across sfs even half-trained)."""
-    import glob as _glob
-
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("sq_lifecycle", sf_dir)
-    _similarity.sq_build_index(emb.filter(F.col("vec_id") % 2 == 0), idx)
-    for mres in (1, 3):
-        _similarity.sq_append_to_index(
-            emb.filter(F.col("vec_id") % 4 == mres), idx
-        )
-    pre = (
-        _similarity.sq_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.sq_query_stored(
             spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    files_before, files_after = _similarity.compact_pq_index(spark, idx)
-    # Loud in-query invariants: the appends really fragmented the flat
-    # table (>= 3 files: build + 2 appends) and the fold hit the
-    # byte-targeted count (1 file at every test sf).
-    assert files_before >= 3, files_before
-    assert files_after < files_before, (files_before, files_after)
-    n_files = len(_glob.glob(f"{idx}/codes/*.parquet"))
-    assert files_after == n_files, (files_after, n_files)
-    post = (
-        _similarity.sq_query_stored(
-            spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
-    )
-    shutil.rmtree(idx, ignore_errors=True)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    diff = (
-        pre.exceptAll(post)
-        .agg(F.count(F.lit(1)).alias("n_d1"))
-        .crossJoin(post.exceptAll(pre).agg(F.count(F.lit(1)).alias("n_d2")))
-    )
-    return (
-        _knn_audit_frame(exact, post)
-        .crossJoin(diff)
-        .select(
-            "n_queries",
-            "n_exact",
-            "sum_exact_neighbor_ids",
-            "sum_exact_sim_e6",
-            "recall_ok",
-            ((F.col("n_d1") + F.col("n_d2")) == 0).alias(
-                "compaction_unchanged_ok"
-            ),
-        )
+        ),
+        build=_similarity.sq_build_index,
+        append=_similarity.sq_append_to_index,
+        compact=_similarity.compact_pq_index,
     )
 
 
@@ -2113,27 +1771,15 @@ def q_knn_pq_ann_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     grown store. The brute-force twin over the FULL corpus runs in the
     same query and recall_ok certifies the half-trained codebooks
     still clear mean recall@k >= 0.5 under quantizer drift."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("pq_index_app", sf_dir)
-    _similarity.pq_build_index(emb.filter(F.col("vec_id") % 2 == 0), idx)
-    _similarity.pq_append_to_index(emb.filter(F.col("vec_id") % 2 == 1), idx)
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    approx = (
-        _similarity.pq_query_stored(
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.pq_query_stored(
             spark, idx, emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
+        ),
+        build=_similarity.pq_build_index,
+        append=_similarity.pq_append_to_index,
     )
-    shutil.rmtree(idx, ignore_errors=True)
-    return _knn_audit_frame(exact, approx)
 
 
 @register("knn_opq_ann", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_SELECT)
@@ -2152,20 +1798,7 @@ def q_knn_opq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same audit contract as the other ANN rows: the oracle value-hashes
     the brute-force twin's deterministic aggregates and recall_ok
     certifies mean recall@k >= 0.5 in-query."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    # r13: lazy approximate tier (no scratch store, single consumer).
-    approx = _similarity.opq_ann(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    ).select("query_id", "neighbor_id")
-    return _knn_audit_frame(exact, approx)
+    return _ann_audit(spark, sf_dir, _similarity.opq_ann)
 
 
 @register("knn_sq_ann", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_SELECT)
@@ -2181,20 +1814,7 @@ def q_knn_sq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates and recall_ok certifies mean recall@k >= 0.5 in-query
     (8-bit error is far below neighbor gaps: measured 1.0 across
     sf0.001-0.1)."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    # r13: the exact twin stays LAZY — it reads only the primary table
-    # (never the scratch store), and _knn_audit_frame consumes it once,
-    # so folding it into the final action removes one sequential job and
-    # lets its stages run concurrently with the approximate side's
-    # (guide §2.6 — the scheduler interleaves independent subtrees).
-    exact = _similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    # r13: lazy approximate tier (no scratch store, single consumer).
-    approx = _similarity.sq_ann(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    ).select("query_id", "neighbor_id")
-    return _knn_audit_frame(exact, approx)
+    return _ann_audit(spark, sf_dir, _similarity.sq_ann)
 
 
 # --- predicate-filtered ANN (FAISS IDSelector; VERDICT r12 missing #1) -----
@@ -2235,16 +1855,7 @@ topk AS (
     FROM scored
   )
   WHERE rn <= {KNN_K}
-)
-SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-       COUNT(*) AS n_exact,
-       CAST(SUM(neighbor_id) AS BIGINT) AS sum_exact_neighbor_ids,
-       CAST(SUM(CAST(ROUND(cosine_sim * 1000000, 0) AS BIGINT)) AS BIGINT)
-         AS sum_exact_sim_e6,
-       TRUE AS recall_ok,
-       TRUE AS subset_ok
-FROM topk
-"""
+)""" + _knn_audit_select("subset_ok")
 
 
 @register("knn_ivf_filtered_stored", _KNN_FILTERED_SQL)
@@ -2274,46 +1885,13 @@ def q_knn_ivf_filtered_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     With nprobe=16 the filtered stored answers are pytest-pinned EQUAL
     to knn_bruteforce_filtered — the predicate can only shrink cells,
     so cell pruning stays the mode's only approximation."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    idx = _scratch_dir("ivf_filtered_index", sf_dir)
-    _similarity.ivf_build_index(emb, idx, meta_cols=("label",))
-    # r13: lazy exact twin — same rationale as the knn_bruteforce sites
-    # (single consumer, reads only the primary table, overlaps with the
-    # approximate side inside the one final action).
-    exact = _similarity.knn_bruteforce_filtered(
-        emb,
-        F.col("label") == _KNN_FILTER_LABEL,
-        query_ids=KNN_QUERY_IDS,
-        k=KNN_K,
-    )
-    approx = (
-        _similarity.ivf_query_stored(
-            spark,
-            idx,
-            query_ids=KNN_QUERY_IDS,
-            k=KNN_K,
-            nprobe=8,
-            where=F.col("label") == _KNN_FILTER_LABEL,
-        )
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # BEFORE rmtree: reads the store lazily
-    )
-    shutil.rmtree(idx, ignore_errors=True)
-    labels = emb.select(F.col("vec_id").alias("neighbor_id"), "label")
-    n_off_slice = (
-        approx.join(labels, "neighbor_id")
-        .filter(F.col("label") != _KNN_FILTER_LABEL)
-        .agg(F.count(F.lit(1)).alias("n_off"))
-    )
-    return (
-        _knn_audit_frame(exact, approx)
-        .crossJoin(n_off_slice)
-        .select(
-            "n_queries",
-            "n_exact",
-            "sum_exact_neighbor_ids",
-            "sum_exact_sim_e6",
-            "recall_ok",
-            (F.col("n_off") == 0).alias("subset_ok"),
-        )
+    in_slice = F.col("label") == _KNN_FILTER_LABEL
+    return _ann_audit(
+        spark,
+        sf_dir,
+        lambda emb, idx: _similarity.ivf_query_stored(
+            spark, idx, query_ids=KNN_QUERY_IDS, k=KNN_K, nprobe=8, where=in_slice
+        ),
+        build=partial(_similarity.ivf_build_index, meta_cols=("label",)),
+        where=in_slice,
     )

@@ -11,7 +11,11 @@ join-order-dependent steps (LSH candidate generation) are rows-only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import glob
+import os
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parallel_map_reduce_spark.functions.hashing import (
@@ -27,6 +31,7 @@ from parallel_map_reduce_spark.operators import (
     similarity,
     textstats,
 )
+from parallel_map_reduce_spark.operators._scratch import in_scratch
 from parallel_map_reduce_spark.registry import register
 from parallel_map_reduce_spark.sources.tables import load_table
 
@@ -388,6 +393,15 @@ SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
 FROM topk
 """
 
+
+def _knn_audit_select(check: str) -> str:
+    """_KNN_AUDIT_SELECT plus one more certificate column the oracle
+    expects TRUE (the column _knn_audit_frame's ``check`` adds)."""
+    return _KNN_AUDIT_SELECT.replace(
+        "TRUE AS recall_ok\n", f"TRUE AS recall_ok,\n       TRUE AS {check}\n"
+    )
+
+
 # Deterministic audit sample for the ANN rows' brute-force twins
 # (VERDICT r12 #2): the registered audit rows run BOTH generators —
 # the approximate tier and its exact twin — over a hash64(vec_id)
@@ -467,37 +481,19 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _knn_recall_audit(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
-    """Shared audit body for the two ANN top-k registrations: run the
-    approximate tier AND the brute-force twin in the same query — both
-    over the deterministic residue sample (knn_audit_sample, VERDICT
-    r12 #2: a no-op at driver sfs <= cap, O(cap) at any scale); emit
-    the exact side's deterministic aggregates (value-hashed by the
-    DuckDB oracle) plus ``recall_ok`` = mean recall@k >= 0.5 computed
-    in-query (the pytest bound: these synthetic embeddings are
-    near-uniform, the hardest case for both LSH and IVF — measured mean
-    recall 0.64-0.74 across sf0.001-0.1; clustered real-world
-    embeddings do far better at the same settings)."""
-    emb = knn_audit_sample(load_table(spark, sf_dir, "embeddings"))
-    # r13: the exact twin stays LAZY — single consumer (the audit agg
-    # below), no scratch store, so it folds into the final action and
-    # its stages overlap the approximate side's (guide §2.6).
-    exact = similarity.knn_bruteforce(
-        emb, query_ids=KNN_QUERY_IDS, k=KNN_K
-    )
-    if method == "lsh":
-        approx = similarity.lsh_bucket_ann(emb, query_ids=KNN_QUERY_IDS, k=KNN_K)
-    elif method == "ivf":
-        approx = similarity.ivf_ann(emb, query_ids=KNN_QUERY_IDS, k=KNN_K)
-    else:
-        raise ValueError(f"unknown method: {method!r}")
-    hit = (
-        approx.select("query_id", "neighbor_id")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
+def _knn_audit_frame(
+    exact: DataFrame,
+    approx: DataFrame,
+    check: tuple[str, DataFrame, Column] | None = None,
+) -> DataFrame:
+    """The one kNN audit aggregation (_KNN_AUDIT_SELECT's Spark twin):
+    value-hash the exact twin's deterministic aggregates and certify
+    mean recall@k >= 0.5 over the approximate hits in-query. ``check``
+    = (column, one-row frame, predicate over it) appends the row's
+    extra certificate — ``compaction_unchanged_ok`` or ``subset_ok``."""
+    hit = approx.distinct().withColumn("hit", F.lit(1))
     flagged = exact.join(hit, ["query_id", "neighbor_id"], "left")
-    return flagged.agg(
+    audit = flagged.agg(
         F.countDistinct("query_id").alias("n_queries"),
         F.count(F.lit(1)).alias("n_exact"),
         F.sum("neighbor_id").alias("sum_exact_neighbor_ids"),
@@ -508,6 +504,132 @@ def _knn_recall_audit(spark: SparkSession, sf_dir: str, method: str) -> DataFram
             F.sum(F.coalesce(F.col("hit"), F.lit(0))) * 2 >= F.count(F.lit(1))
         ).alias("recall_ok"),
     )
+    if check is None:
+        return audit
+    name, frame, ok = check
+    return audit.crossJoin(frame).select(
+        "n_queries",
+        "n_exact",
+        "sum_exact_neighbor_ids",
+        "sum_exact_sim_e6",
+        "recall_ok",
+        ok.alias(name),
+    )
+
+
+def _hits(frame: DataFrame) -> DataFrame:
+    return frame.select("query_id", "neighbor_id")
+
+
+def _knn_exact(emb: DataFrame, where: Column | None) -> DataFrame:
+    if where is None:
+        return similarity.knn_bruteforce(emb, query_ids=KNN_QUERY_IDS, k=KNN_K)
+    return similarity.knn_bruteforce_filtered(
+        emb, where, query_ids=KNN_QUERY_IDS, k=KNN_K
+    )
+
+
+def _assert_folded(idx: str, files_before: int, files_after: int) -> None:
+    """Loud in-query invariants of a lifecycle row (driver-side scalars,
+    not data rows): the two appends fragmented the store, and the fold
+    met its file-count contract — one file per non-empty cell for a
+    cid-partitioned inverted file, the byte-targeted count (one file at
+    every test sf) for a flat code table."""
+    if os.path.isdir(f"{idx}/invfile"):
+        n_cells = len(glob.glob(f"{idx}/invfile/cid=*"))
+        assert files_before > n_cells, (files_before, n_cells)
+        assert files_after == n_cells, (files_after, n_cells)
+    else:
+        assert files_before >= 3, files_before
+        assert files_after < files_before, (files_before, files_after)
+        n_files = len(glob.glob(f"{idx}/codes/*.parquet"))
+        assert files_after == n_files, (files_after, n_files)
+
+
+def _ann_audit(
+    spark: SparkSession,
+    sf_dir: str,
+    search: Callable[..., DataFrame],
+    *,
+    build: Callable[[DataFrame, str], None] | None = None,
+    append: Callable[[DataFrame, str], None] | None = None,
+    compact: Callable[[SparkSession, str], tuple[int, int]] | None = None,
+    where: Column | None = None,
+    radius: float | None = None,
+) -> DataFrame:
+    """The one body of every registered ANN audit row (README.md, "ANN
+    stores" → "Registered audit rows"). Both sides run over the
+    deterministic residue sample (knn_audit_sample: a no-op up to cap
+    vectors, O(cap) at any scale) and the exact twin's aggregates are
+    what the oracle value-hashes.
+
+    - Without ``build``, ``search(emb, query_ids=, k=)`` is an
+      in-memory tier; it stays lazy (no store to outlive, one consumer;
+      its own train actions still run before it returns).
+    - With ``build``, ``search(emb, idx)`` reads a store written in a
+      scratch directory (operators/_scratch.py): ``build(emb, idx)``
+      over the whole sample, or, with ``append``, over the even ids
+      with the odd ids appended later as one batch — as two (ids ≡ 1
+      and 3 mod 4) when ``compact`` folds the store between a query
+      before and after it. Answers are materialized before the store
+      is deleted; the lifecycle's ``compaction_unchanged_ok`` certifies
+      the fold changed the layout only.
+    - The exact twin (brute-force top-k) stays lazy: it reads only the
+      primary table and is consumed once, so it folds into the final
+      action and its stages overlap the approximate side's (r13).
+      ``where`` restricts its candidates and adds ``subset_ok`` (every
+      approximate neighbor satisfies the predicate on the PRIMARY
+      table). With ``radius`` it is the range twin over the UNSAMPLED
+      table, materialized right after the build, and the audit is
+      _range_audit_frame's."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    if radius is None:
+        emb = knn_audit_sample(emb)
+    if build is None:
+        approx = _hits(search(emb, query_ids=KNN_QUERY_IDS, k=KNN_K))
+        return _knn_audit_frame(_knn_exact(emb, where), approx)
+    exact = pre = None
+
+    def body(idx: str) -> DataFrame:
+        nonlocal exact, pre
+        if append is None:
+            build(emb, idx)
+        else:
+            build(emb.filter(F.col("vec_id") % 2 == 0), idx)
+            later = [(2, 1)] if compact is None else [(4, 1), (4, 3)]
+            for mod, res in later:
+                append(emb.filter(F.col("vec_id") % mod == res), idx)
+        if radius is not None:
+            exact = similarity.range_search_exact(
+                emb, KNN_QUERY_IDS, radius
+            ).localCheckpoint(eager=True)
+        if compact is not None:
+            pre = _hits(search(emb, idx)).localCheckpoint(eager=True)
+            _assert_folded(idx, *compact(spark, idx))
+        return _hits(search(emb, idx))
+
+    approx = in_scratch("ann_audit", body)
+    if radius is not None:
+        return _range_audit_frame(exact, approx)
+    check = None
+    if compact is not None:
+        diff = (
+            pre.exceptAll(approx)
+            .agg(F.count(F.lit(1)).alias("n_d1"))
+            .crossJoin(approx.exceptAll(pre).agg(F.count(F.lit(1)).alias("n_d2")))
+        )
+        check = ("compaction_unchanged_ok", diff, F.col("n_d1") + F.col("n_d2") == 0)
+    elif where is not None:
+        n_off = (
+            approx.join(
+                emb.select(F.col("vec_id").alias("neighbor_id"), where.alias("_in")),
+                "neighbor_id",
+            )
+            .filter(~F.col("_in"))
+            .agg(F.count(F.lit(1)).alias("n_off"))
+        )
+        check = ("subset_ok", n_off, F.col("n_off") == 0)
+    return _knn_audit_frame(_knn_exact(emb, where), approx, check)
 
 
 @register("knn_lsh_ann", _KNN_EXACT_SAMPLED_CTE + _KNN_AUDIT_SELECT)
@@ -518,7 +640,7 @@ def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall@{k} feeds the in-query ``recall_ok`` bound the oracle
     expects TRUE. The ship-path operator itself is
     similarity.lsh_bucket_ann (returns real neighbor rows)."""
-    return _knn_recall_audit(spark, sf_dir, method="lsh")
+    return _ann_audit(spark, sf_dir, similarity.lsh_bucket_ann)
 
 
 RANGE_RADIUS = 0.25
@@ -1133,7 +1255,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     KMeans quantizer is seed-fixed so the audit is deterministic). The
     ship-path operator itself is similarity.ivf_ann (returns real
     neighbor rows)."""
-    return _knn_recall_audit(spark, sf_dir, method="ivf")
+    return _ann_audit(spark, sf_dir, similarity.ivf_ann)
 
 
 @register(

@@ -13,12 +13,11 @@ streaming is part of the beyond-reference surface (SURVEY.md §2.4).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_map_reduce_spark.operators._scratch import in_scratch
 from parallel_map_reduce_spark.registry import register
 from parallel_map_reduce_spark.streaming import windowed
 
@@ -60,39 +59,54 @@ def q_streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = windowed.tumbling_counts(
         windowed.stream_events(spark, sf_dir), watermark="3650 days"
     )
-    return _run_to_fresh_upsert(counts, "tumbling", ["window_start", "event_type"])
+    return _run_stream(counts, "update", ["window_start", "event_type"])
 
 
-def _run_to_fresh_upsert(
-    stream_df: DataFrame, tag: str, key_cols: list[str]
+def _drain(
+    stream_df: DataFrame, run_dir: str, mode: str, key_cols: list[str] | None = None
 ) -> DataFrame:
-    """Run an update-mode streaming plan to completion (availableNow)
-    through the idempotent foreachBatch upsert sink into a FRESH parquet
-    table, and return the result as a batch DataFrame. mkdtemp gives
-    every call its own target + checkpoint, so repeated or concurrent
-    driver/bench/pytest invocations can never rmtree each other's
-    in-progress sink; the sink + checkpoint dirs are deleted before
-    returning (the readback is localCheckpoint-materialized first), so
-    repeated runs don't accumulate parquet/checkpoint litter in /tmp."""
-    spark = stream_df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix=f"pmr_spark_stream_{tag}_")
+    """Run a streaming plan to completion (availableNow) into a fresh
+    parquet table under ``run_dir`` and return that table as a batch
+    frame; only the output mode and its sink vary:
+
+    - ``update``: the idempotent foreachBatch upsert on ``key_cols``;
+    - ``append``: the native parquet file sink (each emitted row is
+      final — the output mode of stream-stream joins);
+    - ``complete``: a foreachBatch overwrite, so once the source drains
+      the table holds the final full aggregate.
+
+    availableNow terminates on its own once the source drains; no
+    timeout — a bounded wait that ignores awaitTermination's False
+    return would hand a partially-written sink to the oracle's hash."""
     target = os.path.join(run_dir, "table")
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(
+    w = stream_df.writeStream.outputMode(mode)
+    if mode == "update":
+        w = w.foreachBatch(
             lambda df, _bid: windowed.upsert_batch(df, target, key_cols)
         )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .start()
+    elif mode == "complete":
+        w = w.foreachBatch(
+            lambda df, _bid: df.write.mode("overwrite").parquet(target)
+        )
+    else:
+        w = w.format("parquet").option("path", target)
+    w.trigger(availableNow=True).option(
+        "checkpointLocation", os.path.join(run_dir, "ckpt")
+    ).start().awaitTermination()
+    return stream_df.sparkSession.read.parquet(target)
+
+
+def _run_stream(
+    stream_df: DataFrame, mode: str, key_cols: list[str] | None = None
+) -> DataFrame:
+    """_drain in a scratch directory of its own (operators/_scratch.py):
+    repeated or concurrent runs (bench, pytest, the oracle gate) never
+    share a sink, the result is materialized before the sink and
+    checkpoint are deleted, and a failed query leaves no directory
+    behind."""
+    return in_scratch(
+        "stream_sink", lambda run_dir: _drain(stream_df, run_dir, mode, key_cols)
     )
-    # availableNow terminates on its own once the source drains; no
-    # timeout — a bounded wait that ignores awaitTermination's False
-    # return would hand a partially-written sink to the driver's hash.
-    q.awaitTermination()
-    out = spark.read.parquet(target).localCheckpoint(eager=True)
-    shutil.rmtree(run_dir, ignore_errors=True)
-    return out
 
 
 @register(
@@ -124,7 +138,7 @@ def q_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = windowed.running_user_totals(
         windowed.stream_events(spark, sf_dir), watermark="3650 days"
     )
-    return _run_to_fresh_upsert(totals, "running", ["user_id"])
+    return _run_stream(totals, "update", ["user_id"])
 
 
 @register(
@@ -170,33 +184,8 @@ def q_streaming_sliding_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The oracle hashes the mergeable (count, sum) pair; avg_value stays a
     # library-surface column (its division lands on round-4 boundaries
     # where cross-engine summation-order ulps flip the last digit).
-    out = _run_to_fresh_upsert(
-        means, "sliding", ["window_start", "event_type"]
-    )
+    out = _run_stream(means, "update", ["window_start", "event_type"])
     return out.select("window_start", "event_type", "n_events", "sum_value")
-
-
-def _run_append_to_fresh_parquet(stream_df: DataFrame, tag: str) -> DataFrame:
-    """Run an APPEND-mode streaming plan to completion (availableNow)
-    into a fresh parquet sink and return the rows as a batch DataFrame.
-    Append mode is the native output mode for stream-stream joins (each
-    matched pair is final the moment it is emitted — nothing to upsert);
-    same fresh-dir + cleanup discipline as _run_to_fresh_upsert."""
-    spark = stream_df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix=f"pmr_spark_stream_{tag}_")
-    target = os.path.join(run_dir, "table")
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", target)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(target).localCheckpoint(eager=True)
-    shutil.rmtree(run_dir, ignore_errors=True)
-    return out
 
 
 @register(
@@ -238,7 +227,7 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
         band="60 minutes",
         watermark="3650 days",
     )
-    return _run_append_to_fresh_parquet(pairs, "ssjoin")
+    return _run_stream(pairs, "append")
 
 
 @register(
@@ -269,24 +258,26 @@ def q_streaming_dedup_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     places before its aggregates.
     """
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    stage = tempfile.mkdtemp(prefix="pmr_spark_stream_redeliver_")
-    os.symlink(src, os.path.join(stage, "delivery_1.parquet"))
-    os.symlink(src, os.path.join(stage, "delivery_2.parquet"))
-    ev = windowed.stream_events_dir(
-        spark, stage, probe_path=src, max_files_per_trigger=1
-    )
-    totals = (
-        windowed.deduped_events(ev, watermark="3650 days")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
+
+    def redeliver(run_dir: str) -> DataFrame:
+        stage = os.path.join(run_dir, "feed")
+        os.makedirs(stage)
+        os.symlink(src, os.path.join(stage, "delivery_1.parquet"))
+        os.symlink(src, os.path.join(stage, "delivery_2.parquet"))
+        ev = windowed.stream_events_dir(
+            spark, stage, probe_path=src, max_files_per_trigger=1
         )
-    )
-    try:
-        return _run_to_fresh_upsert(totals, "dedup", ["user_id"])
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        totals = (
+            windowed.deduped_events(ev, watermark="3650 days")
+            .groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 4).alias("total_value"),
+            )
+        )
+        return _drain(totals, run_dir, "update", ["user_id"])
+
+    return in_scratch("stream_sink", redeliver)
 
 
 # Session oracle reuses the SAME lag/cumsum CTE as the batch twin
@@ -338,31 +329,7 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         gap="30 minutes",
         watermark="3650 days",
     )
-    return _run_complete_to_fresh_parquet(sessions, "sessions")
-
-
-def _run_complete_to_fresh_parquet(stream_df: DataFrame, tag: str) -> DataFrame:
-    """Run a COMPLETE-mode streaming plan to completion (availableNow)
-    through a foreachBatch overwrite sink — every micro-batch rewrites
-    the whole table, so after the source drains the table holds the
-    final full aggregate. Same fresh-dir + cleanup discipline as
-    _run_to_fresh_upsert."""
-    spark = stream_df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix=f"pmr_spark_stream_{tag}_")
-    target = os.path.join(run_dir, "table")
-    q = (
-        stream_df.writeStream.outputMode("complete")
-        .foreachBatch(
-            lambda df, _bid: df.write.mode("overwrite").parquet(target)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(target).localCheckpoint(eager=True)
-    shutil.rmtree(run_dir, ignore_errors=True)
-    return out
+    return _run_stream(sessions, "complete")
 
 
 from parallel_map_reduce_spark.operators import textstats as _textstats
@@ -401,4 +368,4 @@ def q_streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = _textstats.apply_quality_classifier(
         windowed.stream_documents(spark, sf_dir), w
     )
-    return _run_append_to_fresh_parquet(scored, "qfilter")
+    return _run_stream(scored, "append")

@@ -142,10 +142,9 @@ def test_prefix_filtered_pairs_equal_naive(spark, docs):
 
 
 def test_prefix_filter_excludes_hot_shingles_from_join(spark):
-    """The ranking must push corpus-frequent shingles out of the joined
-    prefix: docs overlapping ONLY via boilerplate that fills their
-    suffixes still pair correctly (completeness), and a doc's prefix is
-    strictly smaller than its shingle set whenever ceil(t*n_sh) > 1."""
+    """The ranking pushes corpus-frequent shingles out of the joined
+    prefix; docs overlapping ONLY via boilerplate that fills their
+    suffixes must still pair correctly (completeness)."""
     boiler = "common license header text always present"
     rows = [
         Row(doc_id=i, text=f"u{i}a u{i}b u{i}c {boiler}") for i in range(6)
@@ -165,30 +164,47 @@ def test_prefix_filter_excludes_hot_shingles_from_join(spark):
     }
     assert prefix == naive
     assert (100, 101) in prefix
-    # The exclusion property itself: each doc's joined prefix has exactly
-    # n_sh - ceil(t*n_sh) + 1 shingles, which is a STRICT subset whenever
-    # ceil(t*n_sh) > 1 (the boiler docs here: 7 shingles → prefix 6, so
-    # their hottest shingle — boilerplate, df-ranked last — never joins).
-    t = 0.2
-    ranked = dedup.ranked_shingle_index(dedup.explode_shingles(df))
-    sizes = {
-        r["doc_id"]: (r["n_prefix"], r["n_sh"])
-        for r in ranked.groupBy("doc_id", "n_sh")
-        .agg(
-            F.sum(
-                (
-                    F.col("_rn")
-                    <= F.col("n_sh") - F.ceil(F.col("n_sh") * F.lit(t)) + 1
-                ).cast("long")
-            ).alias("n_prefix")
-        )
-        .collect()
-    }
-    assert sizes
-    for n_prefix, n_sh in sizes.values():
-        assert n_prefix == n_sh - math.ceil(t * n_sh) + 1
-    shrunk = [v for v in sizes.values() if math.ceil(t * v[1]) > 1]
-    assert shrunk and all(n_prefix < n_sh for n_prefix, n_sh in shrunk)
+
+
+# (t, n_sh) where the former double form ceil(n_sh·2t/(1+t) - 1e-9) of the
+# index-prefix bound was one too high (found by scanning n_sh down from
+# 10^9 over t = 0.1 .. 0.95); the same n_sh also breaks alpha at t=0.2, 0.8.
+_PPJOIN_FLOAT_MISSES = [(0.2, 999_999_999), (0.4, 999_999_994), (0.8, 999_999_999)]
+
+
+def test_ppjoin_bounds_are_exact_up_to_a_billion_shingles(spark):
+    """PPJoin's prefix lengths, size-ratio prune and required overlap,
+    evaluated by Spark exactly as the prefix tier does, equal their
+    exact rational values for set sizes up to 10^9 — including the
+    sizes where a double ceil with an epsilon guard is off by one."""
+    from fractions import Fraction
+
+    sizes = {1, 2, 3, 4, 5, 6, 7, 9, 11, 97, 1000, 999_983, 10**6, 10**7 + 1}
+    sizes |= {n for _, n in _PPJOIN_FLOAT_MISSES} | {999_999_995, 10**9}
+    rows = [(n, n, n_l) for n in sorted(sizes) for n_l in (n, 10**9)]
+    frame = spark.createDataFrame(rows, "n_sh long, n_s long, n_l long")
+    thresholds = (0.2, 0.35, 0.4, 0.5, 0.7, 0.8, 0.9)
+    bounds = [
+        c.alias(f"b{j}_{i}")
+        for j, t in enumerate(thresholds)
+        for i, c in enumerate(dedup._ppjoin_bounds(t))
+    ]
+    got = frame.select("n_sh", "n_l", *bounds).collect()
+    for j, t in enumerate(thresholds):
+        r = Fraction(str(t))
+        for row in got:
+            n, n_l = row[0], row[1]
+            probe, index, size_ok, alpha = row[2 + 4 * j : 6 + 4 * j]
+            assert probe == n - math.ceil(n * r) + 1, (t, n)
+            assert index == n - math.ceil(n * 2 * r / (1 + r)) + 1, (t, n)
+            assert size_ok == (n_l * r <= n), (t, n, n_l)
+            assert alpha == math.ceil((n + n_l) * r / (1 + r)), (t, n, n_l)
+    for t, n in _PPJOIN_FLOAT_MISSES:
+        r = Fraction(str(t))
+        exact = math.ceil(n * 2 * r / (1 + r))
+        assert math.ceil(n * (2.0 * t / (1.0 + t)) - 1e-9) == exact + 1
+    # A threshold with no short decimal form rounds DOWN (lossless side).
+    assert dedup._threshold_ratio(1 / 3) == (333_333_333, 10**9)
 
 
 def test_prefix_equals_naive_on_zipfian_boilerplate(spark):
@@ -2985,3 +3001,20 @@ def test_stored_index_lifecycle_job_counts(spark, tmp_path, layout):
     }
     got = {name: _jobs_started(spark, step) for name, step in steps.items()}
     assert got == _LIFECYCLE_JOBS[layout]
+
+
+# Spark jobs of three registered ANN audit rows at sf0.001, query call
+# plus final collect: an in-memory tier, a stored index, and a full
+# build → append → compact lifecycle. Measured before the audit rows
+# were routed through one shared path, identical after, at 2 and 4
+# cores.
+_AUDIT_ROW_JOBS = {"knn_sq_ann": 17, "knn_pq_ann_stored": 36, "knn_sq_ann_stored": 37}
+
+
+@pytest.mark.parametrize("name", sorted(_AUDIT_ROW_JOBS))
+def test_ann_audit_row_job_counts(spark, sf_dir, name):
+    import __spark_entry__ as entrymod
+
+    query = entrymod.queries()[name]
+    got = _jobs_started(spark, lambda: query(spark, sf_dir).collect())
+    assert got == _AUDIT_ROW_JOBS[name]

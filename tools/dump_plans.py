@@ -17,7 +17,10 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# The checkout this file lives in, so a run from another worktree
+# measures that worktree's code.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 
 def main() -> int:
@@ -33,7 +36,7 @@ def main() -> int:
 
     spark = get_spark("dump_plans")
     qs = entrymod.queries()
-    out_dir = os.path.join("/root/repo/plans", args.tag)
+    out_dir = os.path.join(REPO_ROOT, "plans", args.tag)
     os.makedirs(out_dir, exist_ok=True)
     for name in args.queries:
         if name not in qs:
