@@ -1316,10 +1316,16 @@ def kn_trigram_lm_doc_scores(
     n-gram TYPES (trigram counts → context/type rollups), never over
     corpus positions; scoring joins each position to the model on
     (u,v,w)/(v,w)/(v)/(w) — Zipf-skewed joins, the skew.py salting
-    recipes' target at 100 TB. The position frame and each count frame
-    feed 2+ plan branches, so they localCheckpoint (the "model is a
+    recipes' target at 100 TB. The position frame and all five model
+    tables (c3, ctx3, m2, mv, wt) localCheckpoint (the "model is a
     stored table" design; a production run persists the counts once
-    and scores many corpora)."""
+    and scores many corpora), so every position join — the (v) and (w)
+    hot-key joins included — reads both sides through an exchange that
+    AQE's skew-join rule can split. A join that reads an aggregate's
+    output directly (already hash-partitioned on the key, no exchange
+    under it) cannot be split. ctx3, mv and wt checkpoint lazily: the
+    scoring job fills them, and wt, which feeds both its join and the
+    total, is computed once."""
     from parallel_map_reduce_spark.operators.dedup import tokens_df
 
     tdf = tokens_df(docs, text_col, id_col)
@@ -1353,21 +1359,31 @@ def kn_trigram_lm_doc_scores(
         .agg(F.count(F.lit(1)).cast("double").alias("c_uvw"))
         .localCheckpoint(eager=True)
     )
-    ctx3 = c3.groupBy("u", "v").agg(
-        F.sum("c_uvw").alias("c_uv"),
-        F.count(F.lit(1)).cast("double").alias("n1p_uv"),
+    ctx3 = (
+        c3.groupBy("u", "v")
+        .agg(
+            F.sum("c_uvw").alias("c_uv"),
+            F.count(F.lit(1)).cast("double").alias("n1p_uv"),
+        )
+        .localCheckpoint(eager=False)
     )
     m2 = (
         c3.groupBy("v", "w")
         .agg(F.count(F.lit(1)).cast("double").alias("n1p_dvw"))
         .localCheckpoint(eager=True)
     )
-    mv = m2.groupBy("v").agg(
-        F.sum("n1p_dvw").alias("n1p_dvd"),
-        F.count(F.lit(1)).cast("double").alias("n1p_vd"),
+    mv = (
+        m2.groupBy("v")
+        .agg(
+            F.sum("n1p_dvw").alias("n1p_dvd"),
+            F.count(F.lit(1)).cast("double").alias("n1p_vd"),
+        )
+        .localCheckpoint(eager=False)
     )
-    wt = m2.groupBy("w").agg(
-        F.count(F.lit(1)).cast("double").alias("n1p_dw")
+    wt = (
+        m2.groupBy("w")
+        .agg(F.count(F.lit(1)).cast("double").alias("n1p_dw"))
+        .localCheckpoint(eager=False)
     )
     tot = wt.agg(F.sum("n1p_dw").alias("n1p_tot"))
     p_cont = F.col("n1p_dw") / F.col("n1p_tot")

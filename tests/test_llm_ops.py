@@ -2,9 +2,12 @@
 multimodal plumbing. The deterministic cores are oracle-checked by the
 driver; these tests cover the approximate/engine-side behavior."""
 
+import glob
 import math
+import os
 
 import pytest
+from conftest import REFERENCE_FILES_DIR
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -635,6 +638,10 @@ def test_connected_components_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+@pytest.mark.skipif(
+    not glob.glob(os.path.join(REFERENCE_FILES_DIR, "small_*.txt")),
+    reason="reference corpus not present",
+)
 def test_binary_file_source_reads_payload_bytes(spark):
     """binaryFile ingestion: content bytes and lengths must match the
     on-disk files exactly, and a metadata-only projection must not fail

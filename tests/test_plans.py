@@ -833,11 +833,18 @@ def test_kn_trigram_position_joins_aqe_skew_split(spark):
     its skewed position join SPLIT at runtime (SortMergeJoin(skew=true)
     in the final adaptive plan) with no code change — the joins are
     shuffle-based and AQE-splittable, not locked into a shape skew
-    could wedge. Thresholds are lowered to make local[32]'s tiny
-    shuffle partitions measurable; broadcast is disabled because at
-    test scale every count table would broadcast and no join would
-    shuffle at all (at 100 TB the count tables are data-sized and DO
-    shuffle — this test forces that regime)."""
+    could wedge. The split join must be keyed on the hot key itself
+    ((v) or (w)), not on a partition that hash collisions happened to
+    inflate. Shuffle partitions are max(SPARK_GRAFT_CPUS, 8), so the
+    skew threshold and the advisory size are lowered to make tiny
+    test-scale partitions measurable, and the coalescing floor
+    (minPartitionSize, 1 MB by default) is scaled down with them by
+    the same 1/16384: left at 1 MB it coalesces every ~0.5 MB exchange
+    to one partition, every later stage has one map task, and AQE
+    cannot split a partition that comes from one mapper. Broadcast is
+    disabled because at test scale every count table would broadcast
+    and no join would shuffle at all (at 100 TB the count tables are
+    data-sized and DO shuffle — this test forces that regime)."""
     from pyspark.sql import Row
 
     from parallel_map_reduce_spark.operators import curation_extras as ce
@@ -857,6 +864,7 @@ def test_kn_trigram_position_joins_aqe_skew_split(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4KB",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64b",
     }
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
@@ -868,6 +876,11 @@ def test_kn_trigram_position_joins_aqe_skew_split(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in plan
         assert "SortMergeJoin(skew=true)" in plan, plan[:2000]
+        # the split join is keyed on the hot key "h", not a hash collision
+        assert (
+            "SortMergeJoin(skew=true) [v#" in plan
+            or "SortMergeJoin(skew=true) [w#" in plan
+        ), plan[:2000]
     finally:
         for k, v in saved.items():
             if v is None:

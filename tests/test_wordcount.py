@@ -1,6 +1,9 @@
 """Flagship wordcount tests — edge cases from FIXTURES.md §2."""
 
+import os
+
 import pytest
+from conftest import REFERENCE_FILES_DIR
 from pyspark.sql import Row
 
 from parallel_map_reduce_spark.operators.wordcount import (
@@ -112,6 +115,12 @@ def test_permutation_invariance(spark):
     assert _counts(spark, texts) == _counts(spark, list(reversed(texts)))
 
 
+@pytest.mark.skipif(
+    not os.path.exists(
+        os.path.join(os.path.dirname(REFERENCE_FILES_DIR), "serial_wc.txt")
+    ),
+    reason="reference corpus not present",
+)
 def test_custom_datasource_reads_reference_output(spark):
     """The wordcount_text Python data source must mount the reference's
     own serial output byte-exactly: 109,223 rows, 2,297,140 total count,
