@@ -19,6 +19,8 @@ al. 2023 SemDeDup cluster sharding; Sennrich et al. 2016 BPE).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -295,45 +297,37 @@ def incremental_lsh_dedup(
     phase's signatures to its store without a recompute pass.
     """
     from parallel_map_reduce_spark.operators.dedup import (
+        _admission_statuses,
         band_buckets,
-        connected_components,
         minhash_signatures,
         shingle_sets,
     )
 
-    if new_signatures is not None:
-        # Eager like the other branches (ADVICE r13): the semi-join is
-        # consumed by BOTH concurrently-submitted candidate jobs below
-        # plus the sets_new semi-join, and with return_new_signatures
-        # the caller appends it to a store — one tiny materialization
-        # job beats recomputing the join per consumer and hands the
-        # caller a cache-backed frame, matching the other branches.
-        sig_new = new_signatures.join(
+    def signed(docs: DataFrame) -> DataFrame:
+        return minhash_signatures(
+            docs, text_col, id_col, num_hashes, shingle_n
+        ).localCheckpoint(eager=True)
+
+    def new_side() -> DataFrame:
+        # Eager either way (ADVICE r13): the new side feeds BOTH
+        # concurrently-submitted candidate jobs below plus the sets_new
+        # semi-join, and with return_new_signatures the caller appends
+        # it to a store — one tiny materialization job beats
+        # recomputing it per consumer.
+        if new_signatures is None:
+            return signed(new_docs)
+        return new_signatures.join(
             new_docs.select(id_col), id_col, "left_semi"
         ).localCheckpoint(eager=True)
-        sig_kept = (
-            kept_signatures
-            if kept_signatures is not None
-            else minhash_signatures(
-                kept_docs, text_col, id_col, num_hashes, shingle_n
-            ).localCheckpoint(eager=True)
-        )
-    elif kept_signatures is None:
-        # Both signature tables need computing and are independent —
-        # overlap their materializations (guide §2.6).
-        sig_new, sig_kept = _overlap(
-            lambda: minhash_signatures(
-                new_docs, text_col, id_col, num_hashes, shingle_n
-            ).localCheckpoint(eager=True),
-            lambda: minhash_signatures(
-                kept_docs, text_col, id_col, num_hashes, shingle_n
-            ).localCheckpoint(eager=True),
-        )
-    else:
-        sig_new = minhash_signatures(
-            new_docs, text_col, id_col, num_hashes, shingle_n
-        ).localCheckpoint(eager=True)
-        sig_kept = kept_signatures
+
+    # The kept side is signed here only when no stored table is passed;
+    # the two materializations are independent, so they overlap (guide
+    # §2.6) — a lone thunk runs on the calling thread.
+    sig_new, *signed_kept = _overlap(
+        new_side,
+        *([lambda: signed(kept_docs)] if kept_signatures is None else []),
+    )
+    sig_kept = signed_kept[0] if signed_kept else kept_signatures
     bk_new = band_buckets(sig_new, id_col, num_hashes, bands)
     bk_kept = band_buckets(sig_kept, id_col, num_hashes, bands)
     join_keys = ["band"] + [f"k{r}" for r in range(num_hashes // bands)]
@@ -393,44 +387,12 @@ def incremental_lsh_dedup(
     cross = _verified(cross_cand, "id_n", "id_k", sets_new, sets_kept)
     cross_dup = cross.groupBy("id_n").agg(F.min("id_k").alias("dup_of"))
 
-    # Within-batch components over docs that survived the cross pass.
+    # Within-batch edges among docs that survived the cross pass.
     intra = _verified(intra_cand, "id_a", "id_b", sets_new, sets_new)
     intra_live = intra.join(
         cross_dup.select(F.col("id_n").alias("id_a")), "id_a", "left_anti"
     ).join(cross_dup.select(F.col("id_n").alias("id_b")), "id_b", "left_anti")
-    comps = connected_components(intra_live, "id_a", "id_b")
-
-    base = new_docs.select(F.col(id_col))
-    result = (
-        base.join(cross_dup.withColumnRenamed("id_n", id_col), id_col, "left")
-        .join(
-            comps.select(
-                F.col("u").cast("long").alias(id_col),
-                F.col("label").alias("_comp"),
-            ),
-            id_col,
-            "left",
-        )
-        .select(
-            id_col,
-            F.when(F.col("dup_of").isNotNull(), F.lit("cross_dup"))
-            .when(
-                F.col("_comp").isNotNull() & (F.col("_comp") != F.col(id_col)),
-                F.lit("batch_dup"),
-            )
-            .otherwise(F.lit("kept"))
-            .alias("status"),
-            # -1 sentinel (not NULL) for survivors: a nullable BIGINT
-            # drifts to float64 + NaN through a pandas fetch path, which
-            # is exactly the cross-engine hash hazard the dtype guard
-            # (tests/test_oracle_dtypes.py) exists to block
-            F.coalesce(
-                F.col("dup_of"),
-                F.when(F.col("_comp") != F.col(id_col), F.col("_comp")),
-                F.lit(-1).cast("long"),
-            ).alias("dup_of"),
-        )
-    )
+    result = _admission_statuses(new_docs, cross_dup, intra_live, id_col)
     if return_new_signatures:
         return result, sig_new
     return result
@@ -1479,6 +1441,29 @@ GROUP BY b.doc_id
 # (higher mean log-prob == lower perplexity == head).
 
 
+def _tercile_buckets(scores: DataFrame, docs: DataFrame, id_col: str) -> DataFrame:
+    """(id, lang, avg_logprob, bucket): the CCNet cut of per-doc LM
+    ``scores`` — NTILE(3) per language over the rounded score,
+    descending, with id tie-break, named head/middle/tail."""
+    langs = docs.select(F.col(id_col), F.col("lang"))
+    w = Window.partitionBy("lang").orderBy(
+        F.col("avg_logprob").desc(), F.col(id_col).asc()
+    )
+    return (
+        scores.join(langs, id_col)
+        .withColumn("_tile", F.ntile(3).over(w))
+        .select(
+            id_col,
+            "lang",
+            "avg_logprob",
+            F.when(F.col("_tile") == 1, F.lit("head"))
+            .when(F.col("_tile") == 2, F.lit("middle"))
+            .otherwise(F.lit("tail"))
+            .alias("bucket"),
+        )
+    )
+
+
 def ccnet_perplexity_buckets(
     docs: DataFrame,
     lam: float = 0.8,
@@ -1496,23 +1481,8 @@ def ccnet_perplexity_buckets(
     swap the exact NTILE for approx_percentile tercile thresholds, the
     same exact-vs-sketch split quality_quantile_filter_approx ships.
     """
-    scores = bigram_lm_doc_scores(docs, lam, text_col, id_col)
-    langs = docs.select(F.col(id_col), F.col("lang"))
-    w = Window.partitionBy("lang").orderBy(
-        F.col("avg_logprob").desc(), F.col(id_col).asc()
-    )
-    return (
-        scores.join(langs, id_col)
-        .withColumn("_tile", F.ntile(3).over(w))
-        .select(
-            id_col,
-            "lang",
-            "avg_logprob",
-            F.when(F.col("_tile") == 1, F.lit("head"))
-            .when(F.col("_tile") == 2, F.lit("middle"))
-            .otherwise(F.lit("tail"))
-            .alias("bucket"),
-        )
+    return _tercile_buckets(
+        bigram_lm_doc_scores(docs, lam, text_col, id_col), docs, id_col
     )
 
 
@@ -1551,23 +1521,8 @@ def kn_trigram_perplexity_buckets(
     plus one window sort per language over (score, id); the 100 TB
     swap-in for the exact NTILE is approx_percentile tercile
     thresholds, as in the bigram bucket row."""
-    scores = kn_trigram_lm_doc_scores(docs, d, text_col, id_col)
-    langs = docs.select(F.col(id_col), F.col("lang"))
-    w = Window.partitionBy("lang").orderBy(
-        F.col("avg_logprob").desc(), F.col(id_col).asc()
-    )
-    return (
-        scores.join(langs, id_col)
-        .withColumn("_tile", F.ntile(3).over(w))
-        .select(
-            id_col,
-            "lang",
-            "avg_logprob",
-            F.when(F.col("_tile") == 1, F.lit("head"))
-            .when(F.col("_tile") == 2, F.lit("middle"))
-            .otherwise(F.lit("tail"))
-            .alias("bucket"),
-        )
+    return _tercile_buckets(
+        kn_trigram_lm_doc_scores(docs, d, text_col, id_col), docs, id_col
     )
 
 
@@ -2615,11 +2570,9 @@ def _store_slices(subs: list[str], before_bid: int | None) -> list[str]:
     result assembly). Module-level so the boundary arithmetic is
     unit-testable without running the engine. Names starting with '_'
     (a crashed compaction's ``_compact`` staging dir or its ``_old_``
-    pre-delete renames) are never read as slices — which is only
-    sufficient once :func:`recover_store_slices` has restored any
-    pre-promote ``_old_`` renames (those hold live rows the plain
-    listing would otherwise miss), so readers of a store a crashed
-    compaction may have touched run that recovery before listing."""
+    pre-delete renames) are never read as slices; :func:`_read_slices`
+    runs :func:`recover_store_slices` before listing, so pre-promote
+    ``_old_`` renames (live rows) are restored by then."""
     subs = [s for s in subs if not s.startswith("_")]
     if before_bid is None:
         return subs
@@ -2628,6 +2581,81 @@ def _store_slices(subs: list[str], before_bid: int | None) -> list[str]:
         for s in subs
         if s == "base" or (s.startswith("batch_") and int(s[6:]) < before_bid)
     ]
+
+
+
+def _read_slices(spark, path: str, before_bid: int | None = None) -> DataFrame:
+    """Every slice of a per-batch-keyed store (``base`` plus one
+    ``batch_<bid>`` subdirectory per writer, so a replay overwrites in
+    place), or with ``before_bid`` only those :func:`_store_slices`
+    lets that micro-batch see. Recovery runs first, so a crashed
+    compaction's ``_old_`` renames are back before the listing; on a
+    store that was never compacted that is one ``listdir`` and no Spark
+    job."""
+    recover_store_slices(path)
+    subs = _store_slices(sorted(os.listdir(path)), before_bid)
+    return spark.read.parquet(*(os.path.join(path, s) for s in subs))
+
+
+def _seed_slices(
+    docs: DataFrame, run_dir: str, text_col: str, id_col: str
+) -> None:
+    """Seed the admission chain's text and signature stores with the base
+    kept corpus (even ids)."""
+    from parallel_map_reduce_spark.operators.dedup import minhash_signatures
+
+    base = docs.filter(F.col(id_col) % 2 == 0)
+    base.write.parquet(os.path.join(run_dir, "kept_store", "base"))
+    minhash_signatures(base, text_col, id_col).write.parquet(
+        os.path.join(run_dir, "kept_sigs", "base")
+    )
+
+
+def _admit_slice(
+    spark,
+    batch_df: DataFrame,
+    run_dir: str,
+    bid: int,
+    mod: int,
+    text_col: str,
+    id_col: str,
+) -> None:
+    """One ingest step of the admission chain: admit ``batch_df`` against
+    the store slices written before ``bid``, then write its statuses,
+    its survivors and their signatures as slice ``batch_<bid>`` of the
+    ``statuses``, ``kept_store`` and ``kept_sigs`` stores. Every write
+    overwrites: foreachBatch is at-least-once, so a replayed micro-batch
+    rewrites its own slice instead of appending duplicates into the
+    chain."""
+    from parallel_map_reduce_spark.operators.dedup import minhash_signatures
+
+    store = os.path.join(run_dir, "kept_store")
+    sig_store = os.path.join(run_dir, "kept_sigs")
+    # Materialized: the status write AND the survivor filter both
+    # consume res — without the checkpoint the verification joins and
+    # component formation replay once per consumer.
+    res = (
+        incremental_lsh_dedup(
+            batch_df,
+            _read_slices(spark, store, bid),
+            text_col=text_col,
+            id_col=id_col,
+            kept_signatures=_read_slices(spark, sig_store, bid),
+        )
+        .withColumn("batch_id", ((F.col(id_col) % mod + 1) / 2).cast("long"))
+        .localCheckpoint(eager=True)
+    )
+    slice_name = f"batch_{bid}"
+    res.select(id_col, "batch_id", "status", "dup_of").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(run_dir, "statuses", slice_name))
+    survivors = batch_df.join(
+        res.filter(F.col("status") == "kept").select(id_col), id_col
+    ).localCheckpoint(eager=True)
+    survivors.write.mode("overwrite").parquet(os.path.join(store, slice_name))
+    minhash_signatures(survivors, text_col, id_col).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(sig_store, slice_name))
 
 
 def streaming_incremental_dedup(
@@ -2666,36 +2694,15 @@ def streaming_incremental_dedup(
         # final listing (and `% (2*n_batches)` degenerates besides).
         raise ValueError(f"n_batches must be >= 1, got {n_batches}")
     import glob as _glob
-    import os
 
-    from parallel_map_reduce_spark.operators.dedup import minhash_signatures
     from parallel_map_reduce_spark.streaming.windowed import stream_docs_dir
 
     mod = 2 * n_batches
 
     def run(run_dir: str) -> DataFrame:
         stage = os.path.join(run_dir, "feed")
-        store = os.path.join(run_dir, "kept_store")
-        sig_store = os.path.join(run_dir, "kept_sigs")
-        out = os.path.join(run_dir, "statuses")
         os.makedirs(stage)
-
-        def _read_all(path: str, before_bid: int | None = None) -> DataFrame:
-            # Stores are laid out one subdirectory per writer (base +
-            # one per micro-batch) so replays overwrite in place; the
-            # recursive read unions whatever subset exists.  With
-            # ``before_bid`` set, only slices written by STRICTLY EARLIER
-            # micro-batches are read — a retried batch must not dedup
-            # against its own stale partial output (or a later batch's).
-            subs = _store_slices(sorted(os.listdir(path)), before_bid)
-            return spark.read.parquet(*(os.path.join(path, s) for s in subs))
-
-        # Base kept corpus (even ids) seeds the text AND signature stores.
-        base = docs.filter(F.col(id_col) % 2 == 0)
-        base.write.parquet(os.path.join(store, "base"))
-        minhash_signatures(base, text_col, id_col).write.parquet(
-            os.path.join(sig_store, "base")
-        )
+        _seed_slices(docs, run_dir, text_col, id_col)
 
         # One file per ingest batch, mtimes ascending so the file source
         # (oldest-first) replays the admission order deterministically.
@@ -2709,50 +2716,23 @@ def streaming_incremental_dedup(
             os.replace(part, dst)
             os.utime(dst, (k, k))
 
-        def admit(batch_df: DataFrame, bid: int) -> None:
-            # foreachBatch is at-least-once: every output is keyed by the
-            # engine's batch id and overwritten, so a micro-batch replay
-            # rewrites its own slice instead of appending duplicates into
-            # the admission chain.
-            kept = _read_all(store, before_bid=bid)
-            # Materialized: the status write AND the survivor filter both
-            # consume res — without the checkpoint the verification joins
-            # and component formation replay once per consumer.
-            res = (
-                incremental_lsh_dedup(
-                    batch_df,
-                    kept,
-                    text_col=text_col,
-                    id_col=id_col,
-                    kept_signatures=_read_all(sig_store, before_bid=bid),
-                )
-                .withColumn(
-                    "batch_id", ((F.col(id_col) % mod + 1) / 2).cast("long")
-                )
-                .localCheckpoint(eager=True)
-            )
-            res.select(id_col, "batch_id", "status", "dup_of").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out, f"batch_{bid}"))
-            surv = res.filter(F.col("status") == "kept").select(id_col)
-            survivors = batch_df.join(surv, id_col).localCheckpoint(eager=True)
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(store, f"batch_{bid}")
-            )
-            minhash_signatures(survivors, text_col, id_col).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(sig_store, f"batch_{bid}"))
-
+        # Slices are keyed by the engine's batch id, so a replayed
+        # micro-batch reads only earlier batches' slices and rewrites
+        # its own.
         q = (
             stream_docs_dir(spark, stage, max_files_per_trigger=1)
             .writeStream.outputMode("append")
-            .foreachBatch(admit)
+            .foreachBatch(
+                lambda batch_df, bid: _admit_slice(
+                    spark, batch_df, run_dir, bid, mod, text_col, id_col
+                )
+            )
             .trigger(availableNow=True)
             .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
             .start()
         )
         q.awaitTermination()
-        return _read_all(out)
+        return _read_slices(spark, os.path.join(run_dir, "statuses"))
 
     return in_scratch("stream_incdedup", run)
 
@@ -3090,7 +3070,6 @@ def store_lock(path: str, timeout: float = 600.0, poll: float = 0.05):
     """
     import contextlib
     import fcntl
-    import os
     import time
 
     @contextlib.contextmanager
@@ -3173,8 +3152,6 @@ def recover_store_slices(path: str, lock_timeout: float = 600.0) -> str:
     both under the lock) so the branch decision and the slice set
     reflect one consistent observation of the store.
     """
-    import os
-
     names = os.listdir(path)
     has_markers = "_compact" in names or any(
         s.startswith("_old_") for s in names
@@ -3190,7 +3167,6 @@ def _recover_store_slices_locked(path: str) -> str:
     :func:`store_lock` on ``path`` (compactors call this directly from
     inside their own locked section; everyone else goes through the
     locking wrapper)."""
-    import os
     import shutil
 
     tmp = os.path.join(path, "_compact")
@@ -3243,10 +3219,9 @@ def compact_store_slices(
     states apart by the staging dir's existence and rolls the live
     generation BACK (pre-promote crash) or clears the dead renames
     (post-promote crash) — never deleting a sole copy. Readers that
-    may open a store between a crash and the next compaction call the
-    same recovery first (see the ``_read_all`` helpers).
+    may open a store between a crash and the next compaction run the
+    same recovery first (:func:`_read_slices` does).
     """
-    import os
     import shutil
 
     with store_lock(path, timeout=lock_timeout):
@@ -3304,70 +3279,29 @@ def incremental_lsh_dedup_compacted(
         raise ValueError(
             f"compact_after must be in [1, {n_batches}], got {compact_after}"
         )
-    import os
-
-    from parallel_map_reduce_spark.operators.dedup import minhash_signatures
-
     mod = 2 * n_batches
 
     def run(run_dir: str) -> DataFrame:
-        store = os.path.join(run_dir, "kept_store")
-        sig_store = os.path.join(run_dir, "kept_sigs")
-        out = os.path.join(run_dir, "statuses")
-
-        def _read_all(path: str) -> DataFrame:
-            # A compacted store may carry a crashed compaction's
-            # leftovers; recovery first, or the plain listing would
-            # miss rows renamed to _old_ before the promote.
-            recover_store_slices(path)
-            subs = _store_slices(sorted(os.listdir(path)), None)
-            return spark.read.parquet(*(os.path.join(path, s) for s in subs))
-
-        base = docs.filter(F.col(id_col) % 2 == 0)
-        base.write.parquet(os.path.join(store, "base"))
-        minhash_signatures(base, text_col, id_col).write.parquet(
-            os.path.join(sig_store, "base")
-        )
-
+        stores = [
+            os.path.join(run_dir, s) for s in ("kept_store", "kept_sigs", "statuses")
+        ]
+        _seed_slices(docs, run_dir, text_col, id_col)
         for k in range(1, n_batches + 1):
             batch_df = docs.filter(F.col(id_col) % mod == 2 * k - 1)
-            res = (
-                incremental_lsh_dedup(
-                    batch_df,
-                    _read_all(store),
-                    text_col=text_col,
-                    id_col=id_col,
-                    kept_signatures=_read_all(sig_store),
-                )
-                .withColumn(
-                    "batch_id", ((F.col(id_col) % mod + 1) / 2).cast("long")
-                )
-                .localCheckpoint(eager=True)
-            )
-            res.select(id_col, "batch_id", "status", "dup_of").write.parquet(
-                os.path.join(out, f"batch_{k}")
-            )
-            survivors = batch_df.join(
-                res.filter(F.col("status") == "kept").select(id_col), id_col
-            ).localCheckpoint(eager=True)
-            survivors.write.parquet(os.path.join(store, f"batch_{k}"))
-            minhash_signatures(survivors, text_col, id_col).write.parquet(
-                os.path.join(sig_store, f"batch_{k}")
-            )
+            _admit_slice(spark, batch_df, run_dir, k, mod, text_col, id_col)
             if k == compact_after:
                 # Quiesced between ingests — the compaction window. The
                 # folded-slice counts assert the pass really ran over
-                # multi-slice stores (k batch slices + base each).
-                for p in (store, sig_store, out):
+                # multi-slice stores: base + k batch slices for the text
+                # and signature stores, k batch slices for the statuses
+                # (single-slice stores no-op to 0).
+                for p, expected in zip(stores, (k + 1, k + 1, k)):
                     folded = compact_store_slices(spark, p)
-                    # store/sig_store: base + k batch slices; statuses:
-                    # k batch slices (single-slice stores no-op to 0).
-                    expected = k + 1 if p != out else k
                     if expected >= 2 and folded != expected:
                         raise RuntimeError(
                             f"compaction folded {folded} slices at {p}, "
                             f"expected {expected}"
                         )
-        return _read_all(out)
+        return _read_slices(spark, stores[-1])
 
     return in_scratch("compact_incdedup", run)

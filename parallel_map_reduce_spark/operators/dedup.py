@@ -887,3 +887,50 @@ def connected_components(
         if n_changed == 0:
             break
     return labels
+
+
+def _admission_statuses(
+    ids: DataFrame, cross_dup: DataFrame, edges: DataFrame, id_col: str
+) -> DataFrame:
+    """(id, status, dup_of) of an admitted batch — the status core of
+    incremental admission, shared by the MinHash tier
+    (curation_extras.incremental_lsh_dedup) and the IVF tier
+    (similarity.incremental_semantic_dedup and its _with_audit twin).
+
+    ``ids`` holds the batch ids, ``cross_dup`` (id_n, dup_of) each
+    batch row's smallest matching kept id, and ``edges`` (id_a, id_b)
+    the verified within-batch pairs among the cross survivors; each
+    tier builds its own. ``cross_dup`` wins over ``batch_dup`` (a
+    non-minimal member of a within-batch component; dup_of = the
+    component's smallest id, its survivor) over ``kept``. Survivors
+    carry dup_of = -1, not NULL: a nullable BIGINT drifts to float64 +
+    NaN through a pandas fetch path, the cross-engine hash hazard the
+    dtype guard (tests/test_oracle_dtypes.py) blocks."""
+    comps = connected_components(edges, "id_a", "id_b")
+    return (
+        ids.select(id_col)
+        .join(cross_dup.withColumnRenamed("id_n", id_col), id_col, "left")
+        .join(
+            comps.select(
+                F.col("u").cast("long").alias(id_col),
+                F.col("label").alias("_comp"),
+            ),
+            id_col,
+            "left",
+        )
+        .select(
+            id_col,
+            F.when(F.col("dup_of").isNotNull(), F.lit("cross_dup"))
+            .when(
+                F.col("_comp").isNotNull() & (F.col("_comp") != F.col(id_col)),
+                F.lit("batch_dup"),
+            )
+            .otherwise(F.lit("kept"))
+            .alias("status"),
+            F.coalesce(
+                F.col("dup_of"),
+                F.when(F.col("_comp") != F.col(id_col), F.col("_comp")),
+                F.lit(-1).cast("long"),
+            ).alias("dup_of"),
+        )
+    )

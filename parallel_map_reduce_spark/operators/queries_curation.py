@@ -583,6 +583,42 @@ FROM statuses
 """
 
 
+def _status_audit(
+    exact: DataFrame, p_cross: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The semantic admission rows' audit of one batch: the exact side's
+    seven per-status sums (value-hashed by the oracle) beside ``n_false``,
+    the pruned cross_dup ids outside the exact set (0 by construction —
+    scoring inside probed cells is exact). Returns that one-row frame and
+    the exact cross_dup ids, for the caller's own recall rule."""
+    e_cross = exact.filter(F.col("status") == "cross_dup").select("vec_id")
+    sums = exact.agg(
+        F.count(F.lit(1)).alias("n_batch"),
+        F.sum((F.col("status") == "cross_dup").cast("long")).alias("n_cross"),
+        F.sum((F.col("status") == "batch_dup").cast("long")).alias(
+            "n_batch_dup"
+        ),
+        F.sum((F.col("status") == "kept").cast("long")).alias("n_kept"),
+        F.sum(
+            F.when(F.col("status") == "cross_dup", F.col("dup_of")).otherwise(
+                0
+            )
+        ).alias("sum_cross_dup_of"),
+        F.sum(
+            F.when(F.col("status") == "batch_dup", F.col("dup_of")).otherwise(
+                0
+            )
+        ).alias("sum_batch_dup_of"),
+        F.sum(
+            F.when(F.col("status") == "kept", F.col("vec_id")).otherwise(0)
+        ).alias("sum_kept_ids"),
+    )
+    n_false = p_cross.join(e_cross, "vec_id", "left_anti").agg(
+        F.count(F.lit(1)).alias("n_false")
+    )
+    return sums.crossJoin(n_false), e_cross
+
+
 @register("ism_audit_query", ISM_AUDIT_SQL)
 def ism_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time semantic dedup, driver-audited (registered round 10
@@ -617,35 +653,11 @@ def ism_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         return exact
 
     exact = in_scratch("ism_index", admit)
-    e_cross = exact.filter(F.col("status") == "cross_dup").select("vec_id")
-    audits = (
-        p_cross.join(e_cross, "vec_id", "left_anti")
-        .agg(F.count(F.lit(1)).alias("n_false"))
-        .crossJoin(p_cross.agg(F.count(F.lit(1)).alias("n_p")))
-        .crossJoin(e_cross.agg(F.count(F.lit(1)).alias("n_e")))
+    sums, e_cross = _status_audit(exact, p_cross)
+    recall = p_cross.agg(F.count(F.lit(1)).alias("n_p")).crossJoin(
+        e_cross.agg(F.count(F.lit(1)).alias("n_e"))
     )
-    agg = exact.agg(
-        F.count(F.lit(1)).alias("n_batch"),
-        F.sum((F.col("status") == "cross_dup").cast("long")).alias("n_cross"),
-        F.sum((F.col("status") == "batch_dup").cast("long")).alias(
-            "n_batch_dup"
-        ),
-        F.sum((F.col("status") == "kept").cast("long")).alias("n_kept"),
-        F.sum(
-            F.when(F.col("status") == "cross_dup", F.col("dup_of")).otherwise(
-                0
-            )
-        ).alias("sum_cross_dup_of"),
-        F.sum(
-            F.when(F.col("status") == "batch_dup", F.col("dup_of")).otherwise(
-                0
-            )
-        ).alias("sum_batch_dup_of"),
-        F.sum(
-            F.when(F.col("status") == "kept", F.col("vec_id")).otherwise(0)
-        ).alias("sum_kept_ids"),
-    )
-    return agg.crossJoin(audits).select(
+    return sums.crossJoin(recall).select(
         "n_batch",
         "n_cross",
         "n_batch_dup",
@@ -818,40 +830,10 @@ def q_incremental_semantic_dedup_chain(
             # adds cell files) and long before the scratch store is deleted,
             # so the later aggregates read cache, never the deleted store.
             exact = exact.localCheckpoint(eager=False)
-            e_cross = exact.filter(F.col("status") == "cross_dup").select(
-                "vec_id"
-            )
+            sums, e_cross = _status_audit(exact, p_cross)
             p_crosses.append(p_cross)
             e_crosses.append(e_cross)
-            agg = exact.agg(
-                F.count(F.lit(1)).alias("n_batch"),
-                F.sum((F.col("status") == "cross_dup").cast("long")).alias(
-                    "n_cross"
-                ),
-                F.sum((F.col("status") == "batch_dup").cast("long")).alias(
-                    "n_batch_dup"
-                ),
-                F.sum((F.col("status") == "kept").cast("long")).alias("n_kept"),
-                F.sum(
-                    F.when(
-                        F.col("status") == "cross_dup", F.col("dup_of")
-                    ).otherwise(0)
-                ).alias("sum_cross_dup_of"),
-                F.sum(
-                    F.when(
-                        F.col("status") == "batch_dup", F.col("dup_of")
-                    ).otherwise(0)
-                ).alias("sum_batch_dup_of"),
-                F.sum(
-                    F.when(F.col("status") == "kept", F.col("vec_id")).otherwise(
-                        0
-                    )
-                ).alias("sum_kept_ids"),
-            ).withColumn("batch", F.lit(k).cast("long"))
-            subset = p_cross.join(e_cross, "vec_id", "left_anti").agg(
-                F.count(F.lit(1)).alias("n_false")
-            )
-            per_batch.append(agg.crossJoin(subset))
+            per_batch.append(sums.withColumn("batch", F.lit(k).cast("long")))
             # The chain advances: the exact side's kept survivors join the
             # persisted store (their full vectors, assigned against the
             # FIXED centroids) before the next batch admits.

@@ -42,7 +42,7 @@ from parallel_map_reduce_spark.operators.curation_extras import (
     recover_store_slices,
     store_lock,
 )
-from parallel_map_reduce_spark.operators.dedup import connected_components
+from parallel_map_reduce_spark.operators.dedup import _admission_statuses
 
 
 def _vectors(
@@ -1233,59 +1233,31 @@ def incremental_semantic_dedup(
         .agg(F.min(F.col(id_col)).alias("dup_of"))
         .localCheckpoint(eager=False)
     )
-    return _admission_statuses(b, cross_dup, threshold, num_blocks, id_col)
+    edges = _survivor_edges(b, cross_dup, threshold, num_blocks, id_col)
+    return _admission_statuses(b, cross_dup, edges, id_col)
 
 
-def _admission_statuses(
+def _survivor_edges(
     b: DataFrame,
     cross_dup: DataFrame,
     threshold: float,
     num_blocks: int,
     id_col: str,
 ) -> DataFrame:
-    """(id, status, dup_of) of an admitted batch ``b`` (id, qvec) given
-    its cross matches ``cross_dup`` (id_n, dup_of). Within-batch
-    components run over the cross-surviving rows only (every edge
+    """Within-batch edges (id_a, id_b) of an admitted batch ``b`` (id,
+    qvec) given its cross matches ``cross_dup`` (id_n, dup_of): the
+    blocked exact Gram over the cross-surviving rows only (every edge
     incident to a cross_dup would be dropped anyway — same result as the
     lexical tier's filter-after, one kernel cheaper)."""
     survivors = b.join(
         cross_dup.withColumnRenamed("id_n", id_col), id_col, "left_anti"
     )
-    intra = embedding_all_pairs_blocked(
+    return embedding_all_pairs_blocked(
         survivors,
         threshold=threshold,
         num_blocks=num_blocks,
         id_col=id_col,
         vec_col="qvec",
-    )
-    comps = connected_components(intra.select("id_a", "id_b"))
-
-    return (
-        b.select(id_col)
-        .join(cross_dup.withColumnRenamed("id_n", id_col), id_col, "left")
-        .join(
-            comps.select(
-                F.col("u").cast("long").alias(id_col),
-                F.col("label").alias("_comp"),
-            ),
-            id_col,
-            "left",
-        )
-        .select(
-            id_col,
-            F.when(F.col("dup_of").isNotNull(), F.lit("cross_dup"))
-            .when(
-                F.col("_comp").isNotNull() & (F.col("_comp") != F.col(id_col)),
-                F.lit("batch_dup"),
-            )
-            .otherwise(F.lit("kept"))
-            .alias("status"),
-            F.coalesce(
-                F.col("dup_of"),
-                F.when(F.col("_comp") != F.col(id_col), F.col("_comp")),
-                F.lit(-1).cast("long"),
-            ).alias("dup_of"),
-        )
     )
 
 
@@ -1357,7 +1329,8 @@ def incremental_semantic_dedup_with_audit(
         .select(F.col("id_n").alias(id_col))
         .distinct()
     )
-    statuses = _admission_statuses(b, cross_dup, threshold, num_blocks, id_col)
+    edges = _survivor_edges(b, cross_dup, threshold, num_blocks, id_col)
+    statuses = _admission_statuses(b, cross_dup, edges, id_col)
     return statuses, pruned_cross
 
 

@@ -3010,12 +3010,23 @@ def test_stored_index_lifecycle_job_counts(spark, tmp_path, layout):
     assert got == _LIFECYCLE_JOBS[layout]
 
 
-# Spark jobs of three registered ANN audit rows at sf0.001, query call
-# plus final collect: an in-memory tier, a stored index, and a full
-# build → append → compact lifecycle. Measured before the audit rows
-# were routed through one shared path, identical after, at 2 and 4
+# Spark jobs of registered audit rows at sf0.001, query call plus final
+# collect. Three ANN rows: an in-memory tier, a stored index, and a full
+# build → append → compact lifecycle; measured before the audit rows
+# were routed through one shared path, identical after. Three admission
+# rows: both tiers' status core (MinHash and IVF), the slice-store
+# ingest step behind its streamed and compacted drivers, and the
+# mid-chain compaction; measured before the admission family shared one
+# status core and one ingest step, identical after. All at 2 and 4
 # cores.
-_AUDIT_ROW_JOBS = {"knn_sq_ann": 17, "knn_pq_ann_stored": 36, "knn_sq_ann_stored": 37}
+_AUDIT_ROW_JOBS = {
+    "knn_sq_ann": 17,
+    "knn_pq_ann_stored": 36,
+    "knn_sq_ann_stored": 37,
+    "incremental_lsh_dedup_compacted": 130,
+    "ism_audit_query": 61,
+    "streaming_incremental_dedup": 121,
+}
 
 
 @pytest.mark.parametrize("name", sorted(_AUDIT_ROW_JOBS))
