@@ -12,20 +12,63 @@ Semantics preserved on purpose:
 - no unicode normalization; a BOM-prefixed token stays BOM-prefixed
 - empty strings (whitespace runs at string edges) are dropped
 
-Everything stays JVM-side (split/explode/filter are codegen'd) — no
+This module is the only place that spells the rule. Every Spark
+operator, every DuckDB oracle and every Python-side tokenizer (the RDD
+twin, the UDTF) imports its regex or fragment from here. Everything
+Spark-side stays JVM-side (split/filter/transform are codegen'd) — no
 Python in the hot path.
+
+Two plan rules hold for every consumer of the token array:
+
+1. **Materialized-column rule.** An n-gram window (``word_ngrams``)
+   must read a token-array column projected in a previous select, not
+   an inline split/filter expression: a lambda that captures an outer
+   expression re-evaluates it per element, turning the window O(len²)
+   per document (measured 20× slowdown at sf0.1).
+2. **Explode an expression, not an attribute.** Explode (or posexplode)
+   the window expression itself: exploding a projected attribute makes
+   InferFiltersFromGenerate add a ``size(x) > 0`` filter that predicate
+   pushdown inlines below the token projection — re-deriving the split
+   per element access and going quadratic (measured 30× at sf0.1).
+   Generators over non-trivial expressions are skipped by that rule.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Java-regex form of C-locale whitespace: space, tab, LF, CR, VT, FF.
-TOKEN_SPLIT_REGEX = "[ \\t\\n\\r\\x0B\\f]+"
+# C-locale whitespace — space, tab, LF, CR, VT, FF — as a character-class
+# body in the escape form Java regex (Spark), RE2 (DuckDB) and Python
+# ``re`` all read the same way.
+_WS = r" \t\n\r\x0b\x0c"
 
-# Same character class for the DuckDB (RE2) oracle SQL.
-TOKEN_SPLIT_REGEX_SQL = r"[ \t\n\r\x0b\x0c]+"
+# One token separator: a maximal whitespace run.
+TOKEN_SPLIT_REGEX = f"[{_WS}]+"
+
+# One non-whitespace character; ``regexp_replace(text, NON_WS_CHAR, '')``
+# keeps only the whitespace, so its length is the whitespace count.
+NON_WS_CHAR = f"[^{_WS}]"
+
+# GPT-2-style pre-tokenizer, restricted to constructs RE2 AND Java regex
+# both support (no lookahead): contraction suffixes, letter runs, digit
+# runs, symbol runs (anything but alphanumerics and whitespace). The real
+# BPE merge table is model-specific; the pre-tokenization split is the
+# part that matters for token-count estimation in a data pipeline.
+BPE_PRETOKEN_REGEX = f"'(?:s|d|m|t|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS}]+"
+
+# DuckDB forms over ``documents.text``: the non-empty token list, the
+# (doc_id, ws) token CTE, and the distinct word 3-gram shingle CTE.
+TOKENS_SQL = f"list_filter(regexp_split_to_array(text, '{TOKEN_SPLIT_REGEX}'), w -> w <> '')"
+TOKENS_CTE_SQL = f"WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ws FROM documents)"
+SHINGLES_CTE_SQL = (
+    TOKENS_CTE_SQL
+    + """,
+shingles AS (
+  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
+  FROM toks CROSS JOIN UNNEST(generate_series(1, greatest(len(ws)-2, 0))) AS t(i)
+)"""
+)
 
 
 def tokens(text_col: str | Column) -> Column:
@@ -34,7 +77,31 @@ def tokens(text_col: str | Column) -> Column:
     return F.split(col, TOKEN_SPLIT_REGEX)
 
 
+def token_array(text_col: str | Column) -> Column:
+    """Array of the non-empty tokens of one text value."""
+    return F.filter(tokens(text_col), lambda w: w != F.lit(""))
+
+
 def token_count(text_col: str | Column) -> Column:
     """Number of tokens in a text value, JVM-side (no explode needed)."""
-    arr = tokens(text_col)
-    return F.size(F.filter(arr, lambda w: w != F.lit("")))
+    return F.size(token_array(text_col))
+
+
+def tokens_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """(id, tk: array<string>) with empties dropped — the materialization
+    step every n-gram consumer builds on (rule 1 above)."""
+    return df.select(F.col(id_col), token_array(text_col).alias("tk"))
+
+
+def word_ngrams(tok_col: Column, n: int) -> Column:
+    """Every word n-gram ('w1 w2 … wn', in order, repeats kept) of a
+    MATERIALIZED token-array column (rule 1 above). Arrays with fewer
+    than n tokens yield an empty array; the when() guard also avoids
+    sequence()'s descending-range behaviour when size-n < 0."""
+    size = F.size(tok_col)
+    idx = F.sequence(F.lit(1), size - (n - 1))
+    grams = F.transform(
+        idx,
+        lambda i: F.concat_ws(" ", *[F.element_at(tok_col, i + j) for j in range(n)]),
+    )
+    return F.when(size >= n, grams).otherwise(F.array())

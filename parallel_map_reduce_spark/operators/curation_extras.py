@@ -29,6 +29,14 @@ from parallel_map_reduce_spark.functions.hashing import (
     universal_hash,
     universal_params,
 )
+from parallel_map_reduce_spark.functions.tokenize import (
+    SHINGLES_CTE_SQL,
+    TOKENS_CTE_SQL,
+    TOKENS_SQL,
+    token_array,
+    tokens_df,
+    word_ngrams,
+)
 from parallel_map_reduce_spark.operators._scratch import in_scratch
 
 
@@ -511,8 +519,6 @@ def cdc_chunks(
     generator consumes the chunk-array EXPRESSION (never a projected
     attribute, which re-derives the whole array per element).
     """
-    from parallel_map_reduce_spark.operators.dedup import tokens_df
-
     tdf = tokens_df(docs, text_col, id_col)
     n = F.size("tk")
     # token positions j (1-based) where the window ending at j cuts
@@ -961,14 +967,10 @@ def gopher_repetition_stats(
     # materialize the tokenized frame once (the dedup.py
     # stored-signatures discipline) — without this one execution
     # re-scans and re-tokenizes the corpus per branch.
-    from parallel_map_reduce_spark.functions.tokenize import tokens
-
     base = (
         docs.select(
             F.col(id_col),
-            F.filter(tokens(F.col(text_col)), lambda w: w != F.lit("")).alias(
-                "tk"
-            ),
+            token_array(text_col).alias("tk"),
             F.split(F.col(text_col), "\n").alias("_ln"),
         )
         .filter(F.size("tk") > 0)
@@ -982,17 +984,10 @@ def gopher_repetition_stats(
     )
 
     def grams_df(n: int) -> DataFrame:
-        size = F.size("tk")
-        idx = F.sequence(F.lit(1), size - (n - 1))
-        grams = F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(F.col("tk"), i + j) for j in range(n)]
-            ),
-        )
-        arr = F.when(size >= n, grams).otherwise(F.array())
         return base.select(
-            F.col(id_col), F.col("_dc"), F.explode(arr).alias("gram")
+            F.col(id_col),
+            F.col("_dc"),
+            F.explode(word_ngrams(F.col("tk"), n)).alias("gram"),
         ).groupBy(id_col, "_dc", "gram").agg(F.count(F.lit(1)).alias("cnt"))
 
     def top_frac(n: int, out: str) -> DataFrame:
@@ -1107,7 +1102,7 @@ d{n} AS (
     return (
         f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS ws,
+  SELECT doc_id, {TOKENS_SQL} AS ws,
          string_split(text, chr(10)) AS lns
   FROM documents
 ),
@@ -1193,9 +1188,12 @@ def bigram_lm_doc_scores(
     is the in-session form of the "model is a stored table" design
     (same precedent as dedup.py's signature frames); a production run
     persists the counts model once and scores many corpora against it.
+    ctx and uni checkpoint lazily, as in :func:`kn_trigram_lm_doc_scores`:
+    every position join — the (prev) and (w) hot-key joins included —
+    then reads both sides through an exchange that AQE's skew-join rule
+    can split, and uni, which feeds both its join and the total, is
+    computed once.
     """
-    from parallel_map_reduce_spark.operators.dedup import tokens_df
-
     tdf = tokens_df(docs, text_col, id_col).localCheckpoint(eager=True)
     n = F.size("tk")
     bg = (
@@ -1218,9 +1216,17 @@ def bigram_lm_doc_scores(
         .agg(F.count(F.lit(1)).cast("double").alias("c_pw"))
         .localCheckpoint(eager=True)
     )
-    ctx = bgc.groupBy("prev").agg(F.sum("c_pw").alias("c_prev"))
+    ctx = (
+        bgc.groupBy("prev")
+        .agg(F.sum("c_pw").alias("c_prev"))
+        .localCheckpoint(eager=False)
+    )
     tok = tdf.select(F.col(id_col), F.explode("tk").alias("w"))
-    uni = tok.groupBy("w").agg(F.count(F.lit(1)).cast("double").alias("c_w"))
+    uni = (
+        tok.groupBy("w")
+        .agg(F.count(F.lit(1)).cast("double").alias("c_w"))
+        .localCheckpoint(eager=False)
+    )
     total = uni.agg(F.sum("c_w").alias("n_total"))
     p = F.lit(lam) * F.col("c_pw") / F.col("c_prev") + F.lit(1 - lam) * F.col(
         "c_w"
@@ -1288,8 +1294,6 @@ def kn_trigram_lm_doc_scores(
     under it) cannot be split. ctx3, mv and wt checkpoint lazily: the
     scoring job fills them, and wt, which feeds both its join and the
     total, is computed once."""
-    from parallel_map_reduce_spark.operators.dedup import tokens_df
-
     tdf = tokens_df(docs, text_col, id_col)
     n = F.size("tk")
     s1 = F.slice(F.col("tk"), 1, n - 2)
@@ -1372,7 +1376,7 @@ def kn_trigram_lm_doc_scores(
 
 def kn_trigram_lm_doc_scores_oracle_sql(d: float = 0.75) -> str:
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS ws FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ws FROM documents),
 tg AS (
   SELECT doc_id, ws[i] AS u, ws[i+1] AS v, ws[i+2] AS w
   FROM toks CROSS JOIN UNNEST(generate_series(1, len(ws) - 2)) AS t(i)
@@ -1407,7 +1411,7 @@ GROUP BY t.doc_id
 
 def bigram_lm_doc_scores_oracle_sql(lam: float = 0.8) -> str:
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS ws FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ws FROM documents),
 tok AS (SELECT doc_id, unnest(ws) AS w FROM toks),
 uni AS (SELECT w, count(*)::DOUBLE AS c_w FROM tok GROUP BY w),
 tot AS (SELECT sum(c_w) AS n_total FROM uni),
@@ -1464,6 +1468,23 @@ def _tercile_buckets(scores: DataFrame, docs: DataFrame, id_col: str) -> DataFra
     )
 
 
+def _tercile_buckets_oracle_sql(scorer_sql: str) -> str:
+    """DuckDB twin of :func:`_tercile_buckets` over a per-doc scorer's
+    SQL (doc_id, ..., avg_logprob)."""
+    scorer = scorer_sql.strip()
+    return f"""
+WITH scores AS ({scorer})
+SELECT doc_id, lang, avg_logprob,
+       CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
+FROM (
+  SELECT s.doc_id, d.lang, s.avg_logprob,
+         NTILE(3) OVER (PARTITION BY d.lang
+                        ORDER BY s.avg_logprob DESC, s.doc_id ASC) AS nt
+  FROM scores s JOIN documents d USING (doc_id)
+)
+"""
+
+
 def ccnet_perplexity_buckets(
     docs: DataFrame,
     lam: float = 0.8,
@@ -1487,18 +1508,7 @@ def ccnet_perplexity_buckets(
 
 
 def ccnet_perplexity_buckets_oracle_sql(lam: float = 0.8) -> str:
-    scorer = bigram_lm_doc_scores_oracle_sql(lam).strip()
-    return f"""
-WITH scores AS ({scorer})
-SELECT doc_id, lang, avg_logprob,
-       CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-FROM (
-  SELECT s.doc_id, d.lang, s.avg_logprob,
-         NTILE(3) OVER (PARTITION BY d.lang
-                        ORDER BY s.avg_logprob DESC, s.doc_id ASC) AS nt
-  FROM scores s JOIN documents d USING (doc_id)
-)
-"""
+    return _tercile_buckets_oracle_sql(bigram_lm_doc_scores_oracle_sql(lam))
 
 
 def kn_trigram_perplexity_buckets(
@@ -1527,18 +1537,7 @@ def kn_trigram_perplexity_buckets(
 
 
 def kn_trigram_perplexity_buckets_oracle_sql(d: float = 0.75) -> str:
-    scorer = kn_trigram_lm_doc_scores_oracle_sql(d).strip()
-    return f"""
-WITH scores AS ({scorer})
-SELECT doc_id, lang, avg_logprob,
-       CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-FROM (
-  SELECT s.doc_id, d.lang, s.avg_logprob,
-         NTILE(3) OVER (PARTITION BY d.lang
-                        ORDER BY s.avg_logprob DESC, s.doc_id ASC) AS nt
-  FROM scores s JOIN documents d USING (doc_id)
-)
-"""
+    return _tercile_buckets_oracle_sql(kn_trigram_lm_doc_scores_oracle_sql(d))
 
 
 # ---------------------------------------------------------------------------
@@ -1547,21 +1546,9 @@ FROM (
 #
 # Tested now (tests/test_curation_oracle_sql.py runs them through DuckDB
 # against the Spark output with the driver's normalize-and-compare
-# rules) so round-5 registration is a @register() call away. The CTE
-# fragments mirror queries_llm's oracle SQL exactly (same token split,
-# same shingle construction, same portable hashes).
-
-_SPLIT_SQL = r"[ \t\n\r\x0b\x0c]+"
-_TOKS_SQL = f"list_filter(regexp_split_to_array(text, '{_SPLIT_SQL}'), w -> w <> '')"
-_TOKS_CTE_SQL = f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS ws FROM documents)"
-_SHINGLES_CTE_SQL = (
-    _TOKS_CTE_SQL
-    + """,
-shingles AS (
-  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-  FROM toks CROSS JOIN UNNEST(generate_series(1, greatest(len(ws)-2, 0))) AS t(i)
-)"""
-)
+# rules) so round-5 registration is a @register() call away. The token
+# and shingle CTEs are functions/tokenize.py's, as in queries_llm's
+# oracle SQL; the hashes are the same portable ones.
 
 
 def sample_exact_n_oracle_sql(n: int, seed: int = 0) -> str:
@@ -1590,7 +1577,7 @@ SELECT doc_id, lang, n_chars FROM (
 
 def containment_pairs_oracle_sql(threshold: float) -> str:
     return (
-        _SHINGLES_CTE_SQL
+        SHINGLES_CTE_SQL
         + f""",
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
 common AS (
@@ -1628,7 +1615,7 @@ def bloom_decontaminate_oracle_sql(
     )
     hit = " AND ".join(f"{p} IN (SELECT p FROM eval_pos)" for p in pos)
     return (
-        _SHINGLES_CTE_SQL
+        SHINGLES_CTE_SQL
         + f""",
 hashed AS (SELECT doc_id, {hash64_sql('shingle', 0)} AS h FROM shingles),
 eval_pos AS (
@@ -1653,7 +1640,7 @@ def cdc_chunks_oracle_sql(window: int = 8, divisor: int = 64) -> str:
     wh = hash64_sql(f"({win})", 0)
     return f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS ws FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS ws FROM documents
 ),
 base AS (
   SELECT doc_id, ws, len(ws) AS n,
@@ -1722,7 +1709,7 @@ def incremental_lsh_dedup_oracle_sql(
         + ")"
         for b in range(bands)
     )
-    head = _SHINGLES_CTE_SQL.replace("WITH ", "WITH RECURSIVE ", 1)
+    head = SHINGLES_CTE_SQL.replace("WITH ", "WITH RECURSIVE ", 1)
 
     def _splice(pred: str, alias: str) -> str:
         if "{t}" not in pred:
@@ -1812,7 +1799,7 @@ def _bpe_rounds_cte_sql(rounds: int) -> str:
     # `` a  b  c `` double-gap symbol encoding makes the merge a plain
     # replace() in both engines (see bpe_train_merges).
     sql = (
-        _TOKS_CTE_SQL
+        TOKENS_CTE_SQL
         + r""",
 words AS (
   SELECT w AS word, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1885,7 +1872,6 @@ def bpe_encode_stats(
     as the LM scorers). The merge table itself is ``rounds`` scalar
     rows, broadcast into the plan as literals.
     """
-    from parallel_map_reduce_spark.operators.dedup import tokens_df
     from parallel_map_reduce_spark.operators.wordcount import wordcount
 
     # consume the trainer's driver-side list directly — no
@@ -1990,10 +1976,8 @@ def gopher_quality_stats(
     whole-stage-codegen'd expression or a 1-2-per-row HOF fold, within
     the PLANS.md HOF budget.
     """
-    from parallel_map_reduce_spark.functions.tokenize import tokens
-
     text = F.col(text_col)
-    toks = F.filter(tokens(text), lambda w: w != F.lit(""))
+    toks = token_array(text)
     lines = F.split(text, "\n")
     n_tok = F.size(toks)
     n_lines = F.size(lines)
@@ -2076,7 +2060,7 @@ def gopher_quality_stats_oracle_sql(
     return f"""
 WITH base AS (
   SELECT doc_id,
-         {_TOKS_SQL} AS ws,
+         {TOKENS_SQL} AS ws,
          string_split(text, chr(10)) AS lns,
          length(text) - length(replace(text, '#', '')) AS nh,
          (length(text) - length(replace(text, '...', ''))) / 3.0 AS ne
@@ -2166,8 +2150,6 @@ def dsir_importance_weights(
     the count table is the stored artifact a production run fits once
     and reuses per-shard, exactly the paper's estimator.
     """
-    from parallel_map_reduce_spark.functions.tokenize import tokens
-
     # The target flag rides the tokenized row (the doc row already
     # carries everything the predicate needs), so the feature stream
     # needs no join back to documents. Checkpointed: the uni and bi
@@ -2176,9 +2158,7 @@ def dsir_importance_weights(
     tdf = docs.select(
         F.col(id_col),
         target_pred.cast("int").alias("_is_t"),
-        F.filter(
-            tokens(F.col(text_col)), lambda w: w != F.lit("")
-        ).alias("tk"),
+        token_array(text_col).alias("tk"),
     ).localCheckpoint(eager=True)
     n = F.size("tk")
     uni = tdf.select(
@@ -2247,7 +2227,7 @@ def dsir_importance_weights_oracle_sql(
 
     return f"""
 WITH base AS (
-  SELECT doc_id, {_TOKS_SQL} AS ws,
+  SELECT doc_id, {TOKENS_SQL} AS ws,
          CASE WHEN {target_pred} THEN 1 ELSE 0 END AS is_t
   FROM documents
 ),
@@ -2772,7 +2752,7 @@ def incremental_lsh_dedup_chain_oracle_sql(
     )
     if "{t}" not in kept0_pred:
         raise ValueError("kept0_pred must carry a '{t}' placeholder")
-    sql = _SHINGLES_CTE_SQL.replace("WITH ", "WITH RECURSIVE ", 1)
+    sql = SHINGLES_CTE_SQL.replace("WITH ", "WITH RECURSIVE ", 1)
     sql += f""",
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
 hashed AS (SELECT doc_id, {hash64_sql('shingle', 0)} AS h FROM shingles),

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_map_reduce_spark.functions.tokenize import SHINGLES_CTE_SQL, TOKENS_SQL
 from parallel_map_reduce_spark.operators import curation_extras as ce
 from parallel_map_reduce_spark.operators import dedup as _dedup
 from parallel_map_reduce_spark.operators import similarity as _similarity
@@ -447,10 +448,6 @@ def pipeline_curate_corpus_oracle_sql(sample_n: int = SAMPLE_N) -> str:
         universal_hash_sql,
         universal_params,
     )
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        _SHINGLES_CTE_SQL,
-        _TOKS_SQL,
-    )
     from parallel_map_reduce_spark.operators.queries_llm import (
         _CLUSTER_ASSIGNED_CTE,
         quality_classifier_descent_ctes,
@@ -497,7 +494,7 @@ def pipeline_curate_corpus_oracle_sql(sample_n: int = SAMPLE_N) -> str:
     cb = ce.ccnet_perplexity_buckets_oracle_sql().strip()
     dsir = ce.dsir_importance_weights_oracle_sql("lang = 'en'").strip()
     ok = hash64_sql("CAST(doc_id AS VARCHAR)", 0)
-    shingles_inner = _SHINGLES_CTE_SQL.replace(
+    shingles_inner = SHINGLES_CTE_SQL.replace(
         "FROM documents",
         "FROM documents WHERE doc_id IN (SELECT doc_id FROM kq)",
         1,
@@ -589,7 +586,7 @@ k4s AS MATERIALIZED (
 ),
 dec AS (
   SELECT doc_id, contaminated FROM (
-    {_SHINGLES_CTE_SQL},
+    {SHINGLES_CTE_SQL},
     eval_sh AS (
       SELECT DISTINCT shingle FROM shingles WHERE doc_id % {DECON_EVAL_MOD} = 0
     ),
@@ -625,7 +622,7 @@ k6 AS MATERIALIZED (
   WHERE (c * {sample_n}) // tot - ((c - w) * {sample_n}) // tot >= 1
 ),
 ptoks AS (
-  SELECT doc_id, {_TOKS_SQL} AS ws FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS ws FROM documents
   WHERE doc_id IN (SELECT doc_id FROM k6)
 ),
 chunks AS (

@@ -31,7 +31,11 @@ from parallel_map_reduce_spark.functions.hashing import (
     universal_hash,
     universal_params,
 )
-from parallel_map_reduce_spark.functions.tokenize import tokens
+from parallel_map_reduce_spark.functions.tokenize import (
+    tokens,
+    tokens_df,
+    word_ngrams,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -69,35 +73,11 @@ def exact_dup_groups(df: DataFrame, content_col: str = "text", id_col: str = "do
 
 
 def shingle_array(tok_col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a MATERIALIZED token-array
-    column ('w1 w2 w3' strings).
-
-    The input must be a plain column reference (projected in a previous
-    select), not an inline split/filter expression: a lambda that
-    captures an outer expression re-evaluates it per element, turning
-    shingling O(len²) per document (measured 20× slowdown at sf0.1).
-    Documents with fewer than n tokens yield an empty array (the when()
-    guard also avoids sequence()'s descending-range behavior when
-    size-n < 0).
-    """
-    size = F.size(tok_col)
-    idx = F.sequence(F.lit(1), size - (n - 1))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tok_col, i + j) for j in range(n)]
-        ),
-    )
-    return F.array_distinct(F.when(size >= n, grams).otherwise(F.array()))
-
-
-def tokens_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, tk: array<string>) with empties dropped — the materialization
-    step every shingle consumer builds on."""
-    return df.select(
-        F.col(id_col),
-        F.filter(tokens(F.col(text_col)), lambda w: w != F.lit("")).alias("tk"),
-    )
+    """Distinct word n-gram shingles ('w1 w2 w3' strings) from a
+    MATERIALIZED token-array column (plan rule 1 in
+    functions/tokenize.py). Documents with fewer than n tokens yield an
+    empty array."""
+    return F.array_distinct(word_ngrams(tok_col, n))
 
 
 def shingle_sets(
@@ -114,12 +94,8 @@ def explode_shingles(
 ) -> DataFrame:
     """(id, shingle) rows, distinct per document.
 
-    The explode is over the shingle EXPRESSION, not a projected attribute:
-    exploding an attribute makes InferFiltersFromGenerate add a
-    size(sh)>0 filter that predicate-pushdown then inlines below the
-    token projection — re-deriving split(text) per element access and
-    going quadratic (measured 30× at sf0.1). Generators over non-trivial
-    expressions are skipped by that rule.
+    The explode is over the shingle EXPRESSION, not a projected
+    attribute (plan rule 2 in functions/tokenize.py).
     """
     tdf = tokens_df(df, text_col, id_col)
     return tdf.select(

@@ -1053,22 +1053,20 @@ from parallel_map_reduce_spark.operators import textstats as _textstats
 
 # The SAME composite quality score as quality_quantile_filter's oracle
 # (alpha ratio x inverse punct ratio x capped token count, ROUND 4) as a
-# self-contained expression over `text`. Drift guards: the tokenizer
-# regex is imported from functions/tokenize (the one definition both
-# engines splice), and two execution-parity tests pin the formula —
+# self-contained expression over `text`. Drift guards: the token list
+# is functions/tokenize's TOKENS_SQL (the one definition both engines
+# splice), and two execution-parity tests pin the formula —
 # the oracle-parity test (this SQL vs quality_score_expr via Spark) and
 # test_quantile_band_approx_agrees_with_exact (this band vs the
 # registered exact tier's band).
-from parallel_map_reduce_spark.functions.tokenize import TOKEN_SPLIT_REGEX_SQL
+from parallel_map_reduce_spark.functions.tokenize import TOKENS_SQL
 
-_SPLIT_SQL_QS = TOKEN_SPLIT_REGEX_SQL
 _QS_SQL = (
     "ROUND((length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE"
     " / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END)::DOUBLE)"
     " * (1 - length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE"
     " / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END)::DOUBLE)"
-    f" * least(len(list_filter(regexp_split_to_array(text, '{_SPLIT_SQL_QS}'),"
-    " w -> w <> ''))::DOUBLE / 20.0, 1.0), 4)"
+    f" * least(len({TOKENS_SQL})::DOUBLE / 20.0, 1.0), 4)"
 )
 
 

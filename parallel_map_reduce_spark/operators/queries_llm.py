@@ -24,6 +24,16 @@ from parallel_map_reduce_spark.functions.hashing import (
     universal_hash_sql,
     universal_params,
 )
+from parallel_map_reduce_spark.functions.tokenize import (
+    BPE_PRETOKEN_REGEX,
+    NON_WS_CHAR,
+    SHINGLES_CTE_SQL,
+    TOKENS_CTE_SQL,
+    TOKENS_SQL,
+    token_array,
+    token_count,
+    tokens,
+)
 from parallel_map_reduce_spark.operators import (
     curation_extras,
     dedup,
@@ -34,20 +44,6 @@ from parallel_map_reduce_spark.operators import (
 from parallel_map_reduce_spark.operators._scratch import in_scratch
 from parallel_map_reduce_spark.registry import register
 from parallel_map_reduce_spark.sources.tables import load_table
-
-_SPLIT = r"[ \t\n\r\x0b\x0c]+"
-_TOKS = f"list_filter(regexp_split_to_array(text, '{_SPLIT}'), w -> w <> '')"
-
-_TOKS_CTE = f"WITH toks AS (SELECT doc_id, {_TOKS} AS ws FROM documents)"
-
-_SHINGLES_CTE = (
-    _TOKS_CTE
-    + """,
-shingles AS (
-  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-  FROM toks CROSS JOIN UNNEST(generate_series(1, greatest(len(ws)-2, 0))) AS t(i)
-)"""
-)
 
 NUM_MINHASHES = 12
 SIMHASH_BITS = dedup.SIMHASH_BITS
@@ -103,7 +99,7 @@ def _minhash_sigs_cte() -> str:
         for i, (a, b) in enumerate(universal_params(NUM_MINHASHES))
     )
     return (
-        _SHINGLES_CTE
+        SHINGLES_CTE_SQL
         + f""",
 hashed AS (SELECT doc_id, {hash64_sql('shingle', 0)} AS h FROM shingles),
 sigs AS (SELECT doc_id,
@@ -175,7 +171,7 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ngram_jaccard_pairs",
-    _SHINGLES_CTE
+    SHINGLES_CTE_SQL
     + f""",
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
 pairs AS (
@@ -203,7 +199,7 @@ MAX_SHINGLE_DF = 5  # sf0.01's hottest shingle hits df=7, so the cap is live
 
 @register(
     "ngram_jaccard_pairs_capped",
-    _SHINGLES_CTE
+    SHINGLES_CTE_SQL
     + f""",
 hot AS (SELECT shingle FROM shingles GROUP BY shingle HAVING COUNT(*) > {MAX_SHINGLE_DF}),
 capped AS (SELECT doc_id, shingle FROM shingles
@@ -240,7 +236,7 @@ def q_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ngram_jaccard_pairs_prefix",
-    _SHINGLES_CTE
+    SHINGLES_CTE_SQL
     + f""",
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
 pairs AS (
@@ -290,7 +286,7 @@ def _simhash_sigs_cte() -> str:
     return f"""
 WITH tok AS (
   SELECT doc_id, {hash64_sql('t.tok', 0)} AS h
-  FROM (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents) t
+  FROM (SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents) t
   WHERE t.tok <> ''
 ),
 voted AS (
@@ -842,7 +838,7 @@ def q_embed_dups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_stats",
-    _TOKS_CTE
+    TOKENS_CTE_SQL
     + """
 SELECT doc_id,
        len(ws)::BIGINT AS n_tokens,
@@ -864,7 +860,7 @@ def _stoplist_sql(lang: str) -> str:
 
 @register(
     "quality_scores",
-    _TOKS_CTE.replace(
+    TOKENS_CTE_SQL.replace(
         "SELECT doc_id,",
         "SELECT doc_id, text,",
     )
@@ -880,7 +876,7 @@ FROM (
   SELECT doc_id,
     length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE AS alpha,
     length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE AS punct,
-    length(regexp_replace(text, '[^ \t\n\r\x0b\x0c]', '', 'g'))::DOUBLE AS space,
+    length(regexp_replace(text, '{NON_WS_CHAR}', '', 'g'))::DOUBLE AS space,
     CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END::DOUBLE AS safe_total,
     len(ws)::DOUBLE AS n_tokens,
     CASE WHEN len(ws) > 0 THEN len(ws) ELSE 1 END::DOUBLE AS safe_tok,
@@ -906,7 +902,7 @@ def quality_classifier_descent_ctes(rounds: int, lr: float) -> tuple[str, str]:
     c2 = textstats.QC_CENTER["x2"]
     c3 = textstats.QC_CENTER["x3"]
     scale = textstats.QC_GRAD_SCALE
-    body = f"""toks AS (SELECT doc_id, n_chars, text, {_TOKS} AS ws FROM documents),
+    body = f"""toks AS (SELECT doc_id, n_chars, text, {TOKENS_SQL} AS ws FROM documents),
 feat AS (
   SELECT doc_id,
     CASE WHEN n_chars >= {textstats.QC_LABEL_MIN_CHARS}
@@ -1051,7 +1047,7 @@ def _lang_id_oracle() -> str:
         f"WHEN s_{lang} = best THEN '{lang}'" for lang in langs
     )
     return (
-        _TOKS_CTE
+        TOKENS_CTE_SQL
         + f""",
 scored AS (
   SELECT doc_id,
@@ -1076,7 +1072,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_fingerprints",
-    _TOKS_CTE.replace("SELECT doc_id,", "SELECT doc_id, text,")
+    TOKENS_CTE_SQL.replace("SELECT doc_id,", "SELECT doc_id, text,")
     + f"""
 SELECT doc_id,
        md5(text) AS content_md5,
@@ -1090,7 +1086,7 @@ def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bigram_frequencies",
-    _TOKS_CTE
+    TOKENS_CTE_SQL
     + """,
 grams AS (
   SELECT ws[i] || ' ' || ws[i+1] AS ngram
@@ -1260,7 +1256,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_clean_corpus",
-    """
+    f"""
 WITH keep AS (
   SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
 ),
@@ -1269,14 +1265,12 @@ deduped AS (
 ),
 scored AS (
   SELECT doc_id, lang, source,
-         len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\r\\x0b\\x0c]+'),
-                         w -> w <> ''))::BIGINT AS n_tokens,
+         len({TOKENS_SQL})::BIGINT AS n_tokens,
          ROUND((length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE
                 / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END))
                * (1 - length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE
                       / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END))
-               * least(len(list_filter(regexp_split_to_array(text,
-                         '[ \\t\\n\\r\\x0b\\x0c]+'), w -> w <> '')) / 20.0, 1.0),
+               * least(len({TOKENS_SQL}) / 20.0, 1.0),
                4) AS quality_score
   FROM deduped
 )
@@ -1301,7 +1295,6 @@ def q_pipeline_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from parallel_map_reduce_spark.functions.hashing import fingerprint_md5
-    from parallel_map_reduce_spark.functions.tokenize import token_count
 
     docs = load_table(spark, sf_dir, "documents")
     one_pass = docs.select(
@@ -1330,13 +1323,12 @@ def q_pipeline_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_token_stats",
-    """
+    f"""
 SELECT doc_id,
        len(regexp_extract_all(text,
-           '''(?:s|d|m|t|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r\\x0b\\x0c]+'))
+           '{BPE_PRETOKEN_REGEX.replace("'", "''")}'))
            AS n_bpe_tokens,
-       len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\r\\x0b\\x0c]+'),
-                       w -> w <> '')) AS n_ws_tokens
+       len({TOKENS_SQL}) AS n_ws_tokens
 FROM documents
 """,
 )
@@ -1349,14 +1341,13 @@ def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "chunk_documents",
-    """
+    f"""
 SELECT doc_id, chunk_start,
        array_to_string(toks[chunk_start:chunk_start + 31], ' ') AS chunk_text,
        least(32, len(toks) - chunk_start + 1) AS chunk_len
 FROM (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(text, '[ \\t\\n\\r\\x0b\\x0c]+'),
-                       w -> w <> '') AS toks
+           {TOKENS_SQL} AS toks
     FROM documents
 ) d,
 LATERAL (SELECT unnest(generate_series(1, greatest(len(toks), 1), 16)) AS chunk_start) s
@@ -1528,7 +1519,7 @@ FROM documents d
 WHERE d.doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> group_id)
 """
 
-_COMP_RECURSIVE_HEAD = _SHINGLES_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
+_COMP_RECURSIVE_HEAD = SHINGLES_CTE_SQL.replace("WITH ", "WITH RECURSIVE ", 1)
 
 
 def _near_dup_edges(docs: DataFrame, edge_builder: str) -> DataFrame:
@@ -1644,7 +1635,7 @@ WITH RECURSIVE kept AS (
   JOIN (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)) k
   USING (doc_id)
 ),
-toks AS (SELECT doc_id, {_TOKS} AS ws FROM kept),
+toks AS (SELECT doc_id, {TOKENS_SQL} AS ws FROM kept),
 shingles AS (
   SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
   FROM toks CROSS JOIN UNNEST(generate_series(1, greatest(len(ws)-2, 0))) AS t(i)
@@ -1765,14 +1756,13 @@ def q_pipeline_training_batches_lsh(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "curate_top_docs_per_lang",
-    """
+    f"""
 WITH base AS (
   SELECT doc_id, lang,
     length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE AS alpha,
     length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE AS punct,
     CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END::DOUBLE AS safe_total,
-    len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\r\\x0b\\x0c]+'),
-                    w -> w <> ''))::DOUBLE AS n_tokens
+    len({TOKENS_SQL})::DOUBLE AS n_tokens
   FROM documents
 ),
 scored AS (
@@ -1816,7 +1806,7 @@ def q_curate_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unigram_lm_doc_scores",
     f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS w FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS w FROM documents
 ),
 freq AS (SELECT w, count(*)::DOUBLE AS n FROM tok GROUP BY w),
 tot AS (SELECT sum(n) AS total FROM freq)
@@ -1839,13 +1829,9 @@ def q_unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — Zipfian-skewed, exactly the shuffle the salting recipes in
     skew.py target; the scalar total broadcasts as a 1-row join."""
     docs = load_table(spark, sf_dir, "documents")
-    from parallel_map_reduce_spark.functions.tokenize import tokens
-
     tok = docs.select(
         "doc_id",
-        F.explode(F.filter(tokens(F.col("text")), lambda w: w != F.lit(""))).alias(
-            "w"
-        ),
+        F.explode(token_array("text")).alias("w"),
     )
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).cast("double").alias("n"))
     total = freq.agg(F.sum("n").alias("total"))
@@ -1868,7 +1854,7 @@ def q_unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hole on the oracle side (one definition of the constants/term list).
 _BM25_SCORED_CTE = f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS w FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS w FROM documents
 ),
 dl AS (SELECT doc_id, count(*)::DOUBLE AS dlen FROM tok GROUP BY doc_id),
 stats AS (SELECT avg(dlen) AS avgdl, count(*)::DOUBLE AS n_docs FROM dl),
@@ -1918,13 +1904,11 @@ def _bm25_doc_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, bm25) for every doc matching the fixed 3-term query —
     the scoring core shared by ``bm25_search`` and the lexical leg of
     ``hybrid_retrieval_rrf`` so the formula can't drift between them."""
-    from parallel_map_reduce_spark.functions.tokenize import tokens
-
     terms = ["table", "spark", "hash"]
     k1, b = 1.2, 0.75
     tok = docs.select(
         "doc_id",
-        F.explode(F.filter(tokens(F.col("text")), lambda w: w != F.lit(""))).alias("w"),
+        F.explode(token_array("text")).alias("w"),
     )
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).cast("double").alias("dlen"))
     stats = dl.agg(
@@ -1953,7 +1937,7 @@ def _bm25_doc_scores(docs: DataFrame) -> DataFrame:
     "inverted_index_postings",
     f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS w FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS w FROM documents
 )
 SELECT w AS word,
        COUNT(DISTINCT doc_id) AS df,
@@ -1974,11 +1958,9 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     document frequency or shard hot postings (same recipe as the shingle
     DF cap in dedup)."""
     docs = load_table(spark, sf_dir, "documents")
-    from parallel_map_reduce_spark.functions.tokenize import tokens
-
     tok = docs.select(
         "doc_id",
-        F.explode(F.filter(tokens(F.col("text")), lambda w: w != F.lit(""))).alias("w"),
+        F.explode(token_array("text")).alias("w"),
     )
     return tok.groupBy(F.col("w").alias("word")).agg(
         F.countDistinct("doc_id").alias("df"),
@@ -2158,7 +2140,7 @@ _DECON_EVAL_MOD = 50
 
 @register(
     "decontaminate_corpus",
-    _SHINGLES_CTE
+    SHINGLES_CTE_SQL
     + f""",
 eval_sh AS (
   SELECT DISTINCT shingle FROM shingles WHERE doc_id % {_DECON_EVAL_MOD} = 0
@@ -2250,7 +2232,7 @@ _SPAN_LEN = 8
 # one SQL definition keeps the hashing / canonical rule / guard from
 # drifting between the measure and act halves.
 _DUP_SPANS_CTE = (
-    _TOKS_CTE
+    TOKENS_CTE_SQL
     + f""",
 wins AS (
   SELECT doc_id, i AS pos,
@@ -2349,7 +2331,7 @@ def q_substring_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_repetition_stats",
-    _TOKS_CTE
+    TOKENS_CTE_SQL
     + """,
 bigrams AS (
   SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg
@@ -2383,9 +2365,7 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     would shuffle every bigram occurrence just to reunite rows that
     started out together."""
     docs = load_table(spark, sf_dir, "documents")
-    from parallel_map_reduce_spark.functions.tokenize import tokens
-
-    ws = F.filter(tokens(F.col("text")), lambda w: w != F.lit(""))
+    ws = token_array("text")
     bg = F.zip_with(
         F.slice(ws, 1, F.greatest(F.size(ws) - 1, F.lit(0))),
         F.slice(ws, 2, F.greatest(F.size(ws) - 1, F.lit(0))),
@@ -2518,7 +2498,7 @@ _MG_CAPACITY = 64
     "heavy_hitters_tokens",
     f"""
 WITH tok AS (
-  SELECT unnest({_TOKS}) AS w FROM documents
+  SELECT unnest({TOKENS_SQL}) AS w FROM documents
 ),
 cnt AS (SELECT w AS token, COUNT(*) AS exact_cnt FROM tok GROUP BY w)
 SELECT token, CAST(exact_cnt AS BIGINT) AS exact_cnt,
@@ -2541,11 +2521,9 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of vocabulary size — the 100 TB path when distinct
     tokens outgrow the exact groupBy's shuffle. The exact twin here is
     the sandbox-scale audit, same tier split as dedup exact-vs-LSH."""
-    from parallel_map_reduce_spark.functions.tokenize import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        F.explode(F.filter(tokens(F.col("text")), lambda w: w != F.lit(""))).alias("w")
+        F.explode(token_array("text")).alias("w")
     )
     tok = tok.localCheckpoint(eager=False)  # sketch + exact + total share one scan
     est = textstats.heavy_hitter_sketch(tok, capacity=_MG_CAPACITY)
@@ -2640,7 +2618,7 @@ def q_domain_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_quantile_filter",
-    _TOKS_CTE.replace("SELECT doc_id,", "SELECT doc_id, lang, text,")
+    TOKENS_CTE_SQL.replace("SELECT doc_id,", "SELECT doc_id, lang, text,")
     + """,
 s AS (
   SELECT doc_id, lang,
@@ -2802,11 +2780,10 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.pii_scrub(enriched)
 
 
-_LINE_DEDUP_SQL = """
+_LINE_DEDUP_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(text, '[ \\t\\n\\r\\x0b\\x0c]+'),
-                     w -> w <> '') AS ws
+         {TOKENS_SQL} AS ws
   FROM documents
 ),
 lines AS (
@@ -3141,7 +3118,7 @@ def q_kmeans_train_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BPE_MERGE_SQL = (
-    _TOKS_CTE
+    TOKENS_CTE_SQL
     + """,
 words AS (
   SELECT w AS word, COUNT(*) AS cnt
@@ -3200,7 +3177,7 @@ def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TFIDF_SQL = (
-    _TOKS_CTE
+    TOKENS_CTE_SQL
     + """,
 tok AS (SELECT doc_id, w FROM toks CROSS JOIN UNNEST(ws) AS t(w)),
 tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY doc_id, w),
@@ -3235,8 +3212,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts it at sandbox scale, and at 100 TB it hash-joins on the
     term key with map-side-combined inputs.  The top-5 window
     repartitions by doc_id only."""
-    from parallel_map_reduce_spark.functions.tokenize import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("w")

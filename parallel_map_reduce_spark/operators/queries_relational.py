@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parallel_map_reduce_spark.functions.tokenize import TOKEN_SPLIT_REGEX, tokens
 from parallel_map_reduce_spark.registry import register
 from parallel_map_reduce_spark.sources.tables import load_table
 
@@ -1090,9 +1091,9 @@ def q_salted_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "skew_salted_join_top_words",
-    """
+    f"""
 WITH words AS (
-  SELECT unnest(regexp_split_to_array(text, '[ \\t\\n\\r\\x0b\\x0c]+')) AS word
+  SELECT unnest(regexp_split_to_array(text, '{TOKEN_SPLIT_REGEX}')) AS word
   FROM documents
 ),
 tokens AS (SELECT word FROM words WHERE word <> ''),
@@ -1111,22 +1112,21 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the salted-join recipe forcing the sort-merge path a too-big-to-
     broadcast dim would take. Salting spreads each hot key across 16
     tasks; the oracle checks the join+count is unchanged."""
-    from parallel_map_reduce_spark.functions.tokenize import tokens
     from parallel_map_reduce_spark.operators.skew import salted_join
 
     docs = _t(spark, sf_dir, "documents")
-    tokens = docs.select(F.explode(tokens(F.col("text"))).alias("word")).filter(
+    words = docs.select(F.explode(tokens(F.col("text"))).alias("word")).filter(
         F.col("word") != ""
     )
     top_words = (
-        tokens.groupBy("word")
+        words.groupBy("word")
         .agg(F.count(F.lit(1)).alias("__n"))
         .orderBy(F.col("__n").desc(), F.col("word").asc())
         .limit(25)
         .select("word")
     )
     return (
-        salted_join(tokens, top_words, "word", num_salts=16)
+        salted_join(words, top_words, "word", num_salts=16)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
     )

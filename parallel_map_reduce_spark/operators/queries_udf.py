@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_map_reduce_spark.functions.tokenize import TOKEN_SPLIT_REGEX
 from parallel_map_reduce_spark.registry import register
 from parallel_map_reduce_spark.sources.tables import load_table
 
@@ -101,9 +102,9 @@ def q_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "udtf_token_lengths",
-    """
+    f"""
 WITH words AS (
-  SELECT unnest(regexp_split_to_array(text, '[ \\t\\n\\r\\x0b\\x0c]+')) AS word
+  SELECT unnest(regexp_split_to_array(text, '{TOKEN_SPLIT_REGEX}')) AS word
   FROM documents
 )
 SELECT LENGTH(word) AS token_len, COUNT(*) AS n_tokens
@@ -121,7 +122,7 @@ def q_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.functions import udtf
 
-    ws = re.compile(r"[ \t\n\r\x0b\x0c]+")
+    ws = re.compile(TOKEN_SPLIT_REGEX)
 
     @udtf(returnType="word: string")
     class Tokenize:

@@ -7,17 +7,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parallel_map_reduce_spark.functions.tokenize import TOKEN_SPLIT_REGEX
 from parallel_map_reduce_spark.operators import wordcount as wc
 from parallel_map_reduce_spark.registry import register
 from parallel_map_reduce_spark.sources.tables import load_table
 
-# RE2 form of the normative tokenizer for the DuckDB side (FIXTURES.md §1).
-_SPLIT = r"[ \t\n\r\x0b\x0c]+"
-
 _WORDS_CTE = f"""
 WITH words AS (
   SELECT doc_id,
-         unnest(regexp_split_to_array(text, '{_SPLIT}')) AS word
+         unnest(regexp_split_to_array(text, '{TOKEN_SPLIT_REGEX}')) AS word
   FROM documents
 )
 """

@@ -11,7 +11,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from parallel_map_reduce_spark.functions.hashing import fingerprint_md5, hash64
-from parallel_map_reduce_spark.functions.tokenize import tokens
+from parallel_map_reduce_spark.functions.tokenize import (
+    BPE_PRETOKEN_REGEX,
+    NON_WS_CHAR,
+    token_array,
+    token_count,
+    tokens_df,
+    word_ngrams,
+)
 
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic.
 # Deterministic and engine-portable; a real pipeline would swap in a
@@ -30,7 +37,7 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     Array built-ins only — no explode, no shuffle: each document is
     processed where it sits.
     """
-    toks = F.filter(tokens(F.col(text_col)), lambda w: w != F.lit(""))
+    toks = token_array(text_col)
     tok_col = F.col("_toks")
     return (
         df.select(F.col(id_col), toks.alias("_toks"))
@@ -61,7 +68,7 @@ def quality_score_expr(text: Column) -> Column:
     total = F.length(text).cast("double")
     alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", "")).cast("double")
     punct = F.length(F.regexp_replace(text, "[^.,;:!?]", "")).cast("double")
-    n_tokens = F.size(F.filter(tokens(text), lambda w: w != F.lit(""))).cast("double")
+    n_tokens = token_count(text).cast("double")
     safe = F.when(total > 0, total).otherwise(F.lit(1.0))
     alpha_ratio = alpha / safe
     punct_ratio = punct / safe
@@ -85,8 +92,8 @@ def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     total = F.length(text).cast("double")
     alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", "")).cast("double")
     punct = F.length(F.regexp_replace(text, "[^.,;:!?]", "")).cast("double")
-    space = F.length(F.regexp_replace(text, r"[^ \t\n\r\x0B\f]", "")).cast("double")
-    toks = F.filter(tokens(text), lambda w: w != F.lit(""))
+    space = F.length(F.regexp_replace(text, NON_WS_CHAR, "")).cast("double")
+    toks = token_array(text)
     n_tokens = F.size(toks).cast("double")
     stop = F.array([F.lit(w) for w in LANG_MARKERS["en"]])
     n_stop = F.size(F.filter(toks, lambda w: F.array_contains(stop, w))).cast(
@@ -115,7 +122,7 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     swap LANG_MARKERS for char-n-gram profiles — operator shape (pure
     column expressions, one pass, no shuffle) stays identical.
     """
-    toks = F.filter(tokens(F.col(text_col)), lambda w: w != F.lit(""))
+    toks = token_array(text_col)
     n_tokens = F.size(toks).cast("double")
     safe_tok = F.when(n_tokens > 0, n_tokens).otherwise(F.lit(1.0))
     scores = []
@@ -140,7 +147,7 @@ def doc_fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     """Content fingerprints: exact md5 + a 60-bit rolling-style prefix
     fingerprint of the first 8 tokens (cheap clustering key for
     near-identical heads)."""
-    toks = F.filter(tokens(F.col(text_col)), lambda w: w != F.lit(""))
+    toks = token_array(text_col)
     prefix = F.concat_ws(" ", F.slice(toks, 1, 8))
     return df.select(
         F.col(id_col),
@@ -160,37 +167,14 @@ def ngram_frequencies(
     Unlike shingle_array (distinct per doc, for jaccard), this keeps
     every occurrence — these are frequencies, not set members.
     """
-    toks_df = df.select(
-        F.filter(tokens(F.col(text_col)), lambda w: w != F.lit("")).alias("tk")
-    )
-    grams = toks_df.select(F.explode(_raw_ngrams(F.col("tk"), n)).alias("ngram"))
+    toks_df = df.select(token_array(text_col).alias("tk"))
+    grams = toks_df.select(F.explode(word_ngrams(F.col("tk"), n)).alias("ngram"))
     return (
         grams.groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("count"))
         .orderBy(F.col("count").desc(), F.col("ngram").asc())
         .limit(k)
     )
-
-
-def _raw_ngrams(tok_col: Column, n: int) -> Column:
-    """n-gram array from a MATERIALIZED token-array column (see
-    dedup.shingle_array for why the input must not be an inline
-    expression)."""
-    size = F.size(tok_col)
-    idx = F.sequence(F.lit(1), size - (n - 1))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(tok_col, i + j) for j in range(n)]),
-    )
-    return F.when(size >= n, grams).otherwise(F.array())
-
-
-# GPT-2-style pre-tokenizer, restricted to constructs RE2 AND Java regex
-# both support (no lookahead): contraction suffixes, letter runs, digit
-# runs, symbol runs. The real BPE merge table is model-specific; the
-# pre-tokenization split is the part that matters for token-count
-# estimation in a data pipeline.
-BPE_PRETOKEN_REGEX = r"'(?:s|d|m|t|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r\x0b\x0c]+"
 
 
 def bpe_token_stats(
@@ -204,9 +188,7 @@ def bpe_token_stats(
     return df.select(
         F.col(id_col),
         F.size(pieces).alias("n_bpe_tokens"),
-        F.size(F.filter(tokens(F.col(text_col)), lambda w: w != F.lit(""))).alias(
-            "n_ws_tokens"
-        ),
+        token_count(text_col).alias("n_ws_tokens"),
     )
 
 
@@ -227,9 +209,7 @@ def chunk_documents(
     partition and the only data growth is the window/stride overlap
     factor. Trailing partial chunks are kept (start <= n_tokens).
     """
-    toks = F.filter(
-        F.split(F.col(text_col), r"[ \t\n\r\x0b\x0c]+"), lambda w: w != F.lit("")
-    )
+    toks = token_array(text_col)
     return (
         df.select(F.col(id_col), toks.alias("_toks"))
         .select(
@@ -305,8 +285,6 @@ def _dup_span_occurrences(
     Returns ``(tdf, dups)`` where ``tdf`` is the token-array frame and
     ``dups`` holds one (id, pos) row per NON-canonical occurrence of a
     repeated span."""
-    from parallel_map_reduce_spark.operators.dedup import tokens_df
-
     tdf = tokens_df(df, text_col, id_col)
     n = F.size("tk")
     idx = F.sequence(F.lit(1), n - (span_len - 1))
@@ -319,11 +297,9 @@ def _dup_span_occurrences(
             0,
         ),
     )
-    # posexplode the window-hash EXPRESSION, not a projected attribute —
-    # same generator rule as explode_shingles: exploding an attribute
-    # lets InferFiltersFromGenerate push a size()>0 filter below the
-    # projection, re-deriving the whole md5 array per row (measured 86 s
-    # vs 3 s at sf0.1).
+    # posexplode the window-hash EXPRESSION, not a projected attribute
+    # (plan rule 2 in functions/tokenize.py): here the re-derived array
+    # is the whole md5 window, measured 86 s vs 3 s at sf0.1.
     wins = tdf.select(
         F.col(id_col),
         F.posexplode(
@@ -573,9 +549,7 @@ def line_dedup_stats(
     (hot boilerplate lines combine map-side), and AQE broadcasts it when
     small.  No Python, all codegen.
     """
-    toks = F.filter(
-        F.split(F.col(text_col), r"[ \t\n\r\x0b\x0c]+"), lambda w: w != F.lit("")
-    )
+    toks = token_array(text_col)
     lines = (
         df.select(F.col(id_col), toks.alias("_toks"))
         .select(
@@ -787,7 +761,7 @@ def _qc_features(
     text = F.col(text_col)
     total = F.length(text).cast("double")
     alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", "")).cast("double")
-    toks = F.filter(tokens(text), lambda w: w != F.lit(""))
+    toks = token_array(text)
     n_tokens = F.size(toks).cast("double")
     stop = F.array([F.lit(w) for w in LANG_MARKERS["en"]])
     n_stop = F.size(

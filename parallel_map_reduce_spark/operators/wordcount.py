@@ -26,6 +26,7 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import re
 from operator import add
 
 from pyspark.sql import DataFrame
@@ -66,9 +67,7 @@ def wordcount_rdd(df: DataFrame, text_col: str = "text") -> DataFrame:
     whole-stage codegen beat Python-object RDD processing by a wide
     margin, so ``wordcount`` is what ships in queries().
     """
-    import re
-
-    pattern = re.compile(r"[ \t\n\r\x0b\x0c]+")
+    pattern = re.compile(TOKEN_SPLIT_REGEX)
     spark = df.sparkSession
     counts = (
         df.select(text_col)

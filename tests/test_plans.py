@@ -826,28 +826,27 @@ def test_ivfpq_stored_query_prunes_partitions_after_lifecycle(spark, tmp_path):
     assert "partial_sum" in plan
 
 
-def test_kn_trigram_position_joins_aqe_skew_split(spark):
-    """The KN trigram scorer's position joins key on Zipf-skewed
-    n-grams — the docstring's named 100 TB hazard. This pins the
-    mitigation the module relies on: under AQE, a hot-key corpus gets
-    its skewed position join SPLIT at runtime (SortMergeJoin(skew=true)
-    in the final adaptive plan) with no code change — the joins are
-    shuffle-based and AQE-splittable, not locked into a shape skew
-    could wedge. The split join must be keyed on the hot key itself
-    ((v) or (w)), not on a partition that hash collisions happened to
-    inflate. Shuffle partitions are max(SPARK_GRAFT_CPUS, 8), so the
-    skew threshold and the advisory size are lowered to make tiny
-    test-scale partitions measurable, and the coalescing floor
-    (minPartitionSize, 1 MB by default) is scaled down with them by
-    the same 1/16384: left at 1 MB it coalesces every ~0.5 MB exchange
-    to one partition, every later stage has one map task, and AQE
-    cannot split a partition that comes from one mapper. Broadcast is
-    disabled because at test scale every count table would broadcast
-    and no join would shuffle at all (at 100 TB the count tables are
-    data-sized and DO shuffle — this test forces that regime)."""
-    from pyspark.sql import Row
+def _assert_hot_key_join_split(spark, score, hot_keys):
+    """Run the LM scorer ``score`` on a hot-key corpus and assert that
+    AQE split a position join keyed on ONE hot-key column (one of
+    ``hot_keys``) in the final adaptive plan.
 
-    from parallel_map_reduce_spark.operators import curation_extras as ce
+    Every other token of every document is "h", so "h" is the hot key
+    of each single-column position join. A join keyed on a column pair
+    does not count: its hot partitions can come from hash collisions.
+    Shuffle partitions are max(SPARK_GRAFT_CPUS, 8), so the skew
+    threshold and the advisory size are lowered to make tiny test-scale
+    partitions measurable, and the coalescing floor (minPartitionSize,
+    1 MB by default) is scaled down with them by the same 1/16384: left
+    at 1 MB it coalesces every ~0.5 MB exchange to one partition, every
+    later stage has one map task, and AQE cannot split a partition that
+    comes from one mapper. Broadcast is disabled because at test scale
+    every count table would broadcast and no join would shuffle at all
+    (at 100 TB the count tables are data-sized and DO shuffle — this
+    forces that regime)."""
+    import re
+
+    from pyspark.sql import Row
 
     rows = []
     for i in range(800):
@@ -870,16 +869,17 @@ def test_kn_trigram_position_joins_aqe_skew_split(spark):
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
-        df = ce.kn_trigram_lm_doc_scores(docs)
+        df = score(docs)
         out = df.collect()
         assert len(out) == 800  # every doc scored despite the hot key
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in plan
         assert "SortMergeJoin(skew=true)" in plan, plan[:2000]
-        # the split join is keyed on the hot key "h", not a hash collision
-        assert (
-            "SortMergeJoin(skew=true) [v#" in plan
-            or "SortMergeJoin(skew=true) [w#" in plan
+        # the split join is keyed on the hot key "h" alone: "[v#12]",
+        # never "[v#12, w#13]"
+        single_key = "|".join(hot_keys)
+        assert re.search(
+            rf"SortMergeJoin\(skew=true\) \[({single_key})#\d+\]", plan
         ), plan[:2000]
     finally:
         for k, v in saved.items():
@@ -887,3 +887,25 @@ def test_kn_trigram_position_joins_aqe_skew_split(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_kn_trigram_position_joins_aqe_skew_split(spark):
+    """The KN trigram scorer's position joins key on Zipf-skewed
+    n-grams — the docstring's named 100 TB hazard. This pins the
+    mitigation the module relies on: under AQE, a hot-key corpus gets
+    its skewed position join SPLIT at runtime (SortMergeJoin(skew=true)
+    in the final adaptive plan) with no code change — the joins are
+    shuffle-based and AQE-splittable, not locked into a shape skew
+    could wedge. The split join is the (v) or the (w) join."""
+    from parallel_map_reduce_spark.operators import curation_extras as ce
+
+    _assert_hot_key_join_split(spark, ce.kn_trigram_lm_doc_scores, ["v", "w"])
+
+
+def test_bigram_lm_position_joins_aqe_skew_split(spark):
+    """The bigram scorer's twin of the KN test above: its (prev) and (w)
+    hot-key joins read both sides through an exchange, so AQE can split
+    one of them."""
+    from parallel_map_reduce_spark.operators import curation_extras as ce
+
+    _assert_hot_key_join_split(spark, ce.bigram_lm_doc_scores, ["prev", "w"])

@@ -83,6 +83,60 @@ def test_total_tokens_conserved(spark, texts):
     assert sum(r["count"] for r in rows) == sum(len(model_tokens(t)) for t in texts)
 
 
+# ALPHABET plus NO-BREAK SPACE and LINE SEPARATOR: Unicode whitespace but
+# not C-locale whitespace, so both must stay inside tokens.
+TOKENIZER_TEXTS = st.lists(
+    st.text(st.one_of(ALPHABET, st.sampled_from(["\u00a0", "\u2028"])), max_size=40),
+    min_size=1,
+    max_size=6,
+)
+
+
+@given(texts=TOKENIZER_TEXTS)
+@PROP_SETTINGS
+def test_spark_and_duckdb_token_arrays_match_model(spark, texts):
+    """The package's Spark token array and its DuckDB token fragment,
+    run on the same texts, both equal the Python model — the VT, FF,
+    BOM and non-C-locale-whitespace cases included."""
+    import duckdb
+
+    from parallel_map_reduce_spark.functions.tokenize import TOKENS_SQL, token_array
+
+    want = [model_tokens(t) for t in texts]
+    rows = _df(spark, texts).select("doc_id", token_array("text").alias("tk"))
+    got_spark = [r["tk"] for r in sorted(rows.collect(), key=lambda r: r["doc_id"])]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(texts)))
+    got_duckdb = [
+        r[0]
+        for r in con.execute(
+            f"SELECT {TOKENS_SQL} FROM documents ORDER BY doc_id"
+        ).fetchall()
+    ]
+    assert got_spark == want
+    assert got_duckdb == want
+
+
+def test_whitespace_class_is_spelled_only_in_tokenize():
+    """No package module outside functions/tokenize.py spells the
+    whitespace class: the VT escape (x0b, any case) is its marker in
+    every Java, RE2 and Python form."""
+    import pathlib
+
+    import parallel_map_reduce_spark
+
+    pkg = pathlib.Path(parallel_map_reduce_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "functions" / "tokenize.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "x0b" in line.lower()
+    ]
+    assert hits == []
+
+
 @st.composite
 def edge_lists(draw):
     n = draw(st.integers(min_value=2, max_value=24))

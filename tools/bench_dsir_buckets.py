@@ -29,12 +29,12 @@ from parallel_map_reduce_spark.sources.tables import load_table
 
 def exact_weights(docs):
     """The infinite-B limit: features stay raw strings, no hashing."""
-    from parallel_map_reduce_spark.functions.tokenize import tokens
+    from parallel_map_reduce_spark.functions.tokenize import token_array
 
     tdf = docs.select(
         F.col("doc_id"),
         (F.col("lang") == "en").cast("int").alias("_is_t"),
-        F.filter(tokens(F.col("text")), lambda w: w != F.lit("")).alias("tk"),
+        token_array("text").alias("tk"),
     ).localCheckpoint(eager=True)
     n = F.size("tk")
     uni = tdf.select("doc_id", "_is_t", F.explode("tk").alias("f"))

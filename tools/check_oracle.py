@@ -16,9 +16,14 @@ import os
 import sys
 
 # The checkout this file lives in, so a run from another worktree
-# measures that worktree's code.
+# measures that worktree's code. The Python workers of UDF rows import
+# the package too, and inherit PYTHONPATH from the session this script
+# starts, so the checkout goes there as well as on sys.path.
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 
 def normalize(rows, columns):
