@@ -57,18 +57,25 @@ NON_WS_CHAR = f"[^{_WS}]"
 # part that matters for token-count estimation in a data pipeline.
 BPE_PRETOKEN_REGEX = f"'(?:s|d|m|t|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS}]+"
 
-# DuckDB forms over ``documents.text``: the non-empty token list, the
-# (doc_id, ws) token CTE, and the distinct word 3-gram shingle CTE.
+# DuckDB forms: the non-empty token list of ``text``, the (doc_id, ws)
+# token CTE over ``documents``, and the distinct word 3-gram shingle CTE.
 TOKENS_SQL = f"list_filter(regexp_split_to_array(text, '{TOKEN_SPLIT_REGEX}'), w -> w <> '')"
 TOKENS_CTE_SQL = f"WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ws FROM documents)"
-SHINGLES_CTE_SQL = (
-    TOKENS_CTE_SQL
-    + """,
+
+
+def shingles_ctes(source: str = "documents") -> str:
+    """The ``toks`` (doc_id, ws) and ``shingles`` (doc_id, shingle) CTEs
+    over ``source``, a relation with doc_id and text columns — without
+    the WITH keyword, so a caller can open a WITH RECURSIVE list or
+    continue one."""
+    return f"""toks AS (SELECT doc_id, {TOKENS_SQL} AS ws FROM {source}),
 shingles AS (
   SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
   FROM toks CROSS JOIN UNNEST(generate_series(1, greatest(len(ws)-2, 0))) AS t(i)
 )"""
-)
+
+
+SHINGLES_CTE_SQL = "WITH " + shingles_ctes()
 
 
 def tokens(text_col: str | Column) -> Column:

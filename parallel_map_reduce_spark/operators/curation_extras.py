@@ -33,11 +33,18 @@ from parallel_map_reduce_spark.functions.tokenize import (
     SHINGLES_CTE_SQL,
     TOKENS_CTE_SQL,
     TOKENS_SQL,
+    shingles_ctes,
     token_array,
     tokens_df,
     word_ngrams,
 )
 from parallel_map_reduce_spark.operators._scratch import in_scratch
+from parallel_map_reduce_spark.operators.dedup import (
+    admission_chain_sql,
+    admission_round_sql,
+    lsh_edges_sql,
+    minhash_signatures_sql,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1678,10 +1685,10 @@ def incremental_lsh_dedup_oracle_sql(
     bands: int = 4,
     threshold: float = 0.5,
 ) -> str:
-    # Replays the exact operator: banded cross candidates (new×kept
-    # only), verified by exact jaccard; banded intra candidates among
-    # cross-survivors; recursive-CTE components; min-kept / component-
-    # min canonicals.
+    # Replays the exact operator as one admission round: banded cross
+    # candidates (new×kept only) and banded intra candidates, each
+    # verified by exact jaccard, then the round's survivor rule,
+    # components and statuses.
     #
     # Predicate contract: ``new_pred``/``kept_pred`` are SQL boolean
     # expressions with a ``{t}`` placeholder wherever they reference the
@@ -1692,25 +1699,6 @@ def incremental_lsh_dedup_oracle_sql(
     # containing other literal braces — regex quantifiers, struct
     # literals — pass through untouched; a predicate with no ``{t}`` at
     # all is rejected loudly rather than spliced into ambiguous SQL.
-    from parallel_map_reduce_spark.functions.hashing import (
-        hash64_sql,
-        universal_hash_sql,
-        universal_params,
-    )
-
-    mins = ",\n       ".join(
-        f"MIN({universal_hash_sql('h', a, b)}) AS h{i}"
-        for i, (a, b) in enumerate(universal_params(num_hashes))
-    )
-    rpb = num_hashes // bands
-    band_match = " OR ".join(
-        "("
-        + " AND ".join(f"a.h{b * rpb + r} = b.h{b * rpb + r}" for r in range(rpb))
-        + ")"
-        for b in range(bands)
-    )
-    head = SHINGLES_CTE_SQL.replace("WITH ", "WITH RECURSIVE ", 1)
-
     def _splice(pred: str, alias: str) -> str:
         if "{t}" not in pred:
             raise ValueError(
@@ -1722,70 +1710,21 @@ def incremental_lsh_dedup_oracle_sql(
     new_a, new_b = _splice(new_pred, "a"), _splice(new_pred, "b")
     kept_b = _splice(kept_pred, "b")
     new_d = _splice(new_pred, "documents")
-    return (
-        head
-        + f""",
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
-hashed AS (SELECT doc_id, {hash64_sql('shingle', 0)} AS h FROM shingles),
-sigs AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id),
-xcand AS (
-  SELECT a.doc_id AS id_n, b.doc_id AS id_k
-  FROM sigs a JOIN sigs b
-    ON ({new_a}) AND ({kept_b})
-   AND ({band_match})
-),
-xver AS (
-  SELECT p.id_n, p.id_k FROM (
-    SELECT x.id_n, x.id_k, COUNT(*) AS n_common
-    FROM xcand x
-    JOIN shingles sa ON sa.doc_id = x.id_n
-    JOIN shingles sb ON sb.doc_id = x.id_k AND sb.shingle = sa.shingle
-    GROUP BY 1, 2
-  ) p
-  JOIN sizes sa ON p.id_n = sa.doc_id
-  JOIN sizes sb ON p.id_k = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {threshold}
-),
-cross_dup AS (SELECT id_n, MIN(id_k) AS dup_of FROM xver GROUP BY id_n),
-icand AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sigs a JOIN sigs b
-    ON a.doc_id < b.doc_id AND ({new_a}) AND ({new_b})
-   AND ({band_match})
-),
-iver AS (
-  SELECT p.id_a, p.id_b FROM (
-    SELECT c.id_a, c.id_b, COUNT(*) AS n_common
-    FROM icand c
-    JOIN shingles sa ON sa.doc_id = c.id_a
-    JOIN shingles sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-    GROUP BY 1, 2
-  ) p
-  JOIN sizes sa ON p.id_a = sa.doc_id
-  JOIN sizes sb ON p.id_b = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {threshold}
-    AND p.id_a NOT IN (SELECT id_n FROM cross_dup)
-    AND p.id_b NOT IN (SELECT id_n FROM cross_dup)
-),
-sym AS (SELECT id_a AS u, id_b AS v FROM iver
-        UNION ALL SELECT id_b, id_a FROM iver),
-reach AS (SELECT u, v FROM sym
-          UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS group_id FROM reach GROUP BY u)
-SELECT d.doc_id,
-       CASE WHEN cd.dup_of IS NOT NULL THEN 'cross_dup'
-            WHEN comp.group_id IS NOT NULL AND comp.group_id <> d.doc_id
-              THEN 'batch_dup'
-            ELSE 'kept' END AS status,
-       COALESCE(cd.dup_of,
-                CASE WHEN comp.group_id <> d.doc_id THEN comp.group_id END,
-                -1)
-         AS dup_of
-FROM (SELECT doc_id FROM documents WHERE {new_d}) d
-LEFT JOIN cross_dup cd ON cd.id_n = d.doc_id
-LEFT JOIN comp ON comp.doc_id = d.doc_id
-"""
+
+    def edges(on: str) -> str:
+        return lsh_edges_sql(on, num_hashes, bands, threshold)
+
+    round_ = admission_round_sql(
+        f"(SELECT doc_id FROM documents WHERE {new_d})",
+        edges(f"({new_a}) AND ({kept_b})"),
+        edges(f"a.doc_id < b.doc_id AND ({new_a}) AND ({new_b})"),
     )
+    return f"""
+WITH RECURSIVE {shingles_ctes()},
+sigs AS MATERIALIZED ({minhash_signatures_sql(num_hashes=num_hashes)}),
+{round_}
+SELECT doc_id, status, dup_of FROM status
+"""
 
 
 def _bpe_rounds_cte_sql(rounds: int) -> str:
@@ -2724,114 +2663,34 @@ def incremental_lsh_dedup_chain_oracle_sql(
     bands: int = 4,
     threshold: float = 0.5,
 ) -> str:
-    """The admission chain unrolled: per batch k, the single-round
-    pipeline (banded cross candidates vs kept{k-1} → verified jaccard →
-    intra components among cross-survivors → statuses), then
-    kept{k} = kept{k-1} ∪ batch-k survivors feeds batch k+1. Batch k's
-    membership predicate is doc_id ≡ 2k−1 (mod 2·n_batches). Every
-    chained CTE is MATERIALIZED — kept{k}/status{k} are referenced by
-    two later CTEs each, and inlining would re-expand the whole prior
-    chain per reference (the bpe_rounds lesson)."""
-    from parallel_map_reduce_spark.functions.hashing import (
-        hash64_sql,
-        universal_hash_sql,
-        universal_params,
-    )
-
-    mod = 2 * n_batches
-    mins = ",\n       ".join(
-        f"MIN({universal_hash_sql('h', a, b)}) AS h{i}"
-        for i, (a, b) in enumerate(universal_params(num_hashes))
-    )
-    rpb = num_hashes // bands
-    band_match = " OR ".join(
-        "("
-        + " AND ".join(f"a.h{b * rpb + r} = b.h{b * rpb + r}" for r in range(rpb))
-        + ")"
-        for b in range(bands)
-    )
+    """The admission chain unrolled: batch k (doc_id ≡ 2k−1 mod
+    2·n_batches) runs the one-round pipeline of
+    incremental_lsh_dedup_oracle_sql against kept{k-1}, and its kept
+    ids join kept{k} for batch k+1 (dedup.admission_chain_sql)."""
     if "{t}" not in kept0_pred:
         raise ValueError("kept0_pred must carry a '{t}' placeholder")
-    sql = SHINGLES_CTE_SQL.replace("WITH ", "WITH RECURSIVE ", 1)
-    sql += f""",
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
-hashed AS (SELECT doc_id, {hash64_sql('shingle', 0)} AS h FROM shingles),
-sigs AS MATERIALIZED (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id),
-kept0 AS (SELECT doc_id FROM documents WHERE {kept0_pred.replace('{t}', 'documents')})"""
-    for k in range(1, n_batches + 1):
-        new = f"doc_id % {mod} = {2 * k - 1}"
-        sql += f""",
-xcand{k} AS (
-  SELECT a.doc_id AS id_n, b.doc_id AS id_k
-  FROM sigs a JOIN sigs b
-    ON a.{new} AND b.doc_id IN (SELECT doc_id FROM kept{k - 1})
-   AND ({band_match})
-),
-xver{k} AS (
-  SELECT p.id_n, p.id_k FROM (
-    SELECT x.id_n, x.id_k, COUNT(*) AS n_common
-    FROM xcand{k} x
-    JOIN shingles sa ON sa.doc_id = x.id_n
-    JOIN shingles sb ON sb.doc_id = x.id_k AND sb.shingle = sa.shingle
-    GROUP BY 1, 2
-  ) p
-  JOIN sizes sa ON p.id_n = sa.doc_id
-  JOIN sizes sb ON p.id_k = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {threshold}
-),
-cross_dup{k} AS MATERIALIZED (
-  SELECT id_n, MIN(id_k) AS dup_of FROM xver{k} GROUP BY id_n
-),
-icand{k} AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sigs a JOIN sigs b
-    ON a.doc_id < b.doc_id AND a.{new} AND b.{new}
-   AND ({band_match})
-),
-iver{k} AS (
-  SELECT p.id_a, p.id_b FROM (
-    SELECT c.id_a, c.id_b, COUNT(*) AS n_common
-    FROM icand{k} c
-    JOIN shingles sa ON sa.doc_id = c.id_a
-    JOIN shingles sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-    GROUP BY 1, 2
-  ) p
-  JOIN sizes sa ON p.id_a = sa.doc_id
-  JOIN sizes sb ON p.id_b = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {threshold}
-    AND p.id_a NOT IN (SELECT id_n FROM cross_dup{k})
-    AND p.id_b NOT IN (SELECT id_n FROM cross_dup{k})
-),
-sym{k} AS (SELECT id_a AS u, id_b AS v FROM iver{k}
-           UNION ALL SELECT id_b, id_a FROM iver{k}),
-reach{k} AS (SELECT u, v FROM sym{k}
-             UNION SELECT r.u, s.v FROM reach{k} r JOIN sym{k} s ON r.v = s.u),
-comp{k} AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS group_id
-            FROM reach{k} GROUP BY u),
-status{k} AS MATERIALIZED (
-  SELECT d.doc_id,
-         CAST({k} AS BIGINT) AS batch_id,
-         CASE WHEN cd.dup_of IS NOT NULL THEN 'cross_dup'
-              WHEN c.group_id IS NOT NULL AND c.group_id <> d.doc_id
-                THEN 'batch_dup'
-              ELSE 'kept' END AS status,
-         COALESCE(cd.dup_of,
-                  CASE WHEN c.group_id <> d.doc_id THEN c.group_id END,
-                  -1) AS dup_of
-  FROM (SELECT doc_id FROM documents WHERE {new}) d
-  LEFT JOIN cross_dup{k} cd ON cd.id_n = d.doc_id
-  LEFT JOIN comp{k} c ON c.doc_id = d.doc_id
-),
-kept{k} AS MATERIALIZED (
-  SELECT doc_id FROM kept{k - 1}
-  UNION ALL
-  SELECT doc_id FROM status{k} WHERE status = 'kept'
-)"""
+
+    def edges(on: str) -> str:
+        return lsh_edges_sql(on, num_hashes, bands, threshold)
+
+    in_batch = "{}.doc_id IN (SELECT doc_id FROM batch{})".format
+    chain = admission_chain_sql(
+        n_batches,
+        f"SELECT doc_id FROM documents WHERE {kept0_pred.replace('{t}', 'documents')}",
+        lambda k: f"SELECT doc_id FROM documents WHERE doc_id % {2 * n_batches} = {2 * k - 1}",
+        lambda k: edges(
+            f"{in_batch('a', k)} AND b.doc_id IN (SELECT doc_id FROM kept{k - 1})"
+        ),
+        lambda k: edges(f"a.doc_id < b.doc_id AND {in_batch('a', k)} AND {in_batch('b', k)}"),
+    )
     union = "\nUNION ALL\n".join(
-        f"SELECT doc_id, batch_id, status, dup_of FROM status{k}"
+        f"SELECT doc_id, CAST({k} AS BIGINT) AS batch_id, status, dup_of FROM status{k}"
         for k in range(1, n_batches + 1)
     )
-    return sql + "\n" + union
+    return f"""WITH RECURSIVE {shingles_ctes()},
+sigs AS MATERIALIZED ({minhash_signatures_sql(num_hashes=num_hashes)}),
+{chain}
+{union}"""
 
 
 # ---------------------------------------------------------------------------

@@ -35,7 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parallel_map_reduce_spark.functions.tokenize import SHINGLES_CTE_SQL, TOKENS_SQL
+from parallel_map_reduce_spark.functions.tokenize import (
+    SHINGLES_CTE_SQL,
+    TOKENS_SQL,
+    shingles_ctes,
+)
 from parallel_map_reduce_spark.operators import curation_extras as ce
 from parallel_map_reduce_spark.operators import dedup as _dedup
 from parallel_map_reduce_spark.operators import similarity as _similarity
@@ -433,72 +437,25 @@ def pipeline_curate_corpus_oracle_sql(sample_n: int = SAMPLE_N) -> str:
     pin (quality_classifier_descent_ctes) and gates on the r8 weights'
     kept decision; the set-dependent stages (LSH components, Madow
     cumsum) are replayed inline over the survivor sets, exactly as in
-    the incremental-dedup chain oracle. The SemDeDup stage splices the
-    SAME seed-centroid assignment CTE the registered
+    the incremental-dedup chain oracle, from dedup.py's near-duplicate
+    forms at the Spark operators' defaults. The SemDeDup stage builds
+    the SAME seed-centroid assignment CTEs the registered
     embedding_cluster_assign / semantic_dedup_cluster_sharded oracles
-    pin (queries_llm._CLUSTER_ASSIGNED_CTE), word-boundary-renamed to
-    an sd_ prefix so its CTE names cannot collide with the funnel's —
-    a mechanical rename of the shared text, not a re-derivation, so
-    the assignment rule cannot drift between the standalone row and
-    the funnel."""
-    import re
-
-    from parallel_map_reduce_spark.functions.hashing import (
-        hash64_sql,
-        universal_hash_sql,
-        universal_params,
-    )
+    pin (queries_llm.cluster_assigned_cte), with an sd_ name prefix so
+    they cannot collide with the funnel's CTE names."""
+    from parallel_map_reduce_spark.functions.hashing import hash64_sql
     from parallel_map_reduce_spark.operators.queries_llm import (
-        _CLUSTER_ASSIGNED_CTE,
+        cluster_assigned_cte,
         quality_classifier_descent_ctes,
     )
 
-    sd_assign = _CLUSTER_ASSIGNED_CTE.strip()
-    assert sd_assign.startswith("WITH ")
-    sd_assign = sd_assign[len("WITH ") :]
-    # Rename list is PARSED from the shared text, not hard-coded: a CTE
-    # later added to _CLUSTER_ASSIGNED_CTE would otherwise be spliced
-    # un-renamed and could silently collide with a funnel CTE name
-    # (ADVICE r12). The equality check keeps the splice honest — if the
-    # parse or the shared text drifts, fail loudly at build time.
-    _parsed = tuple(
-        re.findall(
-            r"(?:WITH|,)\s*([a-z_][a-z0-9_]*)\s+AS\s*(?:MATERIALIZED\s*)?\(",
-            _CLUSTER_ASSIGNED_CTE,
-        )
-    )
-    if _parsed != ("base", "seed_ids", "seeds", "scored", "assigned"):
-        raise RuntimeError(
-            f"_CLUSTER_ASSIGNED_CTE CTE names drifted: {_parsed}; update "
-            "the sd_ splice rename in pipeline_curate_corpus_oracle_sql"
-        )
-    for _name in _parsed:
-        sd_assign = re.sub(rf"\b{_name}\b", f"sd_{_name}", sd_assign)
-
     qc_body, qc_final = quality_classifier_descent_ctes(QC_ROUNDS, QC_LR)
-
-    num_hashes, bands = 12, 4
-    rpb = num_hashes // bands
-    mins = ",\n       ".join(
-        f"MIN({universal_hash_sql('h', a, b)}) AS h{i}"
-        for i, (a, b) in enumerate(universal_params(num_hashes))
-    )
-    band_match = " OR ".join(
-        "("
-        + " AND ".join(f"a.h{b * rpb + r} = b.h{b * rpb + r}" for r in range(rpb))
-        + ")"
-        for b in range(bands)
-    )
     gq = ce.gopher_quality_stats_oracle_sql().strip()
     rep = ce.gopher_repetition_stats_oracle_sql().strip()
     cb = ce.ccnet_perplexity_buckets_oracle_sql().strip()
     dsir = ce.dsir_importance_weights_oracle_sql("lang = 'en'").strip()
     ok = hash64_sql("CAST(doc_id AS VARCHAR)", 0)
-    shingles_inner = SHINGLES_CTE_SQL.replace(
-        "FROM documents",
-        "FROM documents WHERE doc_id IN (SELECT doc_id FROM kq)",
-        1,
-    )
+    kq_docs = "(SELECT * FROM documents WHERE doc_id IN (SELECT doc_id FROM kq))"
     return f"""
 WITH RECURSIVE
 k1 AS MATERIALIZED (
@@ -529,37 +486,16 @@ kq AS MATERIALIZED (
           >= 0.5
 ),
 sp AS MATERIALIZED (
-  SELECT doc_id, shingle FROM ({shingles_inner} SELECT doc_id, shingle FROM shingles)
+  WITH {shingles_ctes(kq_docs)} SELECT doc_id, shingle FROM shingles
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sp GROUP BY doc_id),
-hashed AS (SELECT doc_id, {hash64_sql('shingle', 0)} AS h FROM sp),
-sigs AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id),
-cand AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND ({band_match})
-),
-thr AS (
-  SELECT p.id_a, p.id_b FROM (
-    SELECT c.id_a, c.id_b, COUNT(*) AS n_common
-    FROM cand c
-    JOIN sp sa ON sa.doc_id = c.id_a
-    JOIN sp sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-    GROUP BY 1, 2
-  ) p
-  JOIN sizes sa ON p.id_a = sa.doc_id
-  JOIN sizes sb ON p.id_b = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= 0.5
-),
-sym AS (SELECT id_a AS u, id_b AS v FROM thr
-        UNION ALL SELECT id_b, id_a FROM thr),
-reach AS (SELECT u, v FROM sym
-          UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS group_id FROM reach GROUP BY u),
+sigs AS ({_dedup.minhash_signatures_sql("sp")}),
+thr AS ({_dedup.lsh_edges_sql(shingles="sp")}),
+{_dedup.components_sql("thr")},
 k4 AS MATERIALIZED (
   SELECT doc_id FROM kq
   WHERE doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> group_id)
 ),
-{sd_assign},
+{cluster_assigned_cte(prefix="sd_")},
 sd_surv AS MATERIALIZED (
   SELECT a.vec_id, a.cluster, b.vec
   FROM sd_assigned a JOIN sd_base b USING (vec_id)
@@ -572,17 +508,11 @@ sd_thr AS (
   WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6)
         >= {EMBED_DUP_THRESHOLD}
 ),
-sd_sym AS (SELECT id_a AS u, id_b AS v FROM sd_thr
-           UNION ALL SELECT id_b, id_a FROM sd_thr),
-sd_reach AS (SELECT u, v FROM sd_sym
-             UNION SELECT r.u, s.v
-             FROM sd_reach r JOIN sd_sym s ON r.v = s.u),
-sd_comp AS (SELECT u AS vec_id, LEAST(u, MIN(v)) AS group_id
-            FROM sd_reach GROUP BY u),
+{_dedup.components_sql("sd_thr", "_sd", "vec_id")},
 k4s AS MATERIALIZED (
   SELECT doc_id FROM k4
   WHERE doc_id NOT IN
-    (SELECT vec_id FROM sd_comp WHERE vec_id <> group_id)
+    (SELECT vec_id FROM comp_sd WHERE vec_id <> group_id)
 ),
 dec AS (
   SELECT doc_id, contaminated FROM (

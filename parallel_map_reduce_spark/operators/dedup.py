@@ -14,12 +14,17 @@ Four tiers, all shuffle-disciplined for 100 TB:
                   join; the verifier/oracle for the approximate tiers.
 
 All hashing is the portable md5-derived scheme (functions/hashing.py) so
-every deterministic step is DuckDB-oracle-checkable.
+every deterministic step is DuckDB-oracle-checkable. The DuckDB forms of
+the near-duplicate decision (signatures, band match, verified-Jaccard
+edges, recursive components, admission rounds) sit at the end of this
+module; README.md, "Near-duplicate oracle", lists the oracles built
+from them.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 from fractions import Fraction
 
 from pyspark.sql import Column, DataFrame
@@ -28,7 +33,9 @@ from pyspark.sql import functions as F
 from parallel_map_reduce_spark.functions.hashing import (
     fingerprint_md5,
     hash64,
+    hash64_sql,
     universal_hash,
+    universal_hash_sql,
     universal_params,
 )
 from parallel_map_reduce_spark.functions.tokenize import (
@@ -910,3 +917,161 @@ def _admission_statuses(
             ).alias("dup_of"),
         )
     )
+
+
+# ---------------------------------------------------------------------------
+# DuckDB forms of the near-duplicate decision (README "Near-duplicate
+# oracle"). Every oracle that replays a decision above is built from
+# these, over its own shingle, candidate and edge relations.
+# ---------------------------------------------------------------------------
+
+
+def minhash_signatures_sql(shingles: str = "shingles", num_hashes: int = 12) -> str:
+    """SELECT of (doc_id, h0..h{k-1}) over a (doc_id, shingle) relation:
+    the DuckDB twin of :func:`minhash_signatures`."""
+    mins = ",\n       ".join(
+        f"MIN({universal_hash_sql('h', a, b)}) AS h{i}"
+        for i, (a, b) in enumerate(universal_params(num_hashes))
+    )
+    return f"""SELECT doc_id,
+       {mins}
+FROM (SELECT doc_id, {hash64_sql('shingle', 0)} AS h FROM {shingles})
+GROUP BY doc_id"""
+
+
+def lsh_candidates_sql(
+    on: str = "a.doc_id < b.doc_id", num_hashes: int = 12, bands: int = 4
+) -> str:
+    """SELECT of (id_a, id_b): the pairs of the signature relation
+    ``sigs`` (aliased a and b) that satisfy ``on`` and agree on every
+    row of at least one band — :func:`lsh_candidate_pairs`' raw-value
+    band keys as one predicate."""
+    rpb = num_hashes // bands
+    band_match = " OR ".join(
+        "("
+        + " AND ".join(f"a.h{b * rpb + r} = b.h{b * rpb + r}" for r in range(rpb))
+        + ")"
+        for b in range(bands)
+    )
+    return f"""SELECT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM sigs a JOIN sigs b ON ({on}) AND ({band_match})"""
+
+
+def jaccard_edges_sql(
+    threshold: float = 0.5, shingles: str = "shingles", cand: str | None = None
+) -> str:
+    """SELECT of (id_a, id_b, jaccard rounded to 4): the pairs whose
+    shingle-set Jaccard is at least ``threshold``, filtered on the
+    unrounded value as the Spark operators do. ``cand`` is a
+    parenthesized (id_a, id_b) candidate relation; without one, every
+    pair id_a < id_b that shares a shingle is a candidate (the
+    inverted-index self-join of :func:`ngram_jaccard_pairs`)."""
+    if cand is None:
+        common = f"""SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
+  FROM {shingles} a JOIN {shingles} b USING (shingle)
+  WHERE a.doc_id < b.doc_id
+  GROUP BY 1, 2"""
+    else:
+        common = f"""SELECT c.id_a, c.id_b, COUNT(*) AS n_common
+  FROM {cand} c
+  JOIN {shingles} sa ON sa.doc_id = c.id_a
+  JOIN {shingles} sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
+  GROUP BY 1, 2"""
+    sizes = f"(SELECT doc_id, COUNT(*) AS n_sh FROM {shingles} GROUP BY doc_id)"
+    jac = "n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common)"
+    return f"""SELECT p.id_a, p.id_b, ROUND({jac}, 4) AS jaccard
+FROM ({common}) p
+JOIN {sizes} sa ON p.id_a = sa.doc_id
+JOIN {sizes} sb ON p.id_b = sb.doc_id
+WHERE {jac} >= {threshold}"""
+
+
+def lsh_edges_sql(
+    on: str = "a.doc_id < b.doc_id",
+    num_hashes: int = 12,
+    bands: int = 4,
+    threshold: float = 0.5,
+    shingles: str = "shingles",
+) -> str:
+    """SELECT of the LSH candidates (over ``sigs``) verified by Jaccard
+    (over ``shingles``): the DuckDB twin of
+    :func:`minhash_lsh_dedup_pairs` when ``on`` is the default."""
+    cand = lsh_candidates_sql(on, num_hashes, bands)
+    return jaccard_edges_sql(threshold, shingles, f"({cand})")
+
+
+def components_sql(
+    edges: str, tag: str = "", id_col: str = "doc_id", label_col: str = "group_id"
+) -> str:
+    """CTEs sym{tag}, reach{tag} and comp{tag}(id_col, label_col) for a
+    WITH RECURSIVE list: every node of the (id_a, id_b) relation
+    ``edges`` labelled with the smallest id of its component — the
+    fixpoint :func:`connected_components` reaches. ``reach`` is the
+    transitive closure by UNION, which terminates because a component
+    has finitely many pairs."""
+    return f"""sym{tag} AS MATERIALIZED (
+  SELECT id_a AS u, id_b AS v FROM {edges} UNION ALL SELECT id_b, id_a FROM {edges}),
+reach{tag} AS (SELECT u, v FROM sym{tag}
+  UNION SELECT r.u, s.v FROM reach{tag} r JOIN sym{tag} s ON r.v = s.u),
+comp{tag} AS MATERIALIZED (
+  SELECT u AS {id_col}, LEAST(u, MIN(v)) AS {label_col} FROM reach{tag} GROUP BY u)"""
+
+
+def admission_round_sql(
+    batch: str, cross_edges: str, intra_edges: str, tag: str = "", id_col: str = "doc_id"
+) -> str:
+    """CTEs of one admission round, the DuckDB twin of
+    :func:`_admission_statuses` and its callers' survivor rule.
+
+    ``batch`` is a relation whose ``id_col`` holds the batch ids;
+    ``cross_edges`` a SELECT of verified (id_a, id_b) pairs from a batch
+    id to a kept id; ``intra_edges`` a SELECT of verified pairs between
+    batch ids. Emits cross_dup{tag} (id_n, dup_of: smallest kept match),
+    intra{tag} (the intra pairs with neither end a cross dup), their
+    components, and status{tag} (id_col, status, dup_of). Every
+    non-recursive CTE is MATERIALIZED: each is read more than once, and
+    DuckDB inlines a CTE at every reference, which blows up a chain of
+    rounds."""
+    return f"""cross_dup{tag} AS MATERIALIZED (
+  SELECT id_a AS id_n, MIN(id_b) AS dup_of FROM ({cross_edges}) GROUP BY id_a),
+intra{tag} AS MATERIALIZED (
+  SELECT id_a, id_b FROM ({intra_edges})
+  WHERE id_a NOT IN (SELECT id_n FROM cross_dup{tag})
+    AND id_b NOT IN (SELECT id_n FROM cross_dup{tag})),
+{components_sql(f"intra{tag}", tag, id_col, "label")},
+status{tag} AS MATERIALIZED (
+  SELECT b.{id_col},
+         CASE WHEN c.dup_of IS NOT NULL THEN 'cross_dup'
+              WHEN p.label IS NOT NULL AND p.label <> b.{id_col} THEN 'batch_dup'
+              ELSE 'kept' END AS status,
+         COALESCE(c.dup_of, CASE WHEN p.label <> b.{id_col} THEN p.label END, -1)
+           AS dup_of
+  FROM {batch} b
+  LEFT JOIN cross_dup{tag} c ON c.id_n = b.{id_col}
+  LEFT JOIN comp{tag} p ON p.{id_col} = b.{id_col})"""
+
+
+def admission_chain_sql(
+    n_batches: int,
+    kept0: str,
+    batch: Callable[[int], str],
+    cross_edges: Callable[[int], str],
+    intra_edges: Callable[[int], str],
+    id_col: str = "doc_id",
+) -> str:
+    """CTEs of ``n_batches`` chained admission rounds: batch{k} (the
+    SELECT ``batch(k)``, k from 1) admits against kept{k-1}, and kept{k}
+    is kept{k-1} plus the round's kept ids. ``kept0`` selects the first
+    kept ids; ``cross_edges(k)`` and ``intra_edges(k)`` are the round's
+    edge SELECTs, reading batch{k} and kept{k-1}."""
+    parts = [f"kept0 AS MATERIALIZED ({kept0})"]
+    for k in range(1, n_batches + 1):
+        parts += [
+            f"batch{k} AS MATERIALIZED ({batch(k)})",
+            admission_round_sql(
+                f"batch{k}", cross_edges(k), intra_edges(k), str(k), id_col
+            ),
+            f"kept{k} AS MATERIALIZED (SELECT {id_col} FROM kept{k - 1}"
+            f" UNION ALL SELECT {id_col} FROM status{k} WHERE status = 'kept')",
+        ]
+    return ",\n".join(parts)

@@ -181,10 +181,10 @@ from parallel_map_reduce_spark.functions.hashing import hash64, hash64_sql
 from parallel_map_reduce_spark.operators import dedup as _dedup
 from parallel_map_reduce_spark.operators import similarity as _similarity
 from parallel_map_reduce_spark.operators.queries_llm import (
-    _CLUSTER_ASSIGNED_CTE,
     _KMEANS_TRAIN_ROUNDS,
     _POW60,
     EMBED_DUP_THRESHOLD,
+    cluster_assigned_cte,
     kmeans_final_assignment_cte,
 )
 
@@ -192,9 +192,8 @@ from parallel_map_reduce_spark.operators.queries_llm import (
 # as embedding_cluster_assign, so the assignment rule can't drift),
 # within-cluster cosine edges, recursive components, per-cluster
 # keep-set aggregates.
-_CLUSTER_SHARD_SQL = (
-    _CLUSTER_ASSIGNED_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
-    + f""",
+_CLUSTER_SHARD_SQL = f"""
+WITH RECURSIVE {cluster_assigned_cte()},
 withvec AS (
   SELECT a.vec_id, a.cluster, b.vec FROM assigned a JOIN base b USING (vec_id)
 ),
@@ -204,11 +203,7 @@ thr AS (
     ON a.cluster = b.cluster AND a.vec_id < b.vec_id
   WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= {EMBED_DUP_THRESHOLD}
 ),
-sym AS (SELECT id_a AS u, id_b AS v FROM thr
-        UNION ALL SELECT id_b, id_a FROM thr),
-reach AS (SELECT u, v FROM sym
-          UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-comp AS (SELECT u AS vec_id, LEAST(u, MIN(v)) AS group_id FROM reach GROUP BY u),
+{_dedup.components_sql("thr", id_col="vec_id")},
 losers AS (SELECT vec_id FROM comp WHERE vec_id <> group_id)
 SELECT cluster,
        COUNT(*) AS n_assigned,
@@ -219,7 +214,6 @@ SELECT cluster,
 FROM assigned a
 GROUP BY cluster
 """
-)
 
 
 @register("semantic_dedup_cluster_sharded", _CLUSTER_SHARD_SQL)
@@ -286,19 +280,9 @@ shard_pairs AS (
   JOIN assigned x ON p.id_a = x.vec_id
   JOIN assigned y ON p.id_b = y.vec_id AND x.cluster = y.cluster
 ),
-sym_e AS (SELECT id_a AS u, id_b AS v FROM exact_pairs
-          UNION ALL SELECT id_b, id_a FROM exact_pairs),
-reach_e AS (SELECT u, v FROM sym_e
-            UNION SELECT r.u, s.v FROM reach_e r JOIN sym_e s ON r.v = s.u),
-comp_e AS (SELECT u AS vec_id, LEAST(u, MIN(v)) AS label
-           FROM reach_e GROUP BY u),
+{_dedup.components_sql("exact_pairs", "_e", "vec_id", "label")},
 losers_e AS (SELECT vec_id FROM comp_e WHERE vec_id <> label),
-sym_s AS (SELECT id_a AS u, id_b AS v FROM shard_pairs
-          UNION ALL SELECT id_b, id_a FROM shard_pairs),
-reach_s AS (SELECT u, v FROM sym_s
-            UNION SELECT r.u, s.v FROM reach_s r JOIN sym_s s ON r.v = s.u),
-comp_s AS (SELECT u AS vec_id, LEAST(u, MIN(v)) AS label
-           FROM reach_s GROUP BY u),
+{_dedup.components_sql("shard_pairs", "_s", "vec_id", "label")},
 losers_s AS (SELECT vec_id FROM comp_s WHERE vec_id <> label),
 counts AS (
   SELECT (SELECT COUNT(*) FROM base) AS n_docs,
@@ -322,10 +306,7 @@ SELECT n_docs, n_exact_pairs, n_sharded_pairs,
 FROM counts
 """
 
-_SHARD_MISS_SQL = (
-    _CLUSTER_ASSIGNED_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
-    + _SHARD_MISS_TAIL
-)
+_SHARD_MISS_SQL = "WITH RECURSIVE " + cluster_assigned_cte() + _SHARD_MISS_TAIL
 
 # Deterministic audit sample: hash64(vec_id) residue, d = ceil(n / cap)
 # — the _cap_train_set discipline with the portable md5 hash so the
@@ -335,36 +316,16 @@ _SHARD_MISS_SQL = (
 _AUDIT_SAMPLE_CAP = 512
 _AUDIT_SAMPLE_SEED = 13
 
-_SAMPLED_BASE_CTE = f"""WITH nrows AS (
+_SHARD_MISS_SAMPLED_SQL = f"""WITH RECURSIVE nrows AS (
   SELECT GREATEST(CAST(CEIL(COUNT(*) / {_AUDIT_SAMPLE_CAP}.0) AS BIGINT), 1)
            AS d
   FROM embeddings
 ),
-base AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS vec
-  FROM embeddings CROSS JOIN nrows
+sampled AS (
+  SELECT embeddings.* FROM embeddings CROSS JOIN nrows
   WHERE {hash64_sql("CAST(vec_id AS VARCHAR)", _AUDIT_SAMPLE_SEED)} % d = 0
-),"""
-
-_SAMPLED_ASSIGNED_CTE = _CLUSTER_ASSIGNED_CTE.replace(
-    "WITH base AS "
-    "(SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),",
-    _SAMPLED_BASE_CTE,
-    1,
-)
-if _SAMPLED_ASSIGNED_CTE == _CLUSTER_ASSIGNED_CTE:
-    # The replace is anchored on the shared CTE's literal text; if that
-    # text drifts, fail at import instead of shipping an unsampled
-    # "sampled" oracle (python -O strips asserts, so a real raise).
-    raise RuntimeError(
-        "_CLUSTER_ASSIGNED_CTE base-CTE text drifted; the sampled "
-        "miss-audit oracle replace no longer matches"
-    )
-
-_SHARD_MISS_SAMPLED_SQL = (
-    _SAMPLED_ASSIGNED_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
-    + _SHARD_MISS_TAIL
-)
+),
+{cluster_assigned_cte("sampled")}{_SHARD_MISS_TAIL}"""
 
 
 def _shard_miss_frame(spark: SparkSession, emb: DataFrame) -> DataFrame:
@@ -523,48 +484,34 @@ def q_semantic_dedup_sharded_miss_audit_sampled(
 _ISM_NPROBE = 4
 _ISM_CELLS = 16
 
-ISM_AUDIT_SQL = f"""
-WITH RECURSIVE
-base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-kept AS (SELECT * FROM base WHERE vec_id % 2 = 0),
-batch AS (SELECT * FROM base WHERE vec_id % 2 = 1),
-cross_dup AS (
-  SELECT b.vec_id, MIN(k.vec_id) AS dup_of
-  FROM batch b JOIN kept k
-    ON ROUND(list_cosine_similarity(b.vec, k.vec), 6)
-       >= {EMBED_DUP_THRESHOLD}
-  GROUP BY b.vec_id
-),
-surv AS (
-  SELECT * FROM batch
-  WHERE vec_id NOT IN (SELECT vec_id FROM cross_dup)
-),
-intra AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM surv a JOIN surv b ON a.vec_id < b.vec_id
-  WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6)
-        >= {EMBED_DUP_THRESHOLD}
-),
-sym AS (SELECT id_a AS u, id_b AS v FROM intra
-        UNION ALL SELECT id_b, id_a FROM intra),
-reach AS (SELECT u, v FROM sym
-          UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-comp AS (SELECT u AS vec_id, LEAST(u, MIN(v)) AS label
-         FROM reach GROUP BY u),
-statuses AS (
-  SELECT b.vec_id,
-         CASE WHEN c.dup_of IS NOT NULL THEN 'cross_dup'
-              WHEN p.label IS NOT NULL AND p.label <> b.vec_id
-                THEN 'batch_dup'
-              ELSE 'kept' END AS status,
-         COALESCE(c.dup_of,
-                  CASE WHEN p.label <> b.vec_id THEN p.label END,
-                  -1) AS dup_of
-  FROM batch b
-  LEFT JOIN cross_dup c USING (vec_id)
-  LEFT JOIN comp p USING (vec_id)
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_batch,
+
+
+def _ism_chain_ctes(n_batches: int) -> str:
+    """WITH RECURSIVE list of the exact side's admission chain over
+    cosine edges: kept0 is the even vec_ids, batch k those ≡ 2k−1
+    (mod 2·n_batches), each round admits against every earlier kept id
+    (dedup.admission_chain_sql)."""
+    cos = f"ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= {EMBED_DUP_THRESHOLD}"
+    chain = _dedup.admission_chain_sql(
+        n_batches,
+        "SELECT vec_id FROM base WHERE vec_id % 2 = 0",
+        lambda k: f"SELECT * FROM base WHERE vec_id % {2 * n_batches} = {2 * k - 1}",
+        lambda k: f"""SELECT a.vec_id AS id_a, b.vec_id AS id_b
+  FROM batch{k} a JOIN base b
+    ON b.vec_id IN (SELECT vec_id FROM kept{k - 1}) AND {cos}""",
+        lambda k: f"""SELECT a.vec_id AS id_a, b.vec_id AS id_b
+  FROM batch{k} a JOIN batch{k} b ON a.vec_id < b.vec_id AND {cos}""",
+        id_col="vec_id",
+    )
+    return f"""WITH RECURSIVE
+base AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+{chain}
+"""
+
+
+# The exact side's seven per-status sums and the two audit booleans the
+# oracle expects TRUE, over one round's status relation.
+_STATUS_SUMS = """CAST(COUNT(*) AS BIGINT) AS n_batch,
        CAST(SUM(CASE WHEN status = 'cross_dup' THEN 1 ELSE 0 END)
             AS BIGINT) AS n_cross,
        CAST(SUM(CASE WHEN status = 'batch_dup' THEN 1 ELSE 0 END)
@@ -578,9 +525,9 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_batch,
        CAST(SUM(CASE WHEN status = 'kept' THEN vec_id ELSE 0 END)
             AS BIGINT) AS sum_kept_ids,
        TRUE AS flagged_subset_ok,
-       TRUE AS recall_ok
-FROM statuses
-"""
+       TRUE AS recall_ok"""
+
+ISM_AUDIT_SQL = _ism_chain_ctes(1) + f"SELECT {_STATUS_SUMS}\nFROM status1\n"
 
 
 def _status_audit(
@@ -675,87 +622,12 @@ _ISM_CHAIN_BATCHES = 3
 
 def _ism_chain_oracle_sql(n_batches: int = _ISM_CHAIN_BATCHES) -> str:
     """Unrolled K-batch replay of the ingest-time semantic-dedup CHAIN
-    (exact side): batch k admits against kept_{k-1} = the base kept
-    half plus every earlier batch's kept survivors — the cosine twin
-    of incremental_lsh_dedup_chain_oracle_sql's structure, built from
-    ISM_AUDIT_SQL's cross/surv/components CTEs repeated per batch with
-    a growing kept set. Loop CTEs are AS MATERIALIZED (the BPE-trainer
-    lesson: DuckDB re-inlines non-materialized CTEs per reference,
-    exploding the unrolled chain); the per-batch component CTEs are
-    plain recursive CTEs — one WITH RECURSIVE clause hosts all K."""
-    t = EMBED_DUP_THRESHOLD
-    mod = 2 * n_batches
-    parts = [
-        "base AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS vec"
-        " FROM embeddings)",
-        "kept_0 AS MATERIALIZED (SELECT * FROM base WHERE vec_id % 2 = 0)",
-    ]
-    selects = []
-    for k in range(1, n_batches + 1):
-        parts += [
-            f"b{k} AS MATERIALIZED (SELECT * FROM base"
-            f" WHERE vec_id % {mod} = {2 * k - 1})",
-            f"""cross_{k} AS MATERIALIZED (
-  SELECT b.vec_id, MIN(kv.vec_id) AS dup_of
-  FROM b{k} b JOIN kept_{k - 1} kv
-    ON ROUND(list_cosine_similarity(b.vec, kv.vec), 6) >= {t}
-  GROUP BY b.vec_id)""",
-            f"surv_{k} AS MATERIALIZED (SELECT * FROM b{k}"
-            f" WHERE vec_id NOT IN (SELECT vec_id FROM cross_{k}))",
-            f"""intra_{k} AS MATERIALIZED (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM surv_{k} a JOIN surv_{k} b ON a.vec_id < b.vec_id
-  WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= {t})""",
-            f"sym_{k} AS MATERIALIZED (SELECT id_a AS u, id_b AS v"
-            f" FROM intra_{k}"
-            f" UNION ALL SELECT id_b, id_a FROM intra_{k})",
-            f"reach_{k} AS (SELECT u, v FROM sym_{k}"
-            f" UNION SELECT r.u, s.v FROM reach_{k} r"
-            f" JOIN sym_{k} s ON r.v = s.u)",
-            f"comp_{k} AS MATERIALIZED (SELECT u AS vec_id,"
-            f" LEAST(u, MIN(v)) AS label FROM reach_{k} GROUP BY u)",
-            f"""statuses_{k} AS MATERIALIZED (
-  SELECT b.vec_id,
-         CASE WHEN c.dup_of IS NOT NULL THEN 'cross_dup'
-              WHEN p.label IS NOT NULL AND p.label <> b.vec_id
-                THEN 'batch_dup'
-              ELSE 'kept' END AS status,
-         COALESCE(c.dup_of,
-                  CASE WHEN p.label <> b.vec_id THEN p.label END,
-                  -1) AS dup_of
-  FROM b{k} b
-  LEFT JOIN cross_{k} c USING (vec_id)
-  LEFT JOIN comp_{k} p USING (vec_id))""",
-            f"""kept_{k} AS MATERIALIZED (
-  SELECT * FROM kept_{k - 1}
-  UNION ALL
-  SELECT b.vec_id, b.vec FROM surv_{k} b LEFT JOIN comp_{k} c USING (vec_id)
-  WHERE c.label IS NULL OR c.label = b.vec_id)""",
-        ]
-        selects.append(
-            f"""SELECT CAST({k} AS BIGINT) AS batch,
-       CAST(COUNT(*) AS BIGINT) AS n_batch,
-       CAST(SUM(CASE WHEN status = 'cross_dup' THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_cross,
-       CAST(SUM(CASE WHEN status = 'batch_dup' THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_batch_dup,
-       CAST(SUM(CASE WHEN status = 'kept' THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_kept,
-       CAST(SUM(CASE WHEN status = 'cross_dup' THEN dup_of ELSE 0 END)
-            AS BIGINT) AS sum_cross_dup_of,
-       CAST(SUM(CASE WHEN status = 'batch_dup' THEN dup_of ELSE 0 END)
-            AS BIGINT) AS sum_batch_dup_of,
-       CAST(SUM(CASE WHEN status = 'kept' THEN vec_id ELSE 0 END)
-            AS BIGINT) AS sum_kept_ids,
-       TRUE AS flagged_subset_ok,
-       TRUE AS recall_ok
-FROM statuses_{k}"""
-        )
-    return (
-        "WITH RECURSIVE\n"
-        + ",\n".join(parts)
-        + "\n"
-        + "\nUNION ALL\n".join(selects)
+    (exact side): batch k admits against the base kept half plus every
+    earlier batch's kept survivors — ISM_AUDIT_SQL's round repeated per
+    batch, one status-sums row per batch."""
+    return _ism_chain_ctes(n_batches) + "\nUNION ALL\n".join(
+        f"SELECT CAST({k} AS BIGINT) AS batch,\n       {_STATUS_SUMS}\nFROM status{k}"
+        for k in range(1, n_batches + 1)
     )
 
 

@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 from parallel_map_reduce_spark.functions.hashing import (
     hash64,
     hash64_sql,
-    universal_hash_sql,
-    universal_params,
 )
 from parallel_map_reduce_spark.functions.tokenize import (
     BPE_PRETOKEN_REGEX,
@@ -30,6 +28,7 @@ from parallel_map_reduce_spark.functions.tokenize import (
     SHINGLES_CTE_SQL,
     TOKENS_CTE_SQL,
     TOKENS_SQL,
+    shingles_ctes,
     token_array,
     token_count,
     tokens,
@@ -91,36 +90,18 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _minhash_sigs_cte() -> str:
-    """CTE chain ending in sigs(doc_id, h0..h{k-1}) — shared by the
-    signature query and the LSH-pair oracle."""
-    mins = ",\n       ".join(
-        f"MIN({universal_hash_sql('h', a, b)}) AS h{i}"
-        for i, (a, b) in enumerate(universal_params(NUM_MINHASHES))
-    )
-    return (
-        SHINGLES_CTE_SQL
-        + f""",
-hashed AS (SELECT doc_id, {hash64_sql('shingle', 0)} AS h FROM shingles),
-sigs AS (SELECT doc_id,
-       {mins}
-FROM hashed GROUP BY doc_id)"""
-    )
+# DuckDB twins of the MinHash signature relation and of the verified
+# near-dup edges under the exact and the LSH candidate sets, over the
+# `shingles` CTE (dedup.py's forms at this module's parameters).
+_SIGS_CTE = f"sigs AS ({dedup.minhash_signatures_sql(num_hashes=NUM_MINHASHES)})"
+_EXACT_EDGES = dedup.jaccard_edges_sql(JACCARD_THRESHOLD)
+_LSH_EDGES = dedup.lsh_edges_sql(num_hashes=NUM_MINHASHES, threshold=JACCARD_THRESHOLD)
 
 
-def _band_match_sql(bands: int = 4) -> str:
-    """ANY-band-equal predicate between sigs aliases a and b."""
-    rpb = NUM_MINHASHES // bands
-    ors = []
-    for b in range(bands):
-        conds = " AND ".join(
-            f"a.h{b * rpb + r} = b.h{b * rpb + r}" for r in range(rpb)
-        )
-        ors.append(f"({conds})")
-    return " OR ".join(ors)
-
-
-@register("minhash_signatures", _minhash_sigs_cte() + "\nSELECT * FROM sigs")
+@register(
+    "minhash_signatures",
+    SHINGLES_CTE_SQL + "\n" + dedup.minhash_signatures_sql(num_hashes=NUM_MINHASHES),
+)
 def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_signatures(
         load_table(spark, sf_dir, "documents"), num_hashes=NUM_MINHASHES
@@ -134,27 +115,7 @@ def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB reproduces the candidate set exactly — LSH is approximate vs
     # ground truth, but deterministic as a function, and determinism is
     # all an oracle needs.
-    _minhash_sigs_cte()
-    + f""",
-cand AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND ({_band_match_sql()})
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shingles a JOIN shingles b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT c.id_a, c.id_b,
-       ROUND(n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common), 4) AS jaccard
-FROM cand c
-JOIN common p ON c.id_a = p.id_a AND c.id_b = p.id_b
-JOIN sizes sa ON c.id_a = sa.doc_id
-JOIN sizes sb ON c.id_b = sb.doc_id
-WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {JACCARD_THRESHOLD}
-""",
+    f"{SHINGLES_CTE_SQL},\n{_SIGS_CTE}\n{_LSH_EDGES}",
 )
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_dedup_pairs(
@@ -169,25 +130,10 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "ngram_jaccard_pairs",
-    SHINGLES_CTE_SQL
-    + f""",
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shingles a JOIN shingles b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       ROUND(n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common), 4) AS jaccard
-FROM pairs
-JOIN sizes sa ON id_a = sa.doc_id
-JOIN sizes sb ON id_b = sb.doc_id
-WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {JACCARD_THRESHOLD}
-""",
-)
+_NGRAM_JACCARD_SQL = SHINGLES_CTE_SQL + "\n" + _EXACT_EDGES
+
+
+@register("ngram_jaccard_pairs", _NGRAM_JACCARD_SQL)
 def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), threshold=JACCARD_THRESHOLD
@@ -203,21 +149,8 @@ MAX_SHINGLE_DF = 5  # sf0.01's hottest shingle hits df=7, so the cap is live
     + f""",
 hot AS (SELECT shingle FROM shingles GROUP BY shingle HAVING COUNT(*) > {MAX_SHINGLE_DF}),
 capped AS (SELECT doc_id, shingle FROM shingles
-           WHERE shingle NOT IN (SELECT shingle FROM hot)),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM capped GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM capped a JOIN capped b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       ROUND(n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common), 4) AS jaccard
-FROM pairs
-JOIN sizes sa ON id_a = sa.doc_id
-JOIN sizes sb ON id_b = sb.doc_id
-WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {JACCARD_THRESHOLD}
-""",
+           WHERE shingle NOT IN (SELECT shingle FROM hot))
+{dedup.jaccard_edges_sql(JACCARD_THRESHOLD, shingles="capped")}""",
 )
 def q_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-tier exact jaccard: document-frequency-capped shingle index.
@@ -234,25 +167,7 @@ def q_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ngram_jaccard_pairs_prefix",
-    SHINGLES_CTE_SQL
-    + f""",
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shingles a JOIN shingles b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       ROUND(n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common), 4) AS jaccard
-FROM pairs
-JOIN sizes sa ON id_a = sa.doc_id
-JOIN sizes sb ON id_b = sb.doc_id
-WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {JACCARD_THRESHOLD}
-""",
-)
+@register("ngram_jaccard_pairs_prefix", _NGRAM_JACCARD_SQL)
 def q_jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact jaccard via prefix filtering (AllPairs, Bayardo et al.
     WWW'07): joins only each document's rarest ``n - ceil(t*n) + 1``
@@ -1452,74 +1367,23 @@ def q_pack_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Component-formation oracles, built from shared pieces so the exact and
-# MinHash-LSH edge-builder variants replay the same DAG and differ ONLY
-# in the `thr` (edge list) CTE — the same structure the training-batch
-# pipeline below uses.
-
-_COMP_PAIRS = """,
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shingles a JOIN shingles b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)"""
-
-_COMP_THR_EXACT = f""",
-thr AS (
-  SELECT id_a, id_b FROM pairs
-  JOIN sizes sa ON id_a = sa.doc_id
-  JOIN sizes sb ON id_b = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {JACCARD_THRESHOLD}
-)"""
-
-
-def _comp_thr_lsh() -> str:
-    """LSH edge-list CTE: banded signature match gates the exact verify —
-    deterministic (raw portable-hash band values), so fully oracled."""
-    mins = ",\n       ".join(
-        f"MIN({universal_hash_sql('h', a, b)}) AS h{i}"
-        for i, (a, b) in enumerate(universal_params(NUM_MINHASHES))
-    )
-    return f""",
-hashed AS (SELECT doc_id, {hash64_sql('shingle', 0)} AS h FROM shingles),
-sigs AS (SELECT doc_id,
-       {mins}
-FROM hashed GROUP BY doc_id),
-cand AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND ({_band_match_sql()})
-),
-thr AS (
-  SELECT p.id_a, p.id_b FROM pairs p
-  JOIN cand c ON p.id_a = c.id_a AND p.id_b = c.id_b
-  JOIN sizes sa ON p.id_a = sa.doc_id
-  JOIN sizes sb ON p.id_b = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= {JACCARD_THRESHOLD}
-)"""
-
-
-_COMP_GROUP_TAIL = """,
-sym AS (SELECT id_a AS u, id_b AS v FROM thr
-        UNION ALL SELECT id_b, id_a FROM thr),
-reach AS (SELECT u, v FROM sym
-          UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u)
-SELECT u AS doc_id, LEAST(u, MIN(v)) AS group_id FROM reach GROUP BY u
-"""
-
-_COMP_KEEP_TAIL = """,
-sym AS (SELECT id_a AS u, id_b AS v FROM thr
-        UNION ALL SELECT id_b, id_a FROM thr),
-reach AS (SELECT u, v FROM sym
-          UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS group_id FROM reach GROUP BY u)
+# Component-formation oracles: an edge list `thr` after some head CTEs,
+# its recursive components (dedup.components_sql), then a tail that
+# reads `comp` — either the final SELECT or more CTEs. The exact and
+# MinHash-LSH variants differ ONLY in `thr`.
+_EXACT_THR = f"thr AS ({_EXACT_EDGES})"
+_LSH_THR = f"{_SIGS_CTE},\nthr AS ({_LSH_EDGES})"
+_GROUP_TAIL = "\nSELECT doc_id, group_id FROM comp"
+_LOSERS = "(SELECT doc_id FROM comp WHERE doc_id <> group_id)"
+_KEEP_TAIL = f"""
 SELECT d.doc_id, d.lang, d.source, d.n_chars
 FROM documents d
-WHERE d.doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> group_id)
+WHERE d.doc_id NOT IN {_LOSERS}
 """
 
-_COMP_RECURSIVE_HEAD = SHINGLES_CTE_SQL.replace("WITH ", "WITH RECURSIVE ", 1)
+
+def _components_oracle(head: str, thr: str, tail: str) -> str:
+    return f"WITH RECURSIVE {head},\n{thr},\n{dedup.components_sql('thr')}{tail}"
 
 
 def _near_dup_edges(docs: DataFrame, edge_builder: str) -> DataFrame:
@@ -1569,7 +1433,7 @@ def _dedup_keep_corpus(
 
 @register(
     "dedup_group_assignment",
-    _COMP_RECURSIVE_HEAD + _COMP_PAIRS + _COMP_THR_EXACT + _COMP_GROUP_TAIL,
+    _components_oracle(shingles_ctes(), _EXACT_THR, _GROUP_TAIL),
 )
 def q_dedup_group_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup group formation: exact-Jaccard pairs -> connected
@@ -1584,7 +1448,7 @@ def q_dedup_group_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_group_assignment_lsh",
-    _COMP_RECURSIVE_HEAD + _COMP_PAIRS + _comp_thr_lsh() + _COMP_GROUP_TAIL,
+    _components_oracle(shingles_ctes(), _LSH_THR, _GROUP_TAIL),
 )
 def q_dedup_group_assignment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group formation with the scale-path edge builder: MinHash+LSH
@@ -1598,7 +1462,7 @@ def q_dedup_group_assignment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_keep_corpus",
-    _COMP_RECURSIVE_HEAD + _COMP_PAIRS + _COMP_THR_EXACT + _COMP_KEEP_TAIL,
+    _components_oracle(shingles_ctes(), _EXACT_THR, _KEEP_TAIL),
 )
 def q_dedup_keep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup pipeline's final answer: the corpus with near-dup
@@ -1612,7 +1476,7 @@ def q_dedup_keep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_keep_corpus_lsh",
-    _COMP_RECURSIVE_HEAD + _COMP_PAIRS + _comp_thr_lsh() + _COMP_KEEP_TAIL,
+    _components_oracle(shingles_ctes(), _LSH_THR, _KEEP_TAIL),
 )
 def q_dedup_keep_corpus_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kept-corpus with the MinHash-LSH edge builder — the 100 TB ship
@@ -1620,45 +1484,20 @@ def q_dedup_keep_corpus_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup_keep_corpus(spark, sf_dir, edge_builder="lsh")
 
 
-# The training-batch pipeline oracle, built from shared pieces so the
-# exact-Jaccard and MinHash-LSH edge-builder variants replay the same DAG
-# and differ ONLY in the `thr` (edge list) CTE.
-
-# The pipeline replays the component oracle's sizes/pairs/thr fragments
-# verbatim over a shingle CTE built from the exact-deduped `kept` set —
-# ONE definition of the edge-list SQL serves both surfaces, so a
+# The training-batch pipeline oracle: the component oracle's edge lists
+# over a shingle CTE built from the exact-deduped `kept` set, so a
 # threshold or banding tweak can never diverge the twins.
-_PIPE_HEAD = (
-    f"""
-WITH RECURSIVE kept AS (
+_PIPE_HEAD = f"""kept AS (
   SELECT d.* FROM documents d
   JOIN (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)) k
   USING (doc_id)
 ),
-toks AS (SELECT doc_id, {TOKENS_SQL} AS ws FROM kept),
-shingles AS (
-  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-  FROM toks CROSS JOIN UNNEST(generate_series(1, greatest(len(ws)-2, 0))) AS t(i)
-)"""
-    + _COMP_PAIRS
-)
+{shingles_ctes("kept")}"""
 
-_PIPE_EXACT_THR = _COMP_THR_EXACT
-
-_pipe_lsh_thr = _comp_thr_lsh
-
-
-_PIPE_TAIL = """,
-sym AS (SELECT id_a AS u, id_b AS v FROM thr
-        UNION ALL SELECT id_b, id_a FROM thr),
-reach AS (SELECT u, v FROM sym
-          UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-losers AS (
-  SELECT u AS doc_id FROM reach GROUP BY u HAVING u <> LEAST(u, MIN(v))
-),
+_PIPE_TAIL = f""",
 final_keep AS (
   SELECT t.doc_id, t.ws FROM toks t
-  WHERE t.doc_id NOT IN (SELECT doc_id FROM losers)
+  WHERE t.doc_id NOT IN {_LOSERS}
 ),
 chunks AS (
   SELECT doc_id, chunk_start,
@@ -1721,7 +1560,9 @@ def _training_batches(spark: SparkSession, sf_dir: str, use_lsh: bool) -> DataFr
     )
 
 
-@register("pipeline_training_batches", _PIPE_HEAD + _PIPE_EXACT_THR + _PIPE_TAIL)
+@register(
+    "pipeline_training_batches", _components_oracle(_PIPE_HEAD, _EXACT_THR, _PIPE_TAIL)
+)
 def q_pipeline_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WHOLE training-data prep DAG as one query — what a user of
     this engine actually ships: exact dedup (min-id survivor per md5) →
@@ -1741,7 +1582,8 @@ def q_pipeline_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "pipeline_training_batches_lsh", _PIPE_HEAD + _pipe_lsh_thr() + _PIPE_TAIL
+    "pipeline_training_batches_lsh",
+    _components_oracle(_PIPE_HEAD, _LSH_THR, _PIPE_TAIL),
 )
 def q_pipeline_training_batches_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME training-batch DAG with the scale-path edge builder:
@@ -2009,33 +1851,28 @@ def _semantic_dedup_keep(
     )
 
 
-_SEM_EXACT_HEAD = f"""
-WITH RECURSIVE base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-thr AS (
+_SEM_BASE = "base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings)"
+_SEM_THR = f"""thr AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM base a JOIN base b ON a.vec_id < b.vec_id
   WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= {EMBED_DUP_THRESHOLD}
 )"""
 
-# Aggregated keep-set tail for the ann audit: same recursive components
-# as _COMP_KEEP_TAIL, but the final SELECT emits the exact keep-set's
-# deterministic aggregates plus the TRUE audit booleans.
-_SEM_KEEP_AGG_TAIL = """,
-sym AS (SELECT id_a AS u, id_b AS v FROM thr
-        UNION ALL SELECT id_b, id_a FROM thr),
-reach AS (SELECT u, v FROM sym
-          UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS group_id FROM reach GROUP BY u)
+# The ann audit's tail: the exact keep-set's deterministic aggregates
+# plus the TRUE audit booleans.
+_SEM_KEEP_AGG_TAIL = f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_keep,
        CAST(SUM(d.doc_id) AS BIGINT) AS sum_exact_keep_ids,
        TRUE AS ann_superset_ok,
        TRUE AS ann_extra_frac_ok
 FROM documents d
-WHERE d.doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> group_id)
+WHERE d.doc_id NOT IN {_LOSERS}
 """
 
 
-@register("semantic_dedup_keep_corpus", _SEM_EXACT_HEAD + _COMP_KEEP_TAIL)
+@register(
+    "semantic_dedup_keep_corpus", _components_oracle(_SEM_BASE, _SEM_THR, _KEEP_TAIL)
+)
 def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: embedding-cosine near-dup pairs →
     connected components → keep the min-id representative of each
@@ -2047,7 +1884,10 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _semantic_dedup_keep(spark, sf_dir, edge_builder="exact")
 
 
-@register("semantic_dedup_keep_corpus_ann", _SEM_EXACT_HEAD + _SEM_KEEP_AGG_TAIL)
+@register(
+    "semantic_dedup_keep_corpus_ann",
+    _components_oracle(_SEM_BASE, _SEM_THR, _SEM_KEEP_AGG_TAIL),
+)
 def q_semantic_dedup_keep_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup with the scale-path edge builder — sign-pattern
     LSH buckets + per-bucket Gram-matrix cosine kernel (Σ|bucket|² work,
@@ -2824,30 +2664,36 @@ def q_line_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.line_dedup_stats(load_table(spark, sf_dir, "documents"))
 
 
-# Seed-centroid assignment CTE chain shared by BOTH clustering oracles:
-# embedding_cluster_assign hashes this assignment directly and
-# embedding_kmeans_refine builds its Lloyd iteration on top of the SAME
-# assignment — one definition so the seed rule / tie-break can't drift
-# between the two (the _KNN_EXACT_CTE discipline).
-_CLUSTER_ASSIGNED_CTE = """
-WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),
-seed_ids AS (SELECT label, MIN(vec_id) AS vec_id FROM base GROUP BY label),
-seeds AS (
+def cluster_assigned_cte(base: str = "embeddings", prefix: str = "") -> str:
+    """Seed-centroid assignment CTEs over the ``base`` embedding
+    relation, each name carrying ``prefix``, without the WITH keyword:
+    {prefix}base (vec_id, label, vec), the min-id seed per label, and
+    {prefix}assigned (vec_id, label, cluster, sim) — every vector's best
+    seed by rounded cosine, ties to the smaller cluster. Every oracle
+    that clusters builds on it, so the seed rule and tie-break cannot
+    drift between them (the _KNN_EXACT_CTE discipline)."""
+    p = prefix
+    return f"""{p}base AS (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM {base}),
+{p}seed_ids AS (SELECT label, MIN(vec_id) AS vec_id FROM {p}base GROUP BY label),
+{p}seeds AS (
   SELECT b.label AS cluster, b.vec AS seed_vec
-  FROM base b JOIN seed_ids s ON b.label = s.label AND b.vec_id = s.vec_id
+  FROM {p}base b JOIN {p}seed_ids s ON b.label = s.label AND b.vec_id = s.vec_id
 ),
-scored AS (
+{p}scored AS (
   SELECT b.vec_id, b.label, s.cluster,
          ROUND(list_cosine_similarity(b.vec, s.seed_vec), 6) AS sim
-  FROM base b CROSS JOIN seeds s
+  FROM {p}base b CROSS JOIN {p}seeds s
 ),
-assigned AS (
+{p}assigned AS (
   SELECT vec_id, label, cluster, sim FROM (
     SELECT *, row_number() OVER (
       PARTITION BY vec_id ORDER BY sim DESC, cluster ASC) AS rn
-    FROM scored
+    FROM {p}scored
   ) WHERE rn = 1
 )"""
+
+
+_CLUSTER_ASSIGNED_CTE = "\nWITH " + cluster_assigned_cte()
 
 _CLUSTER_ASSIGN_SQL = _CLUSTER_ASSIGNED_CTE + """
 SELECT cluster, COUNT(*) AS n_assigned,

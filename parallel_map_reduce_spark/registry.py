@@ -32,13 +32,9 @@ def register(name: str, sql: str | None = None):
 
 # The driver's correctness check covers the FIRST 50 registry entries per
 # round — exactly _WINDOW slots; _load_all() fails loud if this list
-# exceeds that or names a query that doesn't exist.  Round-13 rotation
-# (VERDICT r12 "Next round" #1, fill queue recomputed by
-# tools/window_plan.py --assume-next 13): queries NEW in round 13
-# first, then round-13 code-touched queries, then ALL 28 remaining
-# r8-latest rows (r8 row order) — after this round no query's latest
-# green predates r9. Names not listed keep registration order after
-# these.
+# exceeds that or names a query that doesn't exist. Names not listed keep
+# registration order after these.
+# Each listed row's code or oracle SQL changed since its last correctness check.
 _WINDOW = 50
 _PRIORITY: list[str] = [
     # 1) NEW in round 13 — first driver row this round
@@ -114,14 +110,13 @@ _PRIORITY: list[str] = [
     "pipeline_training_batches",
     "pipeline_training_batches_lsh",
     "semantic_dedup_keep_corpus",
-    # 2) remaining r8-latest rows (r8 row order) — the r8 freshness-debt
-    # paydown VERDICT r12 #1 prescribes, minus the fills displaced by
-    # 1c/1d (the deferred tail is journaled in PLANS.md).
-    "events_session_windows",
-    "tpch_q8_market_share",
-    "tpch_q22_dormant_customers",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q18_large_volume_customer",
+    # 2) oracle SQL rebuilt from dedup.py's near-duplicate forms, with no
+    # slot above.
+    "minhash_signatures",
+    "minhash_lsh_dedup_pairs",
+    "ngram_jaccard_pairs",
+    "ngram_jaccard_pairs_capped",
+    "ngram_jaccard_pairs_prefix",
 ]
 
 

@@ -137,6 +137,43 @@ def test_whitespace_class_is_spelled_only_in_tokenize():
     assert hits == []
 
 
+def test_near_duplicate_forms_are_spelled_only_in_dedup():
+    """The DuckDB forms of the near-duplicate decision are spelled once,
+    in operators/dedup.py: the recursive reach join, the MinHash MIN()
+    universal-hash projection, the band predicate and the admission
+    status CASE. Their defaults are the Spark operators' defaults."""
+    import inspect
+    import pathlib
+
+    import parallel_map_reduce_spark
+    from parallel_map_reduce_spark.operators import dedup
+
+    markers = ("ON r.v = s.u", "MIN({universal_hash_sql", "a.h{", "THEN 'cross_dup'")
+    pkg = pathlib.Path(parallel_map_reduce_spark.__file__).parent
+    home = pkg / "operators" / "dedup.py"
+    hits = [
+        f"{path.relative_to(pkg)}:{i}: {m}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != home
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        for m in markers
+        if m in line
+    ]
+    assert hits == []
+    assert [home.read_text().count(m) for m in markers] == [1, 1, 1, 1]
+
+    spark_defaults = inspect.signature(dedup.minhash_lsh_dedup_pairs).parameters
+    for form in (
+        dedup.minhash_signatures_sql,
+        dedup.lsh_candidates_sql,
+        dedup.jaccard_edges_sql,
+        dedup.lsh_edges_sql,
+    ):
+        for name, p in inspect.signature(form).parameters.items():
+            if name in ("num_hashes", "bands", "threshold"):
+                assert p.default == spark_defaults[name].default, (form, name)
+
+
 @st.composite
 def edge_lists(draw):
     n = draw(st.integers(min_value=2, max_value=24))
@@ -171,10 +208,16 @@ def _union_find_components(edges):
 @PROP_SETTINGS
 @given(edges=edge_lists())
 def test_connected_components_matches_union_find(spark, edges):
-    """The distributed fixpoint must agree with a sequential union-find
+    """The distributed fixpoint, and its DuckDB twin (the recursive CTE
+    of dedup.components_sql), must agree with a sequential union-find
     on arbitrary graphs — self-loops, parallel edges, multiple
     components, cycles."""
-    from parallel_map_reduce_spark.operators.dedup import connected_components
+    import duckdb
+
+    from parallel_map_reduce_spark.operators.dedup import (
+        components_sql,
+        connected_components,
+    )
 
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
     got = {r["u"]: r["label"] for r in connected_components(df).collect()}
@@ -182,6 +225,11 @@ def test_connected_components_matches_union_find(spark, edges):
     # min-of-component
     expected = _union_find_components(edges)
     assert got == expected
+    con = duckdb.connect()
+    con.execute("CREATE TABLE e (id_a BIGINT, id_b BIGINT)")
+    con.executemany("INSERT INTO e VALUES (?, ?)", edges)
+    sql = f"WITH RECURSIVE {components_sql('e')} SELECT doc_id, group_id FROM comp"
+    assert dict(con.execute(sql).fetchall()) == expected
 
 
 # --- curation-op properties over a word-level generator --------------------
