@@ -60,7 +60,16 @@ BPE_PRETOKEN_REGEX = f"'(?:s|d|m|t|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS}]+
 # DuckDB forms: the non-empty token list of ``text``, the (doc_id, ws)
 # token CTE over ``documents``, and the distinct word 3-gram shingle CTE.
 TOKENS_SQL = f"list_filter(regexp_split_to_array(text, '{TOKEN_SPLIT_REGEX}'), w -> w <> '')"
-TOKENS_CTE_SQL = f"WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ws FROM documents)"
+
+
+def tokens_cte_sql(carry: tuple[str, ...] = ()) -> str:
+    """``WITH toks`` (doc_id, *carry, ws) over ``documents``: the token
+    CTE, carrying the named ``documents`` columns beside the tokens."""
+    cols = ", ".join(("doc_id", *carry))
+    return f"WITH toks AS (SELECT {cols}, {TOKENS_SQL} AS ws FROM documents)"
+
+
+TOKENS_CTE_SQL = tokens_cte_sql()
 
 
 def shingles_ctes(source: str = "documents") -> str:

@@ -292,16 +292,20 @@ def incremental_lsh_dedup(
 
     Scale shape — the incremental property: kept-side band buckets join
     only against NEW-side buckets, so no kept×kept pair is ever
-    generated and per-ingest work scales with the batch, not the
-    corpus. Pass ``kept_signatures`` (the persisted signature table —
-    the Broder/Manku pipeline's durable artifact, written once when
-    each batch is admitted) and the kept corpus' TEXT is read only for
-    the verified-candidate semi-join — a point-lookup-sized subset —
-    never scanned; omitted, signatures are recomputed so the function
-    stays self-contained. Verification joins shingle sets computed ONLY
-    for docs appearing in some candidate pair (semi-join first), and
-    the within-batch component formation runs on batch-sized edges via
-    pointer-jumped min-label propagation.
+    generated and per-ingest jobs and shuffle bytes scale with the
+    batch, not the corpus. Pass ``kept_signatures`` (the persisted
+    signature table — the Broder/Manku pipeline's durable artifact,
+    written once when each batch is admitted) and nothing is re-signed;
+    omitted, signatures are recomputed so the function stays
+    self-contained. The job shape is one band join (the batch's buckets
+    broadcast against batch ∪ kept buckets, tagged by side), one
+    shingle-set frame for the ids in some candidate pair, one
+    verified-edge materialization, and batch-sized broadcast sides for
+    every later join. The kept buckets and the kept TEXT are scanned
+    but never shuffled: a broadcast semi-join on the candidate ids
+    lets only the matched rows leave the scan. The within-batch
+    component formation runs on batch-sized edges via pointer-jumped
+    min-label propagation.
 
     ``new_signatures`` (r13 optimization, guide §1.2): the caller may
     pass the batch's already-materialized signature table (MinHash is
@@ -324,11 +328,10 @@ def incremental_lsh_dedup(
         ).localCheckpoint(eager=True)
 
     def new_side() -> DataFrame:
-        # Eager either way (ADVICE r13): the new side feeds BOTH
-        # concurrently-submitted candidate jobs below plus the sets_new
-        # semi-join, and with return_new_signatures the caller appends
-        # it to a store — one tiny materialization job beats
-        # recomputing it per consumer.
+        # Eager either way (ADVICE r13): the new side feeds both sides
+        # of the band join below, and with return_new_signatures the
+        # caller appends it to a store — one tiny materialization job
+        # beats recomputing it per consumer.
         if new_signatures is None:
             return signed(new_docs)
         return new_signatures.join(
@@ -344,69 +347,79 @@ def incremental_lsh_dedup(
     )
     sig_kept = signed_kept[0] if signed_kept else kept_signatures
     bk_new = band_buckets(sig_new, id_col, num_hashes, bands)
-    bk_kept = band_buckets(sig_kept, id_col, num_hashes, bands)
     join_keys = ["band"] + [f"k{r}" for r in range(num_hashes // bands)]
 
-    # Cross candidates (new × kept only — never kept × kept) and
-    # within-batch candidates (new × new, ordered) share no inputs
-    # beyond the materialized signature tables — overlap them too.
-    cross_cand, intra_cand = _overlap(
-        lambda: (
-            bk_new.join(bk_kept.withColumnRenamed(id_col, "_kid"), join_keys)
-            .select(F.col(id_col).alias("id_n"), F.col("_kid").alias("id_k"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        ),
-        lambda: (
-            bk_new.join(bk_new.withColumnRenamed(id_col, "_rid"), join_keys)
-            .filter(F.col(id_col) < F.col("_rid"))
-            .select(F.col(id_col).alias("id_a"), F.col("_rid").alias("id_b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        ),
+    # One band join, tagged by side: the batch's buckets (broadcast)
+    # against the batch's and the kept corpus' buckets. A kept-side
+    # match is a cross candidate (new × kept only — never kept × kept),
+    # a new-side match with id_a < id_b a within-batch candidate. The
+    # kept buckets stream past the broadcast and never shuffle.
+    sides = bk_new.withColumn("_kept", F.lit(False)).unionByName(
+        band_buckets(sig_kept, id_col, num_hashes, bands).withColumn(
+            "_kept", F.lit(True)
+        )
+    )
+    cand = (
+        sides.withColumnRenamed(id_col, "id_b")
+        .join(F.broadcast(bk_new.withColumnRenamed(id_col, "id_a")), join_keys)
+        .filter(F.col("_kept") | (F.col("id_a") < F.col("id_b")))
+        .select("id_a", "id_b", "_kept")
+        .distinct()
+        .localCheckpoint(eager=True)
     )
 
-    # Shingle sets only for docs that appear in some candidate pair.
-    new_ids = (
-        cross_cand.select(F.col("id_n").alias(id_col))
-        .union(intra_cand.select(F.col("id_a").alias(id_col)))
-        .union(intra_cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    # One shingle-set frame for every id in some candidate: new ids
+    # match rows of new_docs, kept ids rows of kept_docs (ids are
+    # unique across the two). The id list is batch-sized, so it
+    # broadcasts (a semi-join needs no distinct) and only matched rows
+    # leave the scans. Checkpointed so both edge lookups below read one
+    # broadcast of it; eager=False folds its materialization into that
+    # broadcast's job.
+    cand_ids = cand.select(F.col("id_a").alias(id_col)).union(
+        cand.select(F.col("id_b").alias(id_col))
     )
-    sets_new = shingle_sets(
-        new_docs.join(new_ids, id_col, "left_semi"), text_col, id_col, shingle_n
-    ).localCheckpoint(eager=True)
-    sets_kept = shingle_sets(
-        kept_docs.join(
-            cross_cand.select(F.col("id_k").alias(id_col)).distinct(),
-            id_col,
-            "left_semi",
-        ),
+    texts = new_docs.select(id_col, text_col).unionByName(
+        kept_docs.select(id_col, text_col)
+    )
+    sets = shingle_sets(
+        texts.join(F.broadcast(cand_ids), id_col, "left_semi"),
         text_col,
         id_col,
         shingle_n,
+    ).localCheckpoint(eager=False)
+
+    # Every candidate verified in one pass; the tagged edges are the one
+    # materialization the status core reads.
+    sa, sb = sets.alias("sa"), sets.alias("sb")
+    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
+    union = F.size("sa.sh") + F.size("sb.sh") - inter
+    edges = (
+        cand.join(F.broadcast(sa), F.col("id_a") == F.col(f"sa.{id_col}"))
+        .join(F.broadcast(sb), F.col("id_b") == F.col(f"sb.{id_col}"))
+        .filter((inter / union) >= threshold)
+        .select("id_a", "id_b", "_kept")
+        .localCheckpoint(eager=True)
+    )
+    # Built once: both anti-joins below and the status join read it, and
+    # the first of them (the component pass's edge checkpoint)
+    # materializes it.
+    cross_dup = (
+        edges.filter(F.col("_kept"))
+        .groupBy(F.col("id_a").alias("id_n"))
+        .agg(F.min("id_b").alias("dup_of"))
+        .localCheckpoint(eager=False)
     )
 
-    def _verified(cands: DataFrame, a: str, b: str, sa: DataFrame, sb: DataFrame):
-        la = sa.select(F.col(id_col).alias(a), F.col("sh").alias("sh_a"))
-        lb = sb.select(F.col(id_col).alias(b), F.col("sh").alias("sh_b"))
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        return (
-            cands.join(la, a)
-            .join(lb, b)
-            .filter((inter / union) >= threshold)
-            .select(a, b)
-        )
-
-    cross = _verified(cross_cand, "id_n", "id_k", sets_new, sets_kept)
-    cross_dup = cross.groupBy("id_n").agg(F.min("id_k").alias("dup_of"))
-
     # Within-batch edges among docs that survived the cross pass.
-    intra = _verified(intra_cand, "id_a", "id_b", sets_new, sets_new)
-    intra_live = intra.join(
-        cross_dup.select(F.col("id_n").alias("id_a")), "id_a", "left_anti"
-    ).join(cross_dup.select(F.col("id_n").alias("id_b")), "id_b", "left_anti")
+    def dup_ids(col: str) -> DataFrame:
+        return F.broadcast(cross_dup.select(F.col("id_n").alias(col)))
+
+    intra_live = (
+        edges.filter(~F.col("_kept"))
+        .join(dup_ids("id_a"), "id_a", "left_anti")
+        .join(dup_ids("id_b"), "id_b", "left_anti")
+        .select("id_a", "id_b")
+    )
     result = _admission_statuses(new_docs, cross_dup, intra_live, id_col)
     if return_new_signatures:
         return result, sig_new
@@ -2788,7 +2801,7 @@ def retract_and_readmit(
     # place (anti-join invalidation + survivor append) — never rebuilt.
     surv1 = res1.filter(F.col("status") == "kept").select(id_col)
     kept2 = kept.join(F.broadcast(retracted), id_col, "left_anti").unionByName(
-        docs.join(surv1, id_col)
+        docs.join(F.broadcast(surv1), id_col)
     )
     sig_store2 = (
         sig_store.join(F.broadcast(retracted), id_col, "left_anti")

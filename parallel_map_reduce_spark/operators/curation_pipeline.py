@@ -505,8 +505,7 @@ sd_thr AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM sd_surv a JOIN sd_surv b
     ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6)
-        >= {EMBED_DUP_THRESHOLD}
+  WHERE {_dedup.cosine_edge_sql(EMBED_DUP_THRESHOLD)}
 ),
 {_dedup.components_sql("sd_thr", "_sd", "vec_id")},
 k4s AS MATERIALIZED (

@@ -883,7 +883,9 @@ def _admission_statuses(
     ``ids`` holds the batch ids, ``cross_dup`` (id_n, dup_of) each
     batch row's smallest matching kept id, and ``edges`` (id_a, id_b)
     the verified within-batch pairs among the cross survivors; each
-    tier builds its own. ``cross_dup`` wins over ``batch_dup`` (a
+    tier builds its own. Both status joins broadcast their batch-sized
+    side (``cross_dup`` and the components), so ``ids`` is never
+    shuffled. ``cross_dup`` wins over ``batch_dup`` (a
     non-minimal member of a within-batch component; dup_of = the
     component's smallest id, its survivor) over ``kept``. Survivors
     carry dup_of = -1, not NULL: a nullable BIGINT drifts to float64 +
@@ -892,11 +894,15 @@ def _admission_statuses(
     comps = connected_components(edges, "id_a", "id_b")
     return (
         ids.select(id_col)
-        .join(cross_dup.withColumnRenamed("id_n", id_col), id_col, "left")
         .join(
-            comps.select(
-                F.col("u").cast("long").alias(id_col),
-                F.col("label").alias("_comp"),
+            F.broadcast(cross_dup.withColumnRenamed("id_n", id_col)), id_col, "left"
+        )
+        .join(
+            F.broadcast(
+                comps.select(
+                    F.col("u").cast("long").alias(id_col),
+                    F.col("label").alias("_comp"),
+                )
             ),
             id_col,
             "left",
@@ -984,6 +990,19 @@ FROM ({common}) p
 JOIN {sizes} sa ON p.id_a = sa.doc_id
 JOIN {sizes} sb ON p.id_b = sb.doc_id
 WHERE {jac} >= {threshold}"""
+
+
+# The cosine of the ``vec`` columns of a pair of relations aliased a and
+# b, rounded to 6 places as the Spark cosine kernels round it before
+# they compare.
+PAIR_COSINE_SQL = "ROUND(list_cosine_similarity(a.vec, b.vec), 6)"
+
+
+def cosine_edge_sql(threshold: float) -> str:
+    """Predicate of the cosine tier's near-duplicate edge: the pair
+    (a, b) is an edge when its rounded cosine is at least
+    ``threshold``."""
+    return f"{PAIR_COSINE_SQL} >= {threshold}"
 
 
 def lsh_edges_sql(

@@ -201,7 +201,7 @@ thr AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM withvec a JOIN withvec b
     ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= {EMBED_DUP_THRESHOLD}
+  WHERE {_dedup.cosine_edge_sql(EMBED_DUP_THRESHOLD)}
 ),
 {_dedup.components_sql("thr", id_col="vec_id")},
 losers AS (SELECT vec_id FROM comp WHERE vec_id <> group_id)
@@ -272,8 +272,7 @@ _SHARD_MISS_TAIL = f""",
 exact_pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM base a JOIN base b ON a.vec_id < b.vec_id
-  WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6)
-        >= {EMBED_DUP_THRESHOLD}
+  WHERE {_dedup.cosine_edge_sql(EMBED_DUP_THRESHOLD)}
 ),
 shard_pairs AS (
   SELECT p.id_a, p.id_b FROM exact_pairs p
@@ -491,7 +490,7 @@ def _ism_chain_ctes(n_batches: int) -> str:
     cosine edges: kept0 is the even vec_ids, batch k those ≡ 2k−1
     (mod 2·n_batches), each round admits against every earlier kept id
     (dedup.admission_chain_sql)."""
-    cos = f"ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= {EMBED_DUP_THRESHOLD}"
+    cos = _dedup.cosine_edge_sql(EMBED_DUP_THRESHOLD)
     chain = _dedup.admission_chain_sql(
         n_batches,
         "SELECT vec_id FROM base WHERE vec_id % 2 = 0",

@@ -32,6 +32,7 @@ from parallel_map_reduce_spark.functions.tokenize import (
     token_array,
     token_count,
     tokens,
+    tokens_cte_sql,
 )
 from parallel_map_reduce_spark.operators import (
     curation_extras,
@@ -268,8 +269,12 @@ def q_simhash_block_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_KNN_EXACT_CTE = f"""
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+def _knn_exact_cte(base: str) -> str:
+    """The exact top-k CTE list over ``base``, the opening ``WITH base
+    AS (...),`` of the (vec_id, vec) relation the queries and their
+    neighbours are drawn from."""
+    return f"""
+{base}
 q AS (
   SELECT vec_id AS query_id, vec AS qvec FROM base
   WHERE vec_id IN ({', '.join(str(i) for i in KNN_QUERY_IDS)})
@@ -289,6 +294,11 @@ topk AS (
   )
   WHERE rn <= {KNN_K}
 )"""
+
+
+_KNN_EXACT_CTE = _knn_exact_cte(
+    "WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),"
+)
 
 # Audit shape shared by both ANN registrations (the HLL pattern,
 # VERDICT r3 #2): the exact twin's deterministic aggregates are
@@ -345,19 +355,7 @@ base AS (
      OR vec_id IN ({", ".join(str(i) for i in KNN_QUERY_IDS)})
 ),"""
 
-_KNN_EXACT_SAMPLED_CTE = _KNN_EXACT_CTE.replace(
-    "WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),",
-    _KNN_SAMPLED_BASE_CTE,
-    1,
-)
-if _KNN_EXACT_SAMPLED_CTE == _KNN_EXACT_CTE:
-    # Anchored on the shared CTE's literal text; if that text drifts,
-    # fail at import instead of shipping an unsampled "sampled" oracle
-    # (python -O strips asserts, so a real raise).
-    raise RuntimeError(
-        "_KNN_EXACT_CTE base-CTE text drifted; the sampled ANN audit "
-        "oracle replace no longer matches"
-    )
+_KNN_EXACT_SAMPLED_CTE = _knn_exact_cte(_KNN_SAMPLED_BASE_CTE)
 
 
 def knn_audit_sample(emb: DataFrame) -> DataFrame:
@@ -663,9 +661,9 @@ _EMB_EXACT_PAIRS_CTE = f"""
 WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
 exact_pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         ROUND(list_cosine_similarity(a.vec, b.vec), 6) AS cosine_sim
+         {dedup.PAIR_COSINE_SQL} AS cosine_sim
   FROM base a JOIN base b ON a.vec_id < b.vec_id
-  WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= {EMBED_DUP_THRESHOLD}
+  WHERE {dedup.cosine_edge_sql(EMBED_DUP_THRESHOLD)}
 )"""
 
 
@@ -775,10 +773,7 @@ def _stoplist_sql(lang: str) -> str:
 
 @register(
     "quality_scores",
-    TOKENS_CTE_SQL.replace(
-        "SELECT doc_id,",
-        "SELECT doc_id, text,",
-    )
+    tokens_cte_sql(("text",))
     + f"""
 SELECT doc_id,
   ROUND(alpha / safe_total, 4) AS alpha_ratio,
@@ -987,7 +982,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_fingerprints",
-    TOKENS_CTE_SQL.replace("SELECT doc_id,", "SELECT doc_id, text,")
+    tokens_cte_sql(("text",))
     + f"""
 SELECT doc_id,
        md5(text) AS content_md5,
@@ -1855,7 +1850,7 @@ _SEM_BASE = "base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings)
 _SEM_THR = f"""thr AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM base a JOIN base b ON a.vec_id < b.vec_id
-  WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= {EMBED_DUP_THRESHOLD}
+  WHERE {dedup.cosine_edge_sql(EMBED_DUP_THRESHOLD)}
 )"""
 
 # The ann audit's tail: the exact keep-set's deterministic aggregates
@@ -2458,7 +2453,7 @@ def q_domain_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_quantile_filter",
-    TOKENS_CTE_SQL.replace("SELECT doc_id,", "SELECT doc_id, lang, text,")
+    tokens_cte_sql(("lang", "text"))
     + """,
 s AS (
   SELECT doc_id, lang,

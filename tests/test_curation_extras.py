@@ -200,6 +200,73 @@ def test_incremental_dedup_planted(spark):
     }
 
 
+def _shuffle_write_records(spark, fn):
+    """Shuffle records written by the stages ``fn()`` runs, taken by
+    diffing the status store's stage list around the call."""
+    sc = spark.sparkContext
+    jsc, jvm = sc._jsc.sc(), sc._jvm
+
+    def stages():
+        jsc.listenerBus().waitUntilEmpty()
+        found = jsc.statusStore().stageList(
+            jvm.java.util.ArrayList(), False, False,
+            sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+        )
+        return [found.apply(i) for i in range(found.size())]
+
+    mark = max((s.stageId() for s in stages()), default=-1)
+    fn()
+    return sum(s.shuffleWriteRecords() for s in stages() if s.stageId() > mark)
+
+
+def test_incremental_dedup_never_shuffles_the_kept_corpus(spark, tmp_path):
+    """Admission against a stored signature table moves batch-sized data
+    only: the kept corpus' buckets and texts are scanned, but fewer
+    shuffle records are written than the corpus has documents."""
+    import random
+
+    from parallel_map_reduce_spark.operators.curation_extras import (
+        incremental_lsh_dedup,
+    )
+    from parallel_map_reduce_spark.operators.dedup import minhash_signatures
+
+    rng = random.Random(7)
+    n_kept = 400
+    texts = [
+        " ".join(f"w{rng.randrange(5000)}" for _ in range(40)) for _ in range(n_kept)
+    ]
+    path = str(tmp_path / "kept")
+    spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).write.parquet(path)
+    kept = spark.read.parquet(path)
+    sigs = minhash_signatures(kept).localCheckpoint()
+    fresh = " ".join(f"v{i}" for i in range(40))
+    new = spark.createDataFrame(
+        [
+            (1000, texts[3] + " extra"),  # near-copy of kept 3
+            (1001, texts[7] + " extra"),  # near-copy of kept 7
+            (1002, fresh),
+            (1003, fresh + " more"),  # near-copy of 1002
+        ],
+        "doc_id long, text string",
+    )
+    rows = []
+    records = _shuffle_write_records(
+        spark,
+        lambda: rows.extend(
+            incremental_lsh_dedup(new, kept, kept_signatures=sigs).collect()
+        ),
+    )
+    assert {r["doc_id"]: (r["status"], r["dup_of"]) for r in rows} == {
+        1000: ("cross_dup", 3),
+        1001: ("cross_dup", 7),
+        1002: ("kept", -1),
+        1003: ("batch_dup", 1002),
+    }
+    assert records < n_kept
+
+
 def test_incremental_dedup_real_corpus_invariants(spark, sf_dir):
     from parallel_map_reduce_spark.operators.curation_extras import (
         incremental_lsh_dedup,

@@ -140,15 +140,22 @@ def test_whitespace_class_is_spelled_only_in_tokenize():
 def test_near_duplicate_forms_are_spelled_only_in_dedup():
     """The DuckDB forms of the near-duplicate decision are spelled once,
     in operators/dedup.py: the recursive reach join, the MinHash MIN()
-    universal-hash projection, the band predicate and the admission
-    status CASE. Their defaults are the Spark operators' defaults."""
+    universal-hash projection, the band predicate, the admission
+    status CASE and the rounded pair cosine of the cosine edge. Their
+    defaults are the Spark operators' defaults."""
     import inspect
     import pathlib
 
     import parallel_map_reduce_spark
     from parallel_map_reduce_spark.operators import dedup
 
-    markers = ("ON r.v = s.u", "MIN({universal_hash_sql", "a.h{", "THEN 'cross_dup'")
+    markers = (
+        "ON r.v = s.u",
+        "MIN({universal_hash_sql",
+        "a.h{",
+        "THEN 'cross_dup'",
+        "list_cosine_similarity(a.vec, b.vec)",
+    )
     pkg = pathlib.Path(parallel_map_reduce_spark.__file__).parent
     home = pkg / "operators" / "dedup.py"
     hits = [
@@ -160,7 +167,7 @@ def test_near_duplicate_forms_are_spelled_only_in_dedup():
         if m in line
     ]
     assert hits == []
-    assert [home.read_text().count(m) for m in markers] == [1, 1, 1, 1]
+    assert [home.read_text().count(m) for m in markers] == [1] * len(markers)
 
     spark_defaults = inspect.signature(dedup.minhash_lsh_dedup_pairs).parameters
     for form in (
